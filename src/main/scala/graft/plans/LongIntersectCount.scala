@@ -36,8 +36,7 @@ object LongIntersectCount {
     val nb = b.numElements()
     if (na == 0 || nb == 0) return 0
     val (s, p, ns, np) = if (na <= nb) (a, b, na, nb) else (b, a, nb, na)
-    var cap = 8
-    while (cap < ns * 2) cap <<= 1
+    val cap     = tableCapacity(ns)
     val mask    = cap - 1
     val table   = new Array[Long](cap)
     val matched = new Array[Boolean](cap)
@@ -77,6 +76,22 @@ object LongIntersectCount {
       i += 1
     }
     cnt
+  }
+
+  /** Largest table: the biggest power-of-two array length the JVM allows. */
+  private final val MaxCapacity = 1 << 30
+
+  /** Table slots for `n` build-side values: the smallest power of two that
+    * is >= max(8, 2n), so the load factor stays <= 0.5. Sized in Long: `2n`
+    * wraps negative for n >= 2^30, which would leave an 8-slot table that
+    * the build loop then probes forever. Beyond the largest table this
+    * fails instead.
+    */
+  private[graft] def tableCapacity(n: Int): Int = {
+    val want = math.max(8L, 2L * n)
+    require(want <= MaxCapacity,
+      s"long_intersect_count: $n values exceed the ${MaxCapacity / 2}-value table limit")
+    (java.lang.Long.highestOneBit(want - 1) << 1).toInt
   }
 
   private def mix(v: Long): Int = {

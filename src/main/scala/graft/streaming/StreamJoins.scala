@@ -41,6 +41,7 @@ object StreamJoins {
     // unsatisfiable: the query would run healthy-looking and emit nothing
     // forever — refuse, as TopKStreams.sliding does for its numeric params
     require(withinSeconds > 0, s"withinSeconds must be positive, got $withinSeconds")
+    LocalCheckpointFileManager.install(left.sparkSession)
     val l = left.select(col("key"), col("ts").as("ts_a"), col("payload").as("payload_a"))
       .withWatermark("ts_a", watermarkDelay)
     val r = right.select(col("key").as("key_b"), col("ts").as("ts_b"),

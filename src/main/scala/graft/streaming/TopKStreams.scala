@@ -1,6 +1,7 @@
 package graft.streaming
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
+import java.nio.ByteBuffer
+import java.nio.charset.StandardCharsets.UTF_8
 
 import graft.core.{Rng, SketchCodec, SketchConfig, SlidingConfig, SlidingSketch}
 import graft.operators.TopK
@@ -42,7 +43,8 @@ object TopKStreams {
       watermarkDelay: String,
       cfg: SketchConfig,
       oversample: Int = 4
-  ): DataFrame =
+  ): DataFrame = {
+    LocalCheckpointFileManager.install(updates.sparkSession)
     updates
       .withWatermark("ts", watermarkDelay)
       .groupBy(window(col("ts"), windowDuration))
@@ -50,6 +52,7 @@ object TopKStreams {
       .select(col("window"), posexplode(col("topk")).as(Seq("rank0", "e")))
       .select(col("window"), (col("rank0") + 1).cast("long").as("rank"),
         col("e.item"), col("e.count"), col("e.fingerprint"))
+  }
 
   /** Session-window streaming top-K (beyond-reference, completes the window
     * triad): one top-K buffer per (key, activity session), sessions merge in
@@ -75,6 +78,7 @@ object TopKStreams {
       cfg: SketchConfig,
       oversample: Int = 4
   ): DataFrame = {
+    LocalCheckpointFileManager.install(updates.sparkSession)
     val bufCfg = cfg.copy(k = cfg.k * math.max(1, oversample))
     val cutoff = math.max(64, bufCfg.k * 4)
     updates
@@ -126,6 +130,7 @@ object TopKStreams {
       " ordering and stalls tick completion forever)")
     require(emitK > 0, s"emitK must be positive, got $emitK")
     val spark = updates.sparkSession
+    LocalCheckpointFileManager.install(spark)
     import spark.implicits._
 
     // Null rows are dropped AFTER the casts — a cast can itself produce null
@@ -352,37 +357,38 @@ object SlidingStreamState {
     )
 }
 
+/** Streaming state row: length-prefixed sliding sketch blob, clock tick,
+  * then the pending (tick, item, weight) updates.
+  */
 object SlidingStreamCodec {
   def encode(st: SlidingStreamState): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    val sk  = SketchCodec.encodeSliding(st.sketch)
-    out.writeInt(sk.length)
-    out.write(sk)
-    out.writeLong(st.clockTick)
-    out.writeInt(st.pending.size)
-    st.pending.foreach { case (t, i, w) =>
-      out.writeLong(t)
-      SketchCodec.writeItem(out, i) // shared length-prefixed UTF-8 framing
-      out.writeLong(w)
+    val sk    = SketchCodec.encodeSliding(st.sketch)
+    val items = st.pending.iterator.map(_._2.getBytes(UTF_8)).toArray
+    val out   = ByteBuffer.allocate(4 + sk.length + 8 + 4 + items.iterator.map(20 + _.length).sum)
+    SketchCodec.putBlock(out, sk)
+    out.putLong(st.clockTick).putInt(items.length)
+    st.pending.iterator.zip(items.iterator).foreach { case ((t, _, w), item) =>
+      out.putLong(t)
+      SketchCodec.putBlock(out, item) // shared length-prefixed UTF-8 framing
+      out.putLong(w)
     }
-    out.flush()
-    bos.toByteArray
+    out.array()
   }
 
-  def decode(bytes: Array[Byte]): SlidingStreamState = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val skLen = in.readInt()
-    val skBytes = new Array[Byte](skLen)
-    in.readFully(skBytes)
-    val sketch   = SketchCodec.decodeSliding(skBytes)
-    val clockTick = in.readLong()
-    val n        = in.readInt()
-    val pending  = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long)]
+  def decode(bytes: Array[Byte]): SlidingStreamState = SketchCodec.decoding {
+    val in        = ByteBuffer.wrap(bytes)
+    val sketch    = SketchCodec.decodeSliding(SketchCodec.readBlock(in))
+    val clockTick = in.getLong()
+    val n         = in.getInt()
+    // every entry is >= 20 bytes (tick 8 + item length 4 + weight 8): a
+    // count the remaining payload cannot hold is corruption, not data
+    require(n >= 0 && n.toLong * 20 <= in.remaining(),
+      s"corrupt sliding state: $n pending updates with ${in.remaining()} bytes remaining")
+    val pending = new scala.collection.mutable.ArrayBuffer[(Long, String, Long)](n)
     var i = 0
     while (i < n) {
-      val t = in.readLong()
-      pending += ((t, SketchCodec.readItem(in), in.readLong()))
+      val t = in.getLong()
+      pending += ((t, new String(SketchCodec.readBlock(in), UTF_8), in.getLong()))
       i += 1
     }
     new SlidingStreamState(sketch, clockTick, pending)

@@ -40,6 +40,62 @@ class RobustnessSpec extends AnyFunSuite {
     assert(back.clockTick == 1L)
   }
 
+  test("corrupt sliding stream state fails with IllegalArgumentException") {
+    import java.nio.ByteBuffer
+    import graft.streaming.{SlidingStreamCodec, SlidingStreamState}
+    val st = SlidingStreamState.fresh(
+      SlidingConfig.withDefaults(k = 2, windowSize = 2, width = 32, depth = 2), "k")
+    st.sketch.add("a", 3L)
+    st.pending += ((3L, "b", 9L))
+    st.clockTick = 1L
+    val good = SlidingStreamCodec.encode(st)
+    def patched(at: Int, v: Int): Array[Byte] = {
+      val b = good.clone(); ByteBuffer.wrap(b).putInt(at, v); b
+    }
+    val pendingAt = 4 + ByteBuffer.wrap(good).getInt(0) + 8 // after sketch + clock
+    val corrupt = Seq(
+      "negative sketch length"  -> patched(0, -1),
+      "oversized sketch length" -> patched(0, Int.MaxValue),
+      "negative pending count"  -> patched(pendingAt, -5),
+      "oversized pending count" -> patched(pendingAt, Int.MaxValue),
+      "negative item length"    -> patched(pendingAt + 4 + 8, -1),
+      "oversized item length"   -> patched(pendingAt + 4 + 8, 1 << 30)
+    ) ++ (0 until good.length).map(n => s"truncated to $n bytes" -> good.take(n))
+    corrupt.foreach { case (what, blob) =>
+      withClue(what)(intercept[IllegalArgumentException](SlidingStreamCodec.decode(blob)))
+    }
+    assert(SlidingStreamCodec.decode(good).pending.toSeq == Seq((3L, "b", 9L)))
+  }
+
+  test("corrupt sparse sliding cells fail with IllegalArgumentException") {
+    import java.nio.ByteBuffer
+    val s = new SlidingSketch(SlidingConfig.withDefaults(k = 2, windowSize = 3, width = 16, depth = 2))
+    Seq("a", "b", "c", "d").foreach(s.add(_, 2L))
+    val good = SketchCodec.encodeSliding(s)
+    def patched(at: Int, v: Int): Array[Byte] = {
+      val b = good.clone(); ByteBuffer.wrap(b).putInt(at, v); b
+    }
+    // header: magic, 5 config ints, decay, lutSize, seed, rng, cursor = 52 bytes;
+    // then the cell count and cells of (index, fingerprint, head, sum)
+    val firstCell = ByteBuffer.wrap(good).getInt(56)
+    // the ring section follows the cells: count, then (index, slot mask, slots)
+    val maskAt = 56 + ByteBuffer.wrap(good).getInt(52) * 20 + 4 + 4
+    val slotPastHist = good.clone()
+    slotPastHist(maskAt) = (slotPastHist(maskAt) | 0x08).toByte // hist = 3
+    val corrupt = Seq(
+      "ring slot past hist"   -> slotPastHist,
+      "cursor out of range"   -> patched(48, 32),
+      "negative cell count"   -> patched(52, -1),
+      "oversized cell count"  -> patched(52, 33),
+      "cell index out of range" -> patched(56, 32),
+      "repeated cell index"   -> patched(76, firstCell),
+      "ring head out of range" -> patched(64, 3)
+    ) ++ (0 until good.length).map(n => s"truncated to $n bytes" -> good.take(n))
+    corrupt.foreach { case (what, blob) =>
+      withClue(what)(intercept[IllegalArgumentException](SketchCodec.decodeSliding(blob)))
+    }
+  }
+
   test("huge weighted collision add completes via geometric skip with correct takeover mass") {
     // width=1, depth=1: every item collides in the single bucket
     val s = new Sketch(SketchConfig(k = 2, width = 1, depth = 1, decay = 0.9f,

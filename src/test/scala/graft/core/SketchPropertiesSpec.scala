@@ -112,6 +112,7 @@ class SketchPropertiesSpec extends AnyFunSuite {
       }
       val back = SketchCodec.decodeSliding(SketchCodec.encodeSliding(s))
       val same = back.ring.sameElements(s.ring) &&
+        back.fingerprints.sameElements(s.fingerprints) &&
         back.countsSum.sameElements(s.countsSum) &&
         back.first.sameElements(s.first) &&
         back.nextBucketToExpire == s.nextBucketToExpire &&

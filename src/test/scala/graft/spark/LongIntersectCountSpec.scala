@@ -61,4 +61,18 @@ class LongIntersectCountSpec extends AnyFunSuite {
       assert(r.getInt(0) == r.getInt(1), s"($a, $b): native=${r.getInt(0)} builtin=${r.getInt(1)}")
     }
   }
+
+  test("table sizing: smallest power of two >= max(8, 2n), no Int wrap for huge n") {
+    assert(LongIntersectCount.tableCapacity(0) == 8)
+    assert(LongIntersectCount.tableCapacity(4) == 8)
+    assert(LongIntersectCount.tableCapacity(5) == 16)
+    assert(LongIntersectCount.tableCapacity(8) == 16)
+    assert(LongIntersectCount.tableCapacity(1000) == 2048)
+    assert(LongIntersectCount.tableCapacity(1 << 29) == (1 << 30))
+    // 2n wraps an Int from n = 2^30 on: the old doubling loop then kept an
+    // 8-slot table and probed it forever; past the largest table it must fail
+    Seq((1 << 29) + 1, 1 << 30, Int.MaxValue).foreach { n =>
+      intercept[IllegalArgumentException](LongIntersectCount.tableCapacity(n))
+    }
+  }
 }

@@ -3,6 +3,8 @@ package graft.spark
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import graft.core.{Rng, SlidingConfig, SlidingSketch}
 import graft.streaming.TopKStreams
 import org.apache.spark.sql.functions._
@@ -108,6 +110,15 @@ class StreamResumeSpec extends AnyFunSuite {
     // assert the SPECIFIC shape, not mere non-emptiness (a metadata-only
     // parse regression must fail here)
     assert(lineageText.contains("logOffset"), s"offset log shape: $lineageText")
+
+    // the checkpoint went through LocalCheckpointFileManager, not Hadoop's
+    // checksummed local file system: none of its hidden ".<file>.crc"
+    // sidecars; state deltas keep Spark's own "<file>.crc" checksum files
+    val names = Files.walk(java.nio.file.Paths.get(ckpt)).iterator().asScala
+      .map(_.getFileName.toString).toList
+    val hadoopCrc = names.filter(n => n.startsWith(".") && n.endsWith(".crc"))
+    assert(hadoopCrc.isEmpty, s"Hadoop .crc files in the checkpoint: $hadoopCrc")
+    assert(names.exists(_.endsWith(".delta.crc")), s"no state checksum files: $names")
   }
 
   test("session stream resumes from checkpoint (adaptive buffers in state store)") {
