@@ -75,7 +75,7 @@ object SketchConfig {
   * Spark partial-aggregation monoid (the reference is strictly single-writer
   * and has no union; see SURVEY.md §2.1).
   */
-final class Sketch(val cfg: SketchConfig) extends Serializable {
+final class Sketch(val cfg: SketchConfig) {
   val width: Int  = cfg.width
   val depth: Int  = cfg.depth
   private val cells = width * depth
@@ -85,9 +85,6 @@ final class Sketch(val cfg: SketchConfig) extends Serializable {
   val counts: Array[Long]      = new Array[Long](cells)
   val heap: MinHeap            = new MinHeap(cfg.k)
   val rng: Rng                 = new Rng(cfg.seed)
-
-  /** JVM serialization travels as compact codec bytes (see SketchCodec). */
-  private def writeReplace(): AnyRef = new SerializedSketch(SketchCodec.encode(this))
 
   def incr(item: String): Boolean = add(item, 1L)
 

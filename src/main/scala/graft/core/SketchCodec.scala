@@ -1,6 +1,5 @@
 package graft.core
 
-import java.io.{DataInputStream, DataOutputStream}
 import java.nio.{BufferUnderflowException, ByteBuffer}
 import java.nio.charset.StandardCharsets.UTF_8
 
@@ -41,38 +40,21 @@ object SketchCodec {
     * length-prefixed writes go through these so the framing cannot drift
     * between codecs.
     */
-  private[graft] def writeBlock(out: DataOutputStream, bytes: Array[Byte]): Unit = {
-    out.writeInt(bytes.length)
-    out.write(bytes)
-  }
-
-  private[graft] def readBlock(in: DataInputStream): Array[Byte] = {
-    val len = in.readInt()
-    // validate against the stream's remaining bytes BEFORE allocating: a
-    // corrupted length prefix (state-store / shuffle blob damage) must fail
-    // as a catchable decode error, not a negative-size crash or a 2 GB
-    // allocation attempt that can OOM the executor. All decode paths wrap
-    // in-memory byte arrays, so available() is the exact remainder.
-    checkBlock(len, in.available())
-    val b = new Array[Byte](len)
-    in.readFully(b)
-    b
-  }
-
   private[graft] def putBlock(out: ByteBuffer, bytes: Array[Byte]): Unit =
     out.putInt(bytes.length).put(bytes)
 
   private[graft] def readBlock(in: ByteBuffer): Array[Byte] = {
     val len = in.getInt()
-    checkBlock(len, in.remaining())
+    // validate against the remaining bytes BEFORE allocating: a corrupted
+    // length prefix (state-store / shuffle blob damage) must fail as a
+    // catchable decode error, not a negative-size crash or a 2 GB
+    // allocation attempt that can OOM the executor
+    require(len >= 0 && len <= in.remaining(),
+      s"corrupt sketch payload: block length $len with ${in.remaining()} bytes remaining")
     val b = new Array[Byte](len)
     in.get(b)
     b
   }
-
-  private def checkBlock(len: Int, remaining: Int): Unit =
-    require(len >= 0 && len <= remaining,
-      s"corrupt sketch payload: block length $len with $remaining bytes remaining")
 
   /** Runs a ByteBuffer decode so that reading past the end of a truncated
     * payload fails with the same IllegalArgumentException as every other
@@ -297,7 +279,7 @@ object SketchCodec {
 
   // ---------- shared pieces ----------
 
-  // DataOutputStream.writeFloat's bits (canonical NaN), kept for byte parity
+  // DataOutput.writeFloat's bits (canonical NaN), kept for byte parity
   private def putFloat(out: ByteBuffer, f: Float): ByteBuffer =
     out.putInt(java.lang.Float.floatToIntBits(f))
 
@@ -340,15 +322,4 @@ object SketchCodec {
       i += 1
     }
   }
-}
-
-/** Java-serialization proxies so a Sketch travels through any JVM
-  * serialization boundary (Spark closures, javaSerialization encoders) as its
-  * compact codec bytes rather than object graphs.
-  */
-final class SerializedSketch(val bytes: Array[Byte]) extends Serializable {
-  def readResolve(): AnyRef = SketchCodec.decode(bytes)
-}
-final class SerializedSlidingSketch(val bytes: Array[Byte]) extends Serializable {
-  def readResolve(): AnyRef = SketchCodec.decodeSliding(bytes)
 }

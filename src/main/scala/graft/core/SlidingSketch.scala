@@ -81,7 +81,7 @@ object SlidingConfig {
   * reference's slice-of-structs, friendlier to JVM GC and fast to serialize
   * into a Spark state store.
   */
-final class SlidingSketch(val cfg: SlidingConfig) extends Serializable {
+final class SlidingSketch(val cfg: SlidingConfig) {
   val width: Int  = cfg.width
   val depth: Int  = cfg.depth
   val hist: Int   = cfg.bucketHistoryLength
@@ -130,10 +130,6 @@ final class SlidingSketch(val cfg: SlidingConfig) extends Serializable {
     }
     minIdx
   }
-
-  /** JVM serialization travels as compact codec bytes (see SketchCodec). */
-  private def writeReplace(): AnyRef =
-    new SerializedSlidingSketch(SketchCodec.encodeSliding(this))
 
   def tick(): Unit = ticks(1)
 

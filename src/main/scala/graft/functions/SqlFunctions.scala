@@ -83,7 +83,7 @@ object SqlFunctions {
   }
 
   /** Oversampling factor applied to partial candidate tracking (see
-    * TopKAggregator docs); emitted rows stay at k.
+    * `TopK.topkColumn`); emitted rows stay at k.
     */
   private val Oversample = 4
 

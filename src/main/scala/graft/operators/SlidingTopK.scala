@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.core.SketchConfig
-import graft.functions.MergeSketchesAggregator
+import graft.plans.TopKAggregates
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -64,8 +64,7 @@ object SlidingTopK {
     )
     val perTickSketch = updates
       .groupBy(col("tick"))
-      .agg(graft.plans.TopKAggregates.sketchBytes(
-        col("item"), col("weight"), cfg).as("sketch"))
+      .agg(TopKAggregates.sketchBytes(col("item"), col("weight"), cfg).as("sketch"))
 
     // Each source tick s contributes to output ticks [s, s+N-1]: explode the
     // contribution range (N-fold duplication of fixed-size blobs, LINEAR in
@@ -82,7 +81,6 @@ object SlidingTopK {
       .select(explode(sequence(col("tick"), col("tick") + (windowTicks - 1)))
         .as("out_tick"), col("sketch"))
       .join(broadcast(tickList), Seq("out_tick"), "left_semi")
-    val mergeUdaf = udaf(new MergeSketchesAggregator(cfg, k))
     // Pin the merge exchange's width: the union-merge stage decodes and
     // merges N sketch blobs per tick — compute-dense per byte on a few MB
     // of blobs, which AQE's byte-based coalescing otherwise bundles into
@@ -94,8 +92,9 @@ object SlidingTopK {
     window
       .repartition(mergeParts, col("out_tick"))
       .groupBy(col("out_tick"))
-      .agg(mergeUdaf(col("sketch")).as("topk"))
-      .select(col("out_tick").as("tick"), posexplode(col("topk")).as(Seq("rank0", "e")))
+      .agg(TopKAggregates.mergeBlobs(col("sketch")).as("m"))
+      .select(col("out_tick").as("tick"),
+        posexplode(TopKAggregates.sketchRows(col("m"), lit(k))).as(Seq("rank0", "e")))
       .select(
         col("tick"),
         (col("rank0") + 1).cast("long").as("rank"),

@@ -1,10 +1,9 @@
 package graft.operators
 
-import graft.core.{Sketch, SketchCodec, SketchConfig}
-import graft.functions.{TopKAggregator, TopKSketchBytesAggregator}
+import graft.core.SketchConfig
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** High-level top-K operators over DataFrames.
   *
@@ -17,16 +16,15 @@ import org.apache.spark.sql.functions._
   */
 object TopK {
 
-  /** The UDAF handle: `df.agg(TopK.udafFor(cfg)($"item", $"weight"))`. */
-  def udafFor(cfg: SketchConfig, oversample: Int = 4): UserDefinedFunction =
-    udaf(new TopKAggregator(cfg, oversample))
-
-  /** UDAF emitting the serialized sketch blob instead of rows. */
-  def sketchUdafFor(cfg: SketchConfig): UserDefinedFunction =
-    udaf(new TopKSketchBytesAggregator(cfg))
-
   /** The aggregation Column on the native (InternalRow-level) expression:
     * partials track k×oversample candidates, emitK = cfg.k rows come out.
+    *
+    * `oversample`: bucket counters are completely unaffected by heap
+    * capacity (the heap only selects what gets *reported*, reference:
+    * sketch.go:169), but a partition-local top-k heap can drop items that
+    * are top-k only globally; oversampling the candidate set in the partials
+    * recovers them. oversample = 1 reproduces the reference's exact
+    * single-writer candidate retention.
     */
   def topkColumn(item: Column, weight: Column, cfg: SketchConfig, oversample: Int): Column =
     graft.plans.TopKAggregates.itemsTopK(
@@ -172,26 +170,15 @@ object TopK {
         :+ col("e.count") :+ col("e.fingerprint")): _*)
   }
 
-  /** `Count(item)` over a serialized sketch blob (reference: sketch.go:90-111)
-    * as a scalar UDF: `topkCount(sketchCol, itemCol)`.
-    */
-  val countUdf: UserDefinedFunction =
-    udf((bytes: Array[Byte], item: String) =>
-      if (bytes == null || item == null) 0L else SketchCodec.decode(bytes).count(item))
-
-  /** Native-expression variant of [[countUdf]] (no Scala-UDF encoders). */
+  /** `Count(item)` over a serialized sketch blob (reference: sketch.go:90-111). */
   def countColumn(blob: Column, item: Column): Column =
-    org.apache.spark.sql.graftbridge.Bridge.column(
-      graft.plans.SketchCountExpr(
-        org.apache.spark.sql.graftbridge.Bridge.expression(blob),
-        org.apache.spark.sql.graftbridge.Bridge.expression(item)))
+    Bridge.column(graft.plans.SketchCountExpr(Bridge.expression(blob), Bridge.expression(item)))
 
   /** `Query(item)` membership over a serialized sketch blob
     * (reference: sketch.go:172-175).
     */
-  val queryUdf: UserDefinedFunction =
-    udf((bytes: Array[Byte], item: String) =>
-      if (bytes == null || item == null) false else SketchCodec.decode(bytes).query(item))
+  def queryColumn(blob: Column, item: Column): Column =
+    Bridge.column(graft.plans.SketchQueryExpr(Bridge.expression(blob), Bridge.expression(item)))
 
   /** Exact top-K oracle with the same output shape and ordering — the
     * differential-testing baseline (SURVEY.md §5.3). Spark picks

@@ -1,6 +1,6 @@
 package graft.plans
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
+import java.nio.ByteBuffer
 
 import graft.core.{Hashing, Sketch, SketchCodec, SketchConfig}
 import org.apache.spark.sql.Column
@@ -108,41 +108,46 @@ final class AdaptiveTopK(val cfg: SketchConfig, val cutoff: Int) {
 object AdaptiveTopK {
   /** Codec: tag byte (0 exact map / 1 sketch) + payload. Map payloads are a
     * few dozen bytes for small groups — the point of the adaptive buffer.
+    * Session state stores persist these bytes: the layout is pinned by
+    * golden fixtures in SketchCodecSpec.
     */
-  def encode(b: AdaptiveTopK): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
+  def encode(b: AdaptiveTopK): Array[Byte] =
     if (b.sketch != null) {
-      out.writeByte(1)
-      SketchCodec.writeBlock(out, SketchCodec.encode(b.sketch))
+      val sk  = SketchCodec.encode(b.sketch)
+      val out = ByteBuffer.allocate(1 + 4 + sk.length).put(1.toByte)
+      SketchCodec.putBlock(out, sk)
+      out.array()
     } else {
-      out.writeByte(0)
-      out.writeInt(b.map.size)
-      val it = b.map.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        SketchCodec.writeBlock(out, e.getKey.getBytes)
-        out.writeLong(e.getValue()(0))
+      var size = 1 + 4
+      b.map.forEach((item, _) => size += 4 + item.numBytes + 8)
+      val out = ByteBuffer.allocate(size).put(0.toByte).putInt(b.map.size)
+      b.map.forEach { (item, cell) =>
+        SketchCodec.putBlock(out, item.getBytes)
+        out.putLong(cell(0))
       }
+      out.array()
     }
-    out.flush()
-    bos.toByteArray
-  }
 
-  def decode(bytes: Array[Byte], cfg: SketchConfig, cutoff: Int): AdaptiveTopK = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
+  def decode(bytes: Array[Byte], cfg: SketchConfig, cutoff: Int): AdaptiveTopK = SketchCodec.decoding {
+    val in = ByteBuffer.wrap(bytes)
     val b  = new AdaptiveTopK(cfg, cutoff)
-    in.readByte() match {
+    in.get() match {
       case 1 =>
         b.sketch = SketchCodec.decode(SketchCodec.readBlock(in))
         b.map = null
       case 0 =>
-        val n = in.readInt()
+        val n = in.getInt()
+        // every entry is >= 12 bytes (item length 4 + count 8): a count the
+        // remaining payload cannot hold is corruption, not an empty group
+        require(n >= 0 && n.toLong * 12 <= in.remaining(),
+          s"corrupt adaptive buffer: $n entries with ${in.remaining()} bytes remaining")
         var i = 0
         while (i < n) {
-          b.map.put(UTF8String.fromBytes(SketchCodec.readBlock(in)), Array(in.readLong()))
+          b.map.put(UTF8String.fromBytes(SketchCodec.readBlock(in)), Array(in.getLong()))
           i += 1
         }
+      case tag =>
+        throw new IllegalArgumentException(s"corrupt adaptive buffer: unknown tag $tag")
     }
     b
   }

@@ -1,6 +1,8 @@
 package graft.plans
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
+import java.nio.ByteBuffer
+
+import scala.jdk.CollectionConverters._
 
 import graft.core.{Sketch, SketchCodec, SketchConfig}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -110,25 +112,26 @@ case class SlidingTopKAgg(
     new GenericArrayData(out.result().toArray)
   }
 
+  /** Tick count, then per tick (ascending): tick, length-prefixed sketch. */
   override def serialize(buffer: TickRing): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeInt(buffer.ticks.size)
-    buffer.ticks.forEach { (tick, sk) =>
-      out.writeLong(tick)
-      SketchCodec.writeBlock(out, SketchCodec.encode(sk))
-    }
-    out.flush()
-    bos.toByteArray
+    val blobs = buffer.ticks.asScala.toSeq.map { case (tick, sk) => (tick, SketchCodec.encode(sk)) }
+    val out   = ByteBuffer.allocate(4 + blobs.iterator.map(12 + _._2.length).sum)
+    out.putInt(blobs.size)
+    blobs.foreach { case (tick, blob) => SketchCodec.putBlock(out.putLong(tick), blob) }
+    out.array()
   }
 
-  override def deserialize(bytes: Array[Byte]): TickRing = {
-    val in   = new DataInputStream(new ByteArrayInputStream(bytes))
+  override def deserialize(bytes: Array[Byte]): TickRing = SketchCodec.decoding {
+    val in   = ByteBuffer.wrap(bytes)
     val ring = new TickRing(cfg)
-    val n    = in.readInt()
-    var i    = 0
+    val n    = in.getInt()
+    // every entry is >= 12 bytes (tick 8 + blob length 4): a count the
+    // remaining payload cannot hold is corruption, not an empty ring
+    require(n >= 0 && n.toLong * 12 <= in.remaining(),
+      s"corrupt sliding buffer: $n ticks with ${in.remaining()} bytes remaining")
+    var i = 0
     while (i < n) {
-      val tick = in.readLong()
+      val tick = in.getLong()
       ring.ticks.put(tick, SketchCodec.decode(SketchCodec.readBlock(in)))
       i += 1
     }

@@ -13,9 +13,9 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst aggregate expressions for the HeavyKeeper sketch — the
-  * engine's hot path. Unlike the `functions.udaf` route, these consume
-  * `InternalRow`s directly: no encoder deserialization, no per-row case
-  * classes, no String materialization off the cold path. The buffer is the
+  * engine's only sketch aggregates. They consume `InternalRow`s directly: no
+  * encoder deserialization, no per-row case classes, no String
+  * materialization off the cold path. The buffer is the
   * mutable Sketch object (ObjectHashAggregateExec keeps it as an object;
   * SketchCodec bytes only cross the shuffle).
   */
@@ -232,9 +232,7 @@ sealed abstract class ItemsSketchAggBase
   override def nullable: Boolean                            = false
 }
 
-/** Top-K over generic (item string, weight long) updates — InternalRow-native
-  * replacement for the udaf path.
-  */
+/** Top-K over generic (item string, weight long) updates. */
 case class ItemsTopKAgg(
     left: Expression,
     right: Expression,

@@ -96,6 +96,61 @@ class RobustnessSpec extends AnyFunSuite {
     }
   }
 
+  test("corrupt adaptive aggregate buffers fail with IllegalArgumentException") {
+    import java.nio.ByteBuffer
+    import graft.plans.AdaptiveTopK
+    val cfg = SketchConfig.withDefaults(k = 2, width = 16, depth = 2)
+    def buffer(cutoff: Int): Array[Byte] = {
+      val b = new AdaptiveTopK(cfg, cutoff)
+      Seq("a" -> 3L, "b" -> 2L, "c" -> 1L).foreach { case (i, w) => b.addString(i, w) }
+      AdaptiveTopK.encode(b)
+    }
+    val exact   = buffer(cutoff = 8) // tag 0, entry count at offset 1
+    val spilled = buffer(cutoff = 1) // tag 1, sketch block length at offset 1
+    def patched(good: Array[Byte], at: Int, v: Int): Array[Byte] = {
+      val b = good.clone(); ByteBuffer.wrap(b).putInt(at, v); b
+    }
+    val badTag = exact.clone(); badTag(0) = 7
+    val corrupt = Seq(
+      "negative entry count"  -> patched(exact, 1, -1),
+      "oversized entry count" -> patched(exact, 1, Int.MaxValue),
+      "negative sketch block" -> patched(spilled, 1, -1),
+      "oversized sketch block" -> patched(spilled, 1, Int.MaxValue),
+      "unknown tag"           -> badTag
+    ) ++ Seq(exact, spilled).flatMap(good =>
+      (0 until good.length).map(n => s"tag ${good(0)} truncated to $n bytes" -> good.take(n)))
+    corrupt.foreach { case (what, blob) =>
+      withClue(what)(intercept[IllegalArgumentException](AdaptiveTopK.decode(blob, cfg, 8)))
+    }
+    assert(AdaptiveTopK.decode(exact, cfg, 8).toArrayData(3).numElements() == 3)
+  }
+
+  test("corrupt topk_sliding ring buffers fail with IllegalArgumentException") {
+    import java.nio.ByteBuffer
+    import graft.plans.SlidingTopKAgg
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    val cfg = SketchConfig.withDefaults(k = 2, width = 16, depth = 2)
+    val agg = SlidingTopKAgg(Literal(0L), Literal("x"), Literal(1L), 2, 2, cfg)
+    val ring = agg.createAggregationBuffer()
+    ring.sketchFor(1L).add("a", 3L)
+    ring.sketchFor(2L).add("b", 2L)
+    val good = agg.serialize(ring)
+    def patched(at: Int, v: Int): Array[Byte] = {
+      val b = good.clone(); ByteBuffer.wrap(b).putInt(at, v); b
+    }
+    // tick count, then per tick: tick (8), sketch block length (4), sketch
+    val corrupt = Seq(
+      "negative tick count"   -> patched(0, -1),
+      "oversized tick count"  -> patched(0, Int.MaxValue),
+      "negative sketch block" -> patched(12, -1),
+      "bad sketch magic"      -> patched(16, 0x12345678)
+    ) ++ (0 until good.length).map(n => s"truncated to $n bytes" -> good.take(n))
+    corrupt.foreach { case (what, blob) =>
+      withClue(what)(intercept[IllegalArgumentException](agg.deserialize(blob)))
+    }
+    assert(agg.deserialize(good).ticks.size == 2)
+  }
+
   test("huge weighted collision add completes via geometric skip with correct takeover mass") {
     // width=1, depth=1: every item collides in the single bucket
     val s = new Sketch(SketchConfig(k = 2, width = 1, depth = 1, decay = 0.9f,

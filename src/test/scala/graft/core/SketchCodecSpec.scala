@@ -1,12 +1,18 @@
 package graft.core
 
+import graft.plans.{AdaptiveTopK, SlidingTopKAgg, TickRing}
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, Literal}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Layout pins for SketchCodec: the plain "TKP2" bytes of a small fixed
   * sketch, and a dense "TKS2" sliding blob as earlier releases wrote it into
   * streaming state stores. Both hex blobs were produced by the dense
   * stream-based codec that preceded the ByteBuffer one; they must keep
-  * decoding to the same state.
+  * decoding to the same state. The aggregate-buffer blobs (AdaptiveTopK,
+  * which `topk_stream_sessions` keeps in its state store, and the
+  * `topk_sliding` TickRing) were likewise written by the stream-based
+  * framing those buffers used before moving onto `putBlock`/`readBlock`.
   */
 class SketchCodecSpec extends AnyFunSuite {
 
@@ -74,6 +80,100 @@ class SketchCodecSpec extends AnyFunSuite {
     assert(got.rng.getState == want.rng.getState, "rng")
     assert(got.sortedSlice.toSeq == want.sortedSlice.toSeq, "heap")
     assert(got.heap.entries.toSet == want.heap.entries.toSet, "heap entries")
+  }
+
+  private val aggCfg = SketchConfig(k = 3, width = 8, depth = 2, decay = 0.9f, lutSize = 256, seed = 42L)
+
+  private def adaptiveFixture(cutoff: Int, updates: Seq[(String, Long)]): AdaptiveTopK = {
+    val b = new AdaptiveTopK(aggCfg, cutoff)
+    updates.foreach { case (i, w) => b.addString(i, w) }
+    b
+  }
+
+  /** 3 distinct items under a cutoff of 4: stays an exact map. */
+  private def exactMapFixture(): AdaptiveTopK =
+    adaptiveFixture(4, Seq("apple" -> 5L, "pear" -> 3L, "fig" -> 7L, "apple" -> 2L))
+
+  /** The third distinct item spills past a cutoff of 2 into the sketch. */
+  private def spilledFixture(): AdaptiveTopK =
+    adaptiveFixture(2, Seq("apple" -> 5L, "pear" -> 3L, "fig" -> 7L, "kiwi" -> 1L,
+      "é☃" -> 2L, "apple" -> 2L))
+
+  private val ringAgg = SlidingTopKAgg(Literal(0L), Literal("x"), Literal(1L),
+    windowTicks = 2, emitK = 3, cfg = aggCfg)
+
+  private def tickRingFixture(): TickRing = {
+    val ring = new TickRing(aggCfg)
+    Seq((3L, "apple", 5L), (3L, "pear", 3L), (-2L, "fig", 7L), (3L, "fig", 1L), (-2L, "kiwi", 2L))
+      .foreach { case (t, i, w) => ring.sketchFor(t).add(i, w) }
+    ring
+  }
+
+  private def rows(a: Any): Seq[Seq[Any]] =
+    a.asInstanceOf[GenericArrayData].array.toSeq.map(_.asInstanceOf[GenericInternalRow].values.toSeq)
+
+  private def itemCounts(a: Any): Seq[(String, Long)] =
+    rows(a).map(r => (r(0).toString, r(1).asInstanceOf[Long]))
+
+  private val goldenExactMap = unhex("""
+      0000000003000000056170706c6500000000000000070000000470656172000000000000000300000003666967000000
+      0000000007""")
+
+  private val goldenSpilled = unhex("""
+      010000012c544b50320000000300000008000000023f66666600000100000000000000002a78dde6e5fd29f07e000000
+      10d46c39480000000000000003378131060000000000000007000000000000000000000000acdd84fd00000000000000
+      01000000000000000000000000000000000000000000000000000000000000000000000000eab307d900000000000000
+      06378131060000000000000007eab307d90000000000000007000000000000000000000000d46c394800000000000000
+      01000000000000000000000000acdd84fd00000000000000010000000000000000000000000000000000000000000000
+      0000000003d46c39480000000470656172000000000000000337813106000000056170706c650000000000000007eab3
+      07d9000000036669670000000000000007""")
+
+  private val goldenTickRing = unhex("""
+      00000002fffffffffffffffe00000117544b50320000000300000008000000023f66666600000100000000000000002a
+      000000000000002a00000010000000000000000000000000000000000000000000000000000000000000000000000000
+      acdd84fd0000000000000002000000000000000000000000000000000000000000000000000000000000000000000000
+      eab307d90000000000000007000000000000000000000000eab307d90000000000000007000000000000000000000000
+      000000000000000000000000000000000000000000000000acdd84fd0000000000000002000000000000000000000000
+      00000000000000000000000000000002acdd84fd000000046b6977690000000000000002eab307d90000000366696700
+      0000000000000700000000000000030000012c544b50320000000300000008000000023f666666000001000000000000
+      00002a000000000000002a00000010d46c39480000000000000003378131060000000000000005000000000000000000
+      000000000000000000000000000000000000000000000000000000000000000000000000000000000000000000000000
+      000000eab307d90000000000000001378131060000000000000005eab307d90000000000000001000000000000000000
+      000000d46c39480000000000000003000000000000000000000000000000000000000000000000000000000000000000
+      00000000000000000000000000000000000003eab307d900000003666967000000000000000137813106000000056170
+      706c650000000000000005d46c394800000004706561720000000000000003""")
+
+  test("adaptive exact-map buffer layout is byte-identical to the golden blob") {
+    val b = exactMapFixture()
+    assert(b.sketch == null)
+    assert(hex(AdaptiveTopK.encode(b)) == hex(goldenExactMap))
+    val back = AdaptiveTopK.decode(goldenExactMap, aggCfg, cutoff = 4)
+    assert(back.sketch == null)
+    assert(rows(back.toArrayData(3)) == rows(b.toArrayData(3)))
+    assert(itemCounts(back.toArrayData(3)) == Seq("apple" -> 7L, "fig" -> 7L, "pear" -> 3L))
+    assert(AdaptiveTopK.encode(back).sameElements(goldenExactMap))
+  }
+
+  test("adaptive spilled buffer layout is byte-identical to the golden blob") {
+    val b = spilledFixture()
+    assert(b.sketch != null)
+    assert(hex(AdaptiveTopK.encode(b)) == hex(goldenSpilled))
+    val back = AdaptiveTopK.decode(goldenSpilled, aggCfg, cutoff = 2)
+    assert(back.sketch != null && back.map == null)
+    assert(rows(back.toArrayData(3)) == rows(b.toArrayData(3)))
+    assert(itemCounts(back.toArrayData(3)) == Seq("apple" -> 7L, "fig" -> 7L, "pear" -> 3L))
+    assert(AdaptiveTopK.encode(back).sameElements(goldenSpilled))
+  }
+
+  test("topk_sliding two-tick ring buffer layout is byte-identical to the golden blob") {
+    val ring = tickRingFixture()
+    assert(hex(ringAgg.serialize(ring)) == hex(goldenTickRing))
+    val back = ringAgg.deserialize(goldenTickRing)
+    assert(back.ticks.keySet.toArray.toSeq == Seq(-2L, 3L))
+    assert(rows(ringAgg.eval(back)) == rows(ringAgg.eval(ring)))
+    assert(rows(ringAgg.eval(back)).map(r => (r(0), r(2).toString, r(3))) == Seq(
+      (-2L, "fig", 7L), (-2L, "kiwi", 2L), (3L, "apple", 5L), (3L, "pear", 3L), (3L, "fig", 1L)))
+    assert(ringAgg.serialize(back).sameElements(goldenTickRing))
   }
 
   test("plain TKP2 layout is byte-identical to the golden blob") {

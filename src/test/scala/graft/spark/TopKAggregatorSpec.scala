@@ -1,8 +1,8 @@
 package graft.spark
 
 import graft.core.{Hashing, SketchConfig}
-import graft.functions.TokenUpdate
 import graft.operators.TopK
+import graft.plans.TopKAggregates
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,10 +11,8 @@ class TopKAggregatorSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("golden parity on a single partition (sliding/sketch_test.go:97-127 shape)") {
-    val updates = Seq(
-      TokenUpdate("X", 5L), TokenUpdate("Y", 3L), TokenUpdate("Z", 2L), TokenUpdate("Y", 1L)
-    )
-    val df  = spark.createDataset(updates).repartition(1).toDF()
+    val updates = Seq(("X", 5L), ("Y", 3L), ("Z", 2L), ("Y", 1L))
+    val df  = updates.toDF("item", "weight").repartition(1)
     val cfg = SketchConfig.withDefaults(3, width = 256, depth = 3)
     val out = TopK.aggregate(df, col("item"), col("weight"), cfg).collect()
     assert(out.map(r => (r.getString(0), r.getLong(1))).toSeq ==
@@ -28,9 +26,9 @@ class TopKAggregatorSpec extends AnyFunSuite {
     // must be exact and the top-K must equal the exact oracle including order.
     val rows = (0 until 6000).map { i =>
       val item = s"it${i % 60}"
-      TokenUpdate(item, (i % 7 + 1).toLong)
+      (item, (i % 7 + 1).toLong)
     }
-    val df  = spark.createDataset(rows).repartition(8).toDF()
+    val df  = rows.toDF("item", "weight").repartition(8)
     val cfg = SketchConfig.withDefaults(10, width = 1024, depth = 3)
     val ours  = TopK.aggregate(df, col("item"), col("weight"), cfg)
       .select("item", "count").collect().map(r => (r.getString(0), r.getLong(1))).toSeq
@@ -63,13 +61,13 @@ class TopKAggregatorSpec extends AnyFunSuite {
     val rng   = new java.util.Random(7)
     val items = (0 until n).map { _ =>
       val u = rng.nextDouble()
-      TokenUpdate(s"t${(2000 * u * u * u).toInt}", 1L)
+      (s"t${(2000 * u * u * u).toInt}", 1L)
     }
-    val df  = spark.createDataset(items).repartition(8).toDF()
+    val df  = items.toDF("item", "weight").repartition(8)
     val cfg = SketchConfig.withDefaults(20, width = 1024, depth = 3)
     val ours = TopK.aggregate(df, col("item"), col("weight"), cfg)
       .select("item", "count").collect().map(r => (r.getString(0), r.getLong(1))).toMap
-    val truth = items.groupBy(_.item).view.mapValues(_.map(_.weight.longValue).sum).toMap
+    val truth = items.groupBy(_._1).view.mapValues(_.map(_._2).sum).toMap
     val exactTop = truth.toSeq.sortBy { case (i, c) => (-c, i) }.take(20).map(_._1).toSet
     // under-estimation only
     ours.foreach { case (item, est) =>
@@ -81,8 +79,8 @@ class TopKAggregatorSpec extends AnyFunSuite {
   }
 
   test("udaf tolerates NULL items and NULL weights (null->no-op, matching SQL path)") {
-    // TokenUpdate.weight is boxed precisely so the encoder's AssertNotNull
-    // can't kill the query on a NULL weight row; reduce must skip it.
+    // a NULL weight row must not kill the query (no AssertNotNull on the
+    // input); the aggregate skips NULL items and adds a NULL weight as 0.
     val rows = Seq[(String, java.lang.Long)](
       ("X", 5L), (null, 3L), ("X", null), ("Y", 2L), ("Y", null)
     ).toDF("item", "weight")
@@ -154,16 +152,16 @@ class TopKAggregatorSpec extends AnyFunSuite {
     assert(flat.map(e => (e._1, e._2)) == exact)
   }
 
-  test("sketch-blob aggregator + count/query UDFs (Count/Query surface)") {
+  test("sketch-blob aggregate + count/query columns (Count/Query surface)") {
     val df  = Seq(("X", 5L), ("Y", 3L), ("Z", 2L)).toDF("item", "weight")
     val cfg = SketchConfig.withDefaults(2, width = 256, depth = 3)
-    val blob = df.agg(TopK.sketchUdafFor(cfg)(col("item"), col("weight")).as("sk"))
+    val blob = df.agg(TopKAggregates.sketchBytes(col("item"), col("weight"), cfg).as("sk"))
     val checked = blob.select(
-      TopK.countUdf(col("sk"), lit("X")).as("cx"),
-      TopK.countUdf(col("sk"), lit("Z")).as("cz"),
-      TopK.queryUdf(col("sk"), lit("X")).as("qx"),
-      TopK.queryUdf(col("sk"), lit("Z")).as("qz"),
-      TopK.queryUdf(col("sk"), lit("nope")).as("qn")
+      TopK.countColumn(col("sk"), lit("X")).as("cx"),
+      TopK.countColumn(col("sk"), lit("Z")).as("cz"),
+      TopK.queryColumn(col("sk"), lit("X")).as("qx"),
+      TopK.queryColumn(col("sk"), lit("Z")).as("qz"),
+      TopK.queryColumn(col("sk"), lit("nope")).as("qn")
     ).head()
     assert(checked.getLong(0) == 5L)
     assert(checked.getLong(1) == 2L) // estimate from buckets (evicted from k=2 heap)
@@ -222,6 +220,21 @@ class TopKAggregatorSpec extends AnyFunSuite {
       (4L, 1L, "Z", 3L), (4L, 2L, "Y", 1L),
       (5L, 1L, "X", 1L)
     ))
+  }
+
+  test("batch sliding merges per-tick blobs natively (no typed Aggregator buffer)") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, ScalaAggregator}
+    val out = graft.operators.SlidingTopK.perTick(
+      Seq((0L, "X", 3L), (1L, "Y", 2L)).toDF("tick", "item", "weight"),
+      col("tick"), col("item"), col("weight"), windowTicks = 2,
+      cfg = SketchConfig.withDefaults(4, width = 256, depth = 3), k = 2)
+    out.collect()
+    val aggs = new AdaptiveSparkPlanHelper {}.collect(out.queryExecution.executedPlan) {
+      case a: BaseAggregateExec => a.aggregateExpressions.map(_.aggregateFunction)
+    }.flatten
+    assert(aggs.exists(_.isInstanceOf[graft.plans.MergeSketchBlobsAgg]), aggs)
+    assert(!aggs.exists(_.isInstanceOf[ScalaAggregator[_, _, _]]), aggs)
   }
 
   test("codec round-trip preserves behavior") {
