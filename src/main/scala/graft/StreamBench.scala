@@ -146,9 +146,10 @@ object StreamBench {
         |parallel and scales with cores/executors independent of key count.
         |Peak state grows linearly with keys (bounded ring + pending buffer
         |per key, as designed). The per-key ring compute itself thread-scales
-        |at 0.93 (8->16, pure-JVM ThreadScale probe). The 256-key SHARED-vocab
-        |row is the adversarial shape (every key sees the full 50k item
-        |space, so per-group counts collapse); the per-key-vocab row is the
+        |at 0.93 (8->16, pure-JVM thread probe; see the BENCH.md footprint
+        |ladder). The 256-key SHARED-vocab row is the adversarial shape
+        |(every key sees the full 50k item space, so per-group counts
+        |collapse); the per-key-vocab row is the
         |multi-tenant production shape — the reduce column shows the
         |compaction the map-side partial reduce recovers there.
         |""".stripMargin

@@ -1,10 +1,8 @@
 package graft.core
 
-import java.nio.charset.StandardCharsets
-
-/** Logic shared verbatim by the plain and sliding sketches — factored out so
-  * a fix to the decay extension or the merge tie-break cannot drift between
-  * the two implementations.
+/** Rules shared by the plain and sliding sketches: item order, the decay
+  * probability, the collision-decay trials, the point estimate and the merge
+  * cell rule.
   */
 private[core] object SketchOps {
 
@@ -53,30 +51,65 @@ private[core] object SketchOps {
     }
   }
 
-  /** Merge's heap rebuild: union both candidate sets, re-estimate each item
-    * against the merged cells (`countAt` abstracts counts vs countsSum), and
-    * repopulate the heap with the top-k under (count desc, item asc).
+  /** Collision decay (reference: sketch.go:141-165): the trials of adding
+    * `increment` to a bucket another item holds at `count`. Each trial
+    * decrements the bucket with probability decay^count; once it reaches 0
+    * the remaining mass takes the bucket over. Above
+    * `Sketch.GeometricSkipThreshold` remaining trials, the run of failed
+    * trials before the next decrement is drawn in closed form (one draw per
+    * decrement) instead — a 2e9-weight add must not spin 2e9 times. Returns
+    * the bucket's new count (>= 1), or the takeover mass negated.
+    *
+    * Each draw depends only on the running count and the RNG, never on
+    * which sub-counter a decrement lands in, so a ring sketch may apply the
+    * decrements after the trials and match per-trial decrements exactly.
     */
-  def rebuildHeapFromUnion(heap: MinHeap, otherEntries: Array[TopKEntry], k: Int,
-                           depth: Int, width: Int, fingerprints: Array[Int],
-                           countAt: Int => Long): Unit = {
-    val candidates = (heap.entries ++ otherEntries).map(_.item).distinct
-    val estimated = candidates.map { it =>
-      val bytes = it.getBytes(StandardCharsets.UTF_8)
-      val fp    = Hashing.fingerprint(bytes)
-      var mx    = 0L
-      var row   = 0
-      while (row < depth) {
-        val idx = Hashing.bucketIndex(bytes, row, width)
-        val c   = countAt(idx)
-        if (fingerprints(idx) == fp && c > mx) mx = c
-        row += 1
+  def decayTrials(count: Long, increment: Long, decayLUT: Array[Float], rng: Rng): Long = {
+    var c         = count
+    var remaining = increment
+    while (remaining > 0L) {
+      val decay = decayAt(decayLUT, c)
+      if (remaining <= Sketch.GeometricSkipThreshold) {
+        // reference-exact per-trial draws (one draw per increment unit)
+        if (rng.nextFloat() < decay) {
+          c -= 1
+          if (c == 0L) return -remaining
+        }
+        remaining -= 1
+      } else {
+        val k = rng.geometricTrials(decay)
+        if (k > remaining) remaining = 0L // all remaining trials failed
+        else {
+          c -= 1
+          // the successful trial does not consume its unit, as above
+          if (c == 0L) return -(remaining - (k - 1))
+          remaining -= k
+        }
       }
-      TopKEntry(fp, it, mx)
     }
-    heap.reset()
-    estimated.filter(_.count > 0).sortWith(entryOrder).take(k).foreach { e =>
-      heap.update(e.item, e.fingerprint, e.count)
-    }
+    c
   }
+
+  /** Max count over the item's buckets whose fingerprint is `fp`, else 0
+    * (reference: sketch.go:90-111).
+    */
+  def estimate(bytes: Array[Byte], fp: Int, fingerprints: Array[Int], counts: Array[Long],
+               depth: Int, width: Int): Long = {
+    var mx  = 0L
+    var row = 0
+    while (row < depth) {
+      val idx = Hashing.bucketIndex(bytes, row, width)
+      if (fingerprints(idx) == fp && counts(idx) > mx) mx = counts(idx)
+      row += 1
+    }
+    mx
+  }
+
+  /** Merge's cell rule: whether the other side's cell (count `cb` > 0,
+    * fingerprint `fb`) replaces this one (`ca`, `fa`) when they hold
+    * different items — it wins an empty cell, a larger count, or a tie by
+    * the smaller unsigned fingerprint, so the merge is commutative.
+    */
+  @inline def otherWins(ca: Long, fa: Int, cb: Long, fb: Int): Boolean =
+    ca == 0L || cb > ca || (cb == ca && (fb.toLong & 0xffffffffL) < (fa.toLong & 0xffffffffL))
 }

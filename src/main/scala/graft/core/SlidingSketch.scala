@@ -16,9 +16,7 @@ final case class SlidingConfig(
     decay: Float = 0.9f,
     lutSize: Int = 256,
     seed: Long = 0x5eed_70c4L
-) extends Serializable {
-  require(k > 0, s"k must be positive, got $k")
-  require(width > 0 && depth > 0, s"invalid geometry ${width}x$depth")
+) extends Serializable with HeavyKeeperParams {
   require(windowSize > 0, s"windowSize must be positive, got $windowSize")
   require(bucketHistoryLength >= 1 && bucketHistoryLength <= windowSize,
     s"bucketHistoryLength $bucketHistoryLength outside [1, $windowSize]")
@@ -30,10 +28,6 @@ final case class SlidingConfig(
     s"geometry ${width}x$depth x hist=$bucketHistoryLength overflows the " +
       s"ring array (${width.toLong * depth * bucketHistoryLength} slots); " +
       "cap BucketHistoryLength (ring slots per bucket) below windowSize")
-  require(decay > 0f && decay <= 1f, s"decay must be in (0,1], got $decay")
-  // same guard as SketchConfig: lutSize <= 1 would divide by zero (or index
-  // negatively) in SketchOps.decayAt at the first collision decay
-  require(lutSize > 1, s"lutSize must be > 1, got $lutSize")
 }
 
 object SlidingConfig {
@@ -47,16 +41,14 @@ object SlidingConfig {
       lutSize: Int = 256,
       seed: Long = 0x5eed_70c4L
   ): SlidingConfig = {
-    val logK  = math.log(k.toDouble).toInt
-    val klogK = (k.toDouble * math.log(k.toDouble)).toInt
     // -1 = unset (defaults to windowSize); explicit values are clamped to
     // [1, windowSize] like the reference (sliding/sketch.go:68-73).
     val hist0 = if (bucketHistoryLength == -1) windowSize else bucketHistoryLength
     val hist  = math.min(math.max(hist0, 1), windowSize)
     SlidingConfig(
       k = k,
-      width = if (width > 0) width else math.max(256, klogK),
-      depth = if (depth > 0) depth else math.max(3, logK),
+      width = SketchConfig.defaultWidth(k, width),
+      depth = SketchConfig.defaultDepth(k, depth),
       windowSize = windowSize,
       bucketHistoryLength = hist,
       decay = decay,
@@ -81,20 +73,16 @@ object SlidingConfig {
   * reference's slice-of-structs, friendlier to JVM GC and fast to serialize
   * into a Spark state store.
   */
-final class SlidingSketch(val cfg: SlidingConfig) {
-  val width: Int  = cfg.width
-  val depth: Int  = cfg.depth
+final class SlidingSketch(val cfg: SlidingConfig) extends HeavyKeeper(cfg) {
   val hist: Int   = cfg.bucketHistoryLength
   private val m   = width * depth
 
-  val decayLUT: Array[Float]   = SketchConfig.decayLut(cfg.decay, cfg.lutSize)
-  val fingerprints: Array[Int] = new Array[Int](m)
   val first: Array[Int]        = new Array[Int](m)
   val countsSum: Array[Long]   = new Array[Long](m)
   val ring: Array[Long]        = new Array[Long](m * hist)
   var nextBucketToExpire: Int  = 0
-  val heap: MinHeap            = new MinHeap(cfg.k)
-  val rng: Rng                 = new Rng(cfg.seed)
+
+  protected def bucketCounts: Array[Long] = countsSum
 
   /** Expire the oldest ring slot of bucket `b` — the slot *behind* `first` —
     * and make it the new head (reference: sliding/bucket.go:14-28).
@@ -190,17 +178,9 @@ final class SlidingSketch(val cfg: SlidingConfig) {
     var i = 0
     while (i < heap.size) {
       if (heap.countAt(i) != 0L) {
-        val item  = heap.itemAt(i)
-        val fp    = heap.fingerprintAt(i)
-        val bytes = item.getBytes(StandardCharsets.UTF_8)
-        var mx    = 0L
-        var row   = 0
-        while (row < depth) {
-          val idx = Hashing.bucketIndex(bytes, row, width)
-          if (fingerprints(idx) == fp && countsSum(idx) > mx) mx = countsSum(idx)
-          row += 1
-        }
-        heap.setCountAt(i, mx)
+        val bytes = heap.itemAt(i).getBytes(StandardCharsets.UTF_8)
+        heap.setCountAt(i,
+          SketchOps.estimate(bytes, heap.fingerprintAt(i), fingerprints, countsSum, depth, width))
       }
       i += 1
     }
@@ -220,120 +200,43 @@ final class SlidingSketch(val cfg: SlidingConfig) {
     false
   }
 
-  def incr(item: String): Boolean = add(item, 1L)
-
-  def add(item: String, increment: Long): Boolean =
-    add(item, item.getBytes(StandardCharsets.UTF_8), increment)
-
-  /** Core sliding update (reference: sliding/sketch.go:190-247). */
-  def add(item: String, bytes: Array[Byte], increment: Long): Boolean = {
-    // uint32 increment domain, same guard as Sketch.addBytes: a negative
-    // weight would break the countsSum==0 empty-bucket sentinel and index
-    // the decay LUT negatively (streaming feeds user weights through here)
-    if (increment <= 0L) return false
-    val fingerprint = Hashing.fingerprint(bytes)
-    var maxSum      = 0L
-    var row         = 0
-    while (row < depth) {
-      val idx  = Hashing.bucketIndex(bytes, row, width)
-      val base = idx * hist
-      val sum  = countsSum(idx)
-      if (sum == 0L) { // empty bucket: claim it
-        // invariant: slots are non-negative and countsSum == Σ slots, so
-        // sum == 0 already implies every ring slot is 0 — no fill needed
-        // (decay only decrements non-zero minimum slots; tick zeroes the
-        // expiring slot; takeover happens exactly at sum == 0)
+  /** Core sliding bucket update (reference: sliding/sketch.go:190-247). */
+  protected def updateBucket(idx: Int, fingerprint: Int, increment: Long): Long = {
+    val base = idx * hist
+    val sum  = countsSum(idx)
+    if (sum == 0L) { // empty bucket: claim it
+      // invariant: slots are non-negative and countsSum == Σ slots, so
+      // sum == 0 already implies every ring slot is 0 — no fill needed
+      // (decay only decrements non-zero minimum slots; tick zeroes the
+      // expiring slot; takeover happens exactly at sum == 0)
+      fingerprints(idx) = fingerprint
+      ring(base + first(idx)) = increment
+      countsSum(idx) = increment
+      increment
+    } else if (fingerprints(idx) == fingerprint) { // own bucket
+      ring(base + first(idx)) += increment
+      val s = sum + increment
+      countsSum(idx) = s
+      s
+    } else { // collision: each decrement hits the minimum non-zero ring slot
+      val c = SketchOps.decayTrials(sum, increment, decayLUT, rng)
+      if (c > 0L) {
+        var d = sum - c
+        while (d > 0L) { ring(base + findNonzeroMinimumSlot(idx)) -= 1; d -= 1 }
+        countsSum(idx) = c
+        0L
+      } else {
+        // takeover: the decrements emptied every slot; the reference writes
+        // the remaining mass at slot 0 (sliding/sketch.go:236), not at
+        // `first` — ported faithfully
+        java.util.Arrays.fill(ring, base, base + hist, 0L)
         fingerprints(idx) = fingerprint
-        ring(base + first(idx)) = increment
-        countsSum(idx) = increment
-        if (increment > maxSum) maxSum = increment
-      } else if (fingerprints(idx) == fingerprint) { // own bucket
-        ring(base + first(idx)) += increment
-        val s = sum + increment
-        countsSum(idx) = s
-        if (s > maxSum) maxSum = s
-      } else { // collision: decay the minimum non-zero ring slot
-        // LOCKSTEP with Sketch.updateBucket's collision branch: same trial
-        // loop shape (threshold check, geometricTrials bookkeeping,
-        // k > incrementRemaining early-out, takeover remainder), different
-        // decrement/takeover target (ring min-slot here, scalar count
-        // there). Any fix to either loop MUST be applied to both.
-        var s                  = sum
-        var incrementRemaining = increment
-        var break              = false
-        while (incrementRemaining > 0 && !break) {
-          val decay = decayAt(s)
-          if (incrementRemaining <= Sketch.GeometricSkipThreshold) {
-            // reference-exact per-trial draws
-            if (rng.nextFloat() < decay) {
-              val slot = findNonzeroMinimumSlot(idx)
-              ring(base + slot) -= 1
-              s -= 1
-              if (s == 0L) {
-                // takeover: all slots are zero; the reference writes the
-                // remaining mass at slot 0 (sliding/sketch.go:236), not at
-                // `first` — ported faithfully.
-                fingerprints(idx) = fingerprint
-                s = incrementRemaining
-                ring(base) = incrementRemaining
-                if (s > maxSum) maxSum = s
-                break = true
-              }
-            }
-            if (!break) incrementRemaining -= 1
-          } else {
-            // huge weighted adds: closed-form geometric skip (see
-            // Sketch.GeometricSkipThreshold) — one draw per decrement
-            val k = rng.geometricTrials(decay)
-            if (k > incrementRemaining) {
-              incrementRemaining = 0L
-            } else {
-              val slot = findNonzeroMinimumSlot(idx)
-              ring(base + slot) -= 1
-              s -= 1
-              if (s == 0L) {
-                fingerprints(idx) = fingerprint
-                s = incrementRemaining - (k - 1)
-                ring(base) = s
-                if (s > maxSum) maxSum = s
-                break = true
-              } else {
-                incrementRemaining -= k
-              }
-            }
-          }
-        }
-        countsSum(idx) = s
+        ring(base) = -c
+        countsSum(idx) = -c
+        -c
       }
-      row += 1
     }
-    heap.update(item, fingerprint, maxSum)
   }
-
-  @inline private def decayAt(count: Long): Float =
-    SketchOps.decayAt(decayLUT, count)
-
-  /** Point estimate over the window (reference: sliding/sketch.go:131-152). */
-  def count(item: String): Long = {
-    val tracked = heap.countOf(item)
-    if (tracked >= 0) return tracked
-    val bytes = item.getBytes(StandardCharsets.UTF_8)
-    val fp    = Hashing.fingerprint(bytes)
-    var mx    = 0L
-    var row   = 0
-    while (row < depth) {
-      val idx = Hashing.bucketIndex(bytes, row, width)
-      if (fingerprints(idx) == fp && countsSum(idx) > mx) mx = countsSum(idx)
-      row += 1
-    }
-    mx
-  }
-
-  def query(item: String): Boolean = heap.contains(item)
-
-  def sortedSlice: Array[TopKEntry] = heap.sorted
-
-  def iterEntries: Array[TopKEntry] = heap.entries.filter(_.count > 0)
 
   def reset(): Unit = {
     java.util.Arrays.fill(fingerprints, 0)
@@ -354,32 +257,19 @@ final class SlidingSketch(val cfg: SlidingConfig) {
     * aggregation, where ticks never fire mid-aggregation).
     */
   def merge(other: SlidingSketch): SlidingSketch = {
-    require(other.width == width && other.depth == depth && other.hist == hist,
-      "sliding sketch geometry mismatch")
+    require(other.hist == hist, "sliding sketch geometry mismatch")
     // windowSize sets the tick-ageing cadence (ticks(n) ages n·hist·m/N
     // buckets): two sketches with different N cannot have observed the same
     // tick schedule, so a silent union would mix rings aged at different
     // rates — fail fast like any other geometry mismatch
     require(other.cfg.windowSize == cfg.windowSize,
       s"sliding window size mismatch: ${cfg.windowSize} vs ${other.cfg.windowSize}")
-    // same rationale as Sketch.merge: k fixes the union heap's capacity,
-    // decay/seed steer collision paths — a mismatch makes results depend
-    // on nondeterministic merge direction instead of failing fast
-    require(other.cfg.k == cfg.k && other.cfg.decay == cfg.decay &&
-      other.cfg.seed == cfg.seed && other.cfg.lutSize == cfg.lutSize,
-      s"sliding sketch config mismatch: k=${cfg.k}/${other.cfg.k} " +
-        s"decay=${cfg.decay}/${other.cfg.decay} seed=${cfg.seed}/${other.cfg.seed} " +
-        s"lutSize=${cfg.lutSize}/${other.cfg.lutSize}")
+    requireMergeable(other, "sliding sketch")
     var b = 0
     while (b < m) {
       val ca = countsSum(b); val cb = other.countsSum(b)
       if (cb != 0L) {
-        if (ca == 0L) {
-          fingerprints(b) = other.fingerprints(b)
-          first(b) = other.first(b)
-          countsSum(b) = cb
-          System.arraycopy(other.ring, b * hist, ring, b * hist, hist)
-        } else if (fingerprints(b) == other.fingerprints(b)) {
+        if (ca != 0L && fingerprints(b) == other.fingerprints(b)) {
           // same flow: add slot-wise, aligned relative to each ring's head
           var s = 0
           while (s < hist) {
@@ -388,8 +278,7 @@ final class SlidingSketch(val cfg: SlidingConfig) {
             s += 1
           }
           countsSum(b) = ca + cb
-        } else if (cb > ca || (cb == ca &&
-            (other.fingerprints(b).toLong & 0xffffffffL) < (fingerprints(b).toLong & 0xffffffffL))) {
+        } else if (SketchOps.otherWins(ca, fingerprints(b), cb, other.fingerprints(b))) {
           fingerprints(b) = other.fingerprints(b)
           first(b) = other.first(b)
           countsSum(b) = cb
@@ -398,8 +287,7 @@ final class SlidingSketch(val cfg: SlidingConfig) {
       }
       b += 1
     }
-    SketchOps.rebuildHeapFromUnion(heap, other.heap.entries, cfg.k,
-      depth, width, fingerprints, countsSum(_))
+    rebuildHeapFromUnion(other)
     this
   }
 }

@@ -2,6 +2,8 @@ package graft.core
 
 import java.nio.charset.StandardCharsets
 
+import org.apache.spark.unsafe.Platform
+
 /** Seeded XXH32 (32-bit xxHash), implemented from the published algorithm
   * specification (github.com/Cyan4973/xxHash doc/xxhash_spec.md).
   *
@@ -19,49 +21,23 @@ object XxHash32 {
   private final val P4 = 668265263
   private final val P5 = 374761393
 
-  @inline private def readLE(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) | ((b(i + 2) & 0xff) << 16) | ((b(i + 3) & 0xff) << 24)
+  // Platform.getInt reads in NATIVE byte order; XXH32 reads little-endian, so
+  // byte-swap on big-endian JVMs
+  private final val BigEndian =
+    java.nio.ByteOrder.nativeOrder() == java.nio.ByteOrder.BIG_ENDIAN
+
+  @inline private def readLE(base: AnyRef, i: Long): Int = {
+    val v = Platform.getInt(base, i)
+    if (BigEndian) Integer.reverseBytes(v) else v
+  }
 
   /** XXH32 of `len` bytes of `bytes` starting at `off`, with the given seed.
     * Returns the raw 32-bit hash as an Int (interpret as unsigned).
     */
   def hash(bytes: Array[Byte], off: Int, len: Int, seed: Int): Int = {
-    val end = off + len
-    var i   = off
-    var h: Int = 0
-    if (len >= 16) {
-      val limit = end - 16
-      var v1 = seed + P1 + P2
-      var v2 = seed + P2
-      var v3 = seed
-      var v4 = seed - P1
-      while (i <= limit) {
-        v1 = Integer.rotateLeft(v1 + readLE(bytes, i) * P2, 13) * P1
-        v2 = Integer.rotateLeft(v2 + readLE(bytes, i + 4) * P2, 13) * P1
-        v3 = Integer.rotateLeft(v3 + readLE(bytes, i + 8) * P2, 13) * P1
-        v4 = Integer.rotateLeft(v4 + readLE(bytes, i + 12) * P2, 13) * P1
-        i += 16
-      }
-      h = Integer.rotateLeft(v1, 1) + Integer.rotateLeft(v2, 7) +
-        Integer.rotateLeft(v3, 12) + Integer.rotateLeft(v4, 18)
-    } else {
-      h = seed + P5
-    }
-    h += len
-    while (i + 4 <= end) {
-      h = Integer.rotateLeft(h + readLE(bytes, i) * P3, 17) * P4
-      i += 4
-    }
-    while (i < end) {
-      h = Integer.rotateLeft(h + (bytes(i) & 0xff) * P5, 11) * P1
-      i += 1
-    }
-    h ^= h >>> 15
-    h *= P2
-    h ^= h >>> 13
-    h *= P3
-    h ^= h >>> 16
-    h
+    // hashUnsafe's Platform reads are unchecked: keep the array bounds check
+    java.util.Objects.checkFromIndexSize(off, len, bytes.length)
+    hashUnsafe(bytes, Platform.BYTE_ARRAY_OFFSET + off, len, seed)
   }
 
   def hash(bytes: Array[Byte], seed: Int): Int = hash(bytes, 0, bytes.length, seed)
@@ -69,23 +45,12 @@ object XxHash32 {
   def hashString(s: String, seed: Int): Int =
     hash(s.getBytes(StandardCharsets.UTF_8), seed)
 
-  /** Off-heap / any-base variant (Spark `Platform` unaligned reads): hashes
-    * UTF8String payloads in place, no per-row byte-array copy. Same result
-    * as `hash` for the same bytes (little-endian reads on both paths).
+  /** XXH32 of `len` bytes at `offset` of any memory base (Spark `Platform`
+    * addressing: a byte array at `BYTE_ARRAY_OFFSET + i`, or a UTF8String's
+    * `getBaseObject/getBaseOffset/numBytes`), hashed in place. The caller
+    * guarantees the range is readable.
     */
-  // Platform.getInt reads in NATIVE byte order while `hash` reads explicit
-  // little-endian; byte-swap on big-endian JVMs so the two paths can never
-  // silently place the same bytes in different buckets.
-  private final val BigEndian =
-    java.nio.ByteOrder.nativeOrder() == java.nio.ByteOrder.BIG_ENDIAN
-
-  @inline private def readLEUnsafe(base: AnyRef, i: Long): Int = {
-    val v = org.apache.spark.unsafe.Platform.getInt(base, i)
-    if (BigEndian) Integer.reverseBytes(v) else v
-  }
-
   def hashUnsafe(base: AnyRef, offset: Long, len: Int, seed: Int): Int = {
-    import org.apache.spark.unsafe.Platform
     val end = offset + len
     var i   = offset
     var h: Int = 0
@@ -96,10 +61,10 @@ object XxHash32 {
       var v3 = seed
       var v4 = seed - P1
       while (i <= limit) {
-        v1 = Integer.rotateLeft(v1 + readLEUnsafe(base, i) * P2, 13) * P1
-        v2 = Integer.rotateLeft(v2 + readLEUnsafe(base, i + 4) * P2, 13) * P1
-        v3 = Integer.rotateLeft(v3 + readLEUnsafe(base, i + 8) * P2, 13) * P1
-        v4 = Integer.rotateLeft(v4 + readLEUnsafe(base, i + 12) * P2, 13) * P1
+        v1 = Integer.rotateLeft(v1 + readLE(base, i) * P2, 13) * P1
+        v2 = Integer.rotateLeft(v2 + readLE(base, i + 4) * P2, 13) * P1
+        v3 = Integer.rotateLeft(v3 + readLE(base, i + 8) * P2, 13) * P1
+        v4 = Integer.rotateLeft(v4 + readLE(base, i + 12) * P2, 13) * P1
         i += 16
       }
       h = Integer.rotateLeft(v1, 1) + Integer.rotateLeft(v2, 7) +
@@ -109,7 +74,7 @@ object XxHash32 {
     }
     h += len
     while (i + 4 <= end) {
-      h = Integer.rotateLeft(h + readLEUnsafe(base, i) * P3, 17) * P4
+      h = Integer.rotateLeft(h + readLE(base, i) * P3, 17) * P4
       i += 4
     }
     while (i < end) {
@@ -140,19 +105,27 @@ object Hashing {
   @inline def fingerprint(item: String): Int =
     XxHash32.hashString(item, FingerprintSeed)
 
-  /** Flat bucket index of `item` in `row` of a d×w sketch (reference: hash.go:13-16).
-    * Go computes `int(uint32) % width` — a non-negative 64-bit mod; mirror that
-    * by widening the unsigned 32-bit value to Long before the mod.
+  /** Fingerprint of `len` bytes at `offset` of a `Platform` memory base. */
+  @inline def fingerprintAt(base: AnyRef, offset: Long, len: Int): Int =
+    XxHash32.hashUnsafe(base, offset, len, FingerprintSeed)
+
+  /** Flat bucket index of the item at `offset` of a `Platform` memory base in
+    * `row` of a d×w sketch (reference: hash.go:13-16). Go computes
+    * `int(uint32) % width` — a non-negative 64-bit mod; mirror that by
+    * widening the unsigned 32-bit value to Long before the mod.
     */
-  @inline def bucketIndex(bytes: Array[Byte], row: Int, width: Int): Int = {
-    val h = XxHash32.hash(bytes, row)
+  @inline def bucketIndexAt(base: AnyRef, offset: Long, len: Int, row: Int, width: Int): Int = {
+    val h = XxHash32.hashUnsafe(base, offset, len, row)
     row * width + ((h & 0xffffffffL) % width).toInt
   }
 
   @inline def bucketIndex(bytes: Array[Byte], off: Int, len: Int, row: Int, width: Int): Int = {
-    val h = XxHash32.hash(bytes, off, len, row)
-    row * width + ((h & 0xffffffffL) % width).toInt
+    java.util.Objects.checkFromIndexSize(off, len, bytes.length)
+    bucketIndexAt(bytes, Platform.BYTE_ARRAY_OFFSET + off, len, row, width)
   }
+
+  @inline def bucketIndex(bytes: Array[Byte], row: Int, width: Int): Int =
+    bucketIndex(bytes, 0, bytes.length, row, width)
 
   @inline def bucketIndex(item: String, row: Int, width: Int): Int =
     bucketIndex(item.getBytes(java.nio.charset.StandardCharsets.UTF_8), row, width)

@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   * At 100 TB the expensive step is (1), which is a single scan with map-side
   * reduction; (2)+(3) operate on #ticks rows of fixed-size blobs. The
   * event-time streaming equivalent (state-store ring, watermark-driven
-  * expiry) is `graft.streaming.SlidingTopKStream`.
+  * expiry) is `graft.streaming.TopKStreams.sliding`.
   */
 object SlidingTopK {
 

@@ -1,6 +1,7 @@
 package graft.spark
 
 import graft.operators.{Dedup, Similarity, TextAnalysis}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -423,6 +424,34 @@ class TrainingOpsSpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       assert(narrowed == got,
         s"narrowToCandidates=true diverges at t=$t: missing=${got -- narrowed} extra=${narrowed -- got}")
+    }
+  }
+
+  test("gram helpers return distinct arrays (exact Jaccard's |A|+|B|-|A∩B| needs sets)") {
+    // tiny vocabularies so grams repeat within a text; the multi-byte words
+    // take shingleHashes' substring path, the ASCII ones its byte-slice path
+    val rnd = new scala.util.Random(20240611L)
+    val vocabs = Seq(Seq("ab", "ba", "a", "b"), Seq("é", "☃x", "x", "😀"))
+    val texts = (0 until 120).map { i =>
+      val v = vocabs(i % 2)
+      Seq.fill(rnd.nextInt(40))(v(rnd.nextInt(v.size))).mkString(if (i % 3 == 0) "" else " ")
+    }
+    val df = texts.toDF("text")
+    def check(name: String, grams: Column, raw: Column): Unit = {
+      val r = df.select(grams.as("g"), raw.as("raw"))
+        .agg(sum(when(size($"g") =!= size(array_distinct($"g")), 1).otherwise(0)),
+          sum(when($"raw" > size($"g"), 1).otherwise(0)))
+        .head()
+      assert(r.getLong(0) == 0L, s"$name returned repeated grams")
+      assert(r.getLong(1) > 0L, s"$name: no text repeated a gram")
+    }
+    for (k <- 1 to 6)
+      check(s"shingleHashes($k)", Dedup.shingleHashes(k)($"text"),
+        greatest(length($"text") - k + 1, lit(0)))
+    for (n <- 1 to 4) {
+      val tokens = size(filter(split($"text", "\\s+"), t => t =!= ""))
+      check(s"wordNgramHashes($n)", Dedup.wordNgramHashes(n)($"text"),
+        greatest(tokens - n + 1, lit(0)))
     }
   }
 }
