@@ -138,7 +138,7 @@ object SparkEntry {
     * store(s) every micro-batch (a stream-stream join keeps FOUR stores per
     * partition), so partitions should be sized to the STATE, not to the
     * session's scan parallelism. Measured on stream_join_follows at sf0.1
-    * (tools/ProfileStreamJoin, min-of-2 interleaved): 32 partitions = 5.9 s
+    * (BENCH.md stream-join profile, min-of-2 interleaved): 32 partitions = 5.9 s
     * wall with 85 s of cumulative store-commit time; 8 partitions = 2.6 s
     * with 3.7 s. Re-measured for the ONE-store flatMapGroupsWithState
     * queries (tools/TimeQuery min-of-3 at sf0.1, tumbling/sliding/sessions):
@@ -169,14 +169,28 @@ object SparkEntry {
     * arrive (no watermark withhold), so the trailing no-data batch exists
     * purely to evict expired state — it loads, updates and commits every
     * state store (4 per partition for a join) to produce zero rows, a
-    * measured 35% of the bounded-run wall (ProfileStreamJoin: 3.49 s ->
+    * measured 35% of the bounded-run wall (BENCH.md: 3.49 s ->
     * 2.26 s at sf0.1). On an unbounded production stream the same flag
     * skips idle-period batches; state eviction then rides the next data
     * batch. The window/sliding/session queries MUST keep no-data batches:
     * their final windows emit exactly when the terminal no-data batch
     * advances the watermark past them.
+    *
+    * Enforced on `query`'s analyzed plan: an aggregate,
+    * `flatMapGroupsWithState`, deduplication or non-inner join is refused
+    * with an IllegalArgumentException naming the operator.
     */
-  private def withNoDataBatchesOff[A](s: SparkSession)(body: => A): A = {
+  private[graft] def withNoDataBatchesOff[A](query: DataFrame)(body: => A): A = {
+    import org.apache.spark.sql.catalyst.plans.Inner
+    import org.apache.spark.sql.catalyst.plans.logical._
+    val refused = query.queryExecution.analyzed.collectFirst {
+      case p @ (_: Aggregate | _: FlatMapGroupsWithState | _: Deduplicate |
+                _: DeduplicateWithinWatermark) => p.nodeName
+      case j: Join if j.joinType != Inner => s"${j.joinType.sql} Join"
+    }
+    require(refused.isEmpty, s"withNoDataBatchesOff: the plan contains ${refused.get}, " +
+      "whose no-data micro-batch may emit rows")
+    val s    = query.sparkSession
     val key  = "spark.sql.streaming.noDataMicroBatches.enabled"
     val prev = s.conf.get(key)
     s.conf.set(key, "false")
@@ -594,22 +608,24 @@ object SparkEntry {
       import org.apache.spark.sql.streaming.Trigger
       val schema = events(s, dir).schema
       requireUtc(s)
-      withShufflePartitions(s, StreamStatePartitions) { withNoDataBatchesOff(s) {
+      withShufflePartitions(s, StreamStatePartitions) {
         def src() = s.readStream.schema(schema).parquet(streamSourceDir(dir).toString)
           .select(col("user_id").cast("long").as("key"),
             col("ts").cast("timestamp").as("ts"), col("event_type").as("payload"))
         val out = graft.streaming.StreamJoins.followsWithin(
           src(), src(), withinSeconds = 600L, watermarkDelay = "0 seconds")
-        val name = freshSinkName(s, "stream_join_")
-        val ckpt = newCheckpointDir()
-        val q = out.writeStream.format("memory").queryName(name)
-          .outputMode("append").option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        s.table(name).select(col("key").as("user_id"),
-          col("ts_a").cast("timestamp_ntz").as("ts_a"), col("payload_a").as("type_a"),
-          col("ts_b").cast("timestamp_ntz").as("ts_b"), col("payload_b").as("type_b"))
-      } }
+        withNoDataBatchesOff(out) {
+          val name = freshSinkName(s, "stream_join_")
+          val ckpt = newCheckpointDir()
+          val q = out.writeStream.format("memory").queryName(name)
+            .outputMode("append").option("checkpointLocation", ckpt)
+            .trigger(Trigger.AvailableNow()).start()
+          q.awaitTermination()
+          s.table(name).select(col("key").as("user_id"),
+            col("ts_a").cast("timestamp_ntz").as("ts_a"), col("payload_a").as("type_a"),
+            col("ts_b").cast("timestamp_ntz").as("ts_b"), col("payload_b").as("type_b"))
+        }
+      }
     }),
 
     // membership surface: Query(item) as a semi-join against the top-K

@@ -185,8 +185,8 @@ object Dedup {
     * values in two signatures only match when both borrowed from the same
     * relative source. Cost is O(shingles + numHashes) per doc — the classic
     * per-slot scheme was O(shingles × numHashes) and measurably dominated
-    * the 500k-doc dedup pipeline (~10 s per evaluation at 128 slots;
-    * tools/ProbeMinhash).
+    * the 500k-doc dedup pipeline (signature evaluation 9.7 -> 3.7 s at 128
+    * slots; BENCH.md scale rehearsal, the MinHash band-exchange cliff).
     *
     * The slot-match fraction is an unbiased Jaccard estimate exactly like
     * classic MinHash; variance is slightly higher for docs with fewer
@@ -487,11 +487,11 @@ object Dedup {
     *
     * `narrowToCandidates` tuning: with narrowing on, AQE reuses the
     * candidate subplan for the ids semi-join (ReusedExchange on the pair
-    * distinct — the pipeline does NOT run twice; tools/ProbeNgramPlan),
-    * so the residual cost is the extra union/distinct/semi-join exchanges.
+    * distinct — the pipeline does NOT run twice in the final plan), so
+    * the residual cost is the extra union/distinct/semi-join exchanges.
     * On a candidate-DENSE corpus (the 30%-dup scale rehearsal) that
-    * overhead exceeds the saving — `Some(false)` measured 1.33x faster
-    * there (tools/ProbeNgram) — while sparse production corpora keep the
+    * overhead exceeds the saving — `Some(false)` measured 17.9 vs 21.8 s
+    * at 500k docs (OPTIMIZATION_r06.md) — while sparse corpora keep the
     * default cutover's win (verify table ∝ candidates, not corpus).
     *
     * ID REQUIREMENT (ADVICE r5): `id` is cast to long, like every
@@ -534,7 +534,7 @@ object Dedup {
     // cheapest stage of this pipeline.
     //
     // df=1 PRUNING (the load-bearing trim — measured 3 GB shuffle + 3 GB
-    // sort-spill without it at 500k docs, CoreScaleProbe): a gram unique to
+    // sort-spill without it at 500k docs, BENCH.md): a gram unique to
     // one document can never produce a candidate pair, and every COMMON
     // gram has df >= 2, so only df >= 2 grams need to be ranked and
     // indexed. The recall witness survives: the smallest common gram c1 of

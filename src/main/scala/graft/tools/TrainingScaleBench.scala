@@ -27,19 +27,16 @@ import org.apache.spark.sql.functions._
   */
 object TrainingScaleBench {
 
-  /** The core-pair bench session. CoreScaleProbe MUST run under the same
-    * configs (its util/cpu numbers are read against this bench's eff
-    * numbers in BENCH.md), so it calls this builder rather than copying
-    * the literals; `shuffleParts` defaults to `cores` (the bench setting)
-    * and is overridable only for the probe's starvation-vs-stall test.
+  /** The core-pair bench session. The util and cpu/run figures recorded
+    * next to this bench's eff numbers (BENCH.md, core pairs at the top
+    * rung) were taken under these configs, so a re-measure that wants to
+    * compare against them must use this session unchanged.
     */
-  private[tools] def session(cores: Int, appName: String = "",
-                             shuffleParts: Int = 0): SparkSession = {
+  private def session(cores: Int): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cores]")
-      .appName(if (appName.nonEmpty) appName else s"graft-training-scale-$cores")
-      .config("spark.sql.shuffle.partitions",
-        (if (shuffleParts > 0) shuffleParts else cores).toString)
+      .appName(s"graft-training-scale-$cores")
+      .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.files.maxPartitionBytes", "4m")
       .config("spark.sql.files.openCostInBytes", "262144")

@@ -1,0 +1,49 @@
+package graft
+
+import java.lang.reflect.Modifier
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The entry points the docs tell a reader to run must exist: a deleted or
+  * renamed main otherwise leaves a README command or a source comment that
+  * points at nothing. No Spark session is started.
+  */
+class DocEntryPointsSpec extends AnyFunSuite {
+
+  private val docs = Seq("README.md", ".claude/skills/verify/SKILL.md").map(Paths.get(_))
+
+  private def mainNames(text: String): Set[String] =
+    ("""runMain\s+(graft(?:\.\w+)+)""".r.findAllMatchIn(text).map(_.group(1)) ++
+      """\b(graft\.tools\.\w+)""".r.findAllMatchIn(text).map(_.group(1))).toSet
+
+  test("every graft main named in README.md and the verify skill has a static main(Array[String])") {
+    docs.foreach(p => assert(Files.isRegularFile(p), s"$p is missing"))
+    val names = docs.flatMap(p => mainNames(Files.readString(p)).map(_ -> p))
+    assert(names.exists(_._1 == "graft.Verify"), s"no runMain found in $docs")
+    val broken = names.filterNot { case (name, _) =>
+      try {
+        val m = Class.forName(name, false, getClass.getClassLoader)
+          .getMethod("main", classOf[Array[String]])
+        Modifier.isStatic(m.getModifiers) && m.getReturnType == Void.TYPE
+      } catch { case _: ClassNotFoundException | _: NoSuchMethodException => false }
+    }
+    assert(broken.isEmpty, broken.map { case (n, p) => s"$n (named in $p)" }.mkString("no main: ", ", ", ""))
+  }
+
+  test("every tools/<Name> cited in a src/main comment has a matching file") {
+    val tools = Paths.get("src/main/scala/graft/tools")
+    val srcs  = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toList
+    assert(srcs.nonEmpty, "no sources under src/main")
+    val missing = for {
+      src  <- srcs
+      (line, i) <- Files.readAllLines(src).asScala.zipWithIndex
+      name <- """\btools/([A-Z]\w*)""".r.findAllMatchIn(line).map(_.group(1))
+      if !Files.isRegularFile(tools.resolve(s"$name.scala"))
+    } yield s"$src:${i + 1} tools/$name"
+    assert(missing.isEmpty, missing.mkString("cited but missing: ", ", ", ""))
+  }
+}
