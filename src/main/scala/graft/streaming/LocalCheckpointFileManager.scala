@@ -10,7 +10,6 @@ import java.util.UUID
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataInputStream, FileAlreadyExistsException, FileStatus,
   FileSystem, Path, PathFilter, RawLocalFileSystem}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager,
   FileContextBasedCheckpointFileManager}
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.CancellableFSDataOutputStream
@@ -101,17 +100,6 @@ final class LocalCheckpointFileManager private[streaming] (
 }
 
 object LocalCheckpointFileManager {
-  /** Spark's conf naming the CheckpointFileManager implementation. */
-  final val ConfKey = "spark.sql.streaming.checkpointFileManagerClass"
-
-  /** Makes `spark`'s streaming queries use this manager, unless the conf
-    * names a manager already (set it to opt out). Called wherever graft
-    * builds a streaming plan.
-    */
-  def install(spark: SparkSession): Unit =
-    if (spark.conf.getOption(ConfKey).isEmpty)
-      spark.conf.set(ConfKey, classOf[LocalCheckpointFileManager].getName)
-
   /** A path without a scheme resolves against `fs.defaultFS`. */
   private[streaming] def isFileScheme(path: Path, conf: Configuration): Boolean =
     Option(path.toUri.getScheme).getOrElse(FileSystem.getDefaultUri(conf).getScheme) == "file"

@@ -44,7 +44,7 @@ object TopKStreams {
       cfg: SketchConfig,
       oversample: Int = 4
   ): DataFrame = {
-    LocalCheckpointFileManager.install(updates.sparkSession)
+    install(updates.sparkSession)
     updates
       .withWatermark("ts", watermarkDelay)
       .groupBy(window(col("ts"), windowDuration))
@@ -78,7 +78,7 @@ object TopKStreams {
       cfg: SketchConfig,
       oversample: Int = 4
   ): DataFrame = {
-    LocalCheckpointFileManager.install(updates.sparkSession)
+    install(updates.sparkSession)
     val bufCfg = cfg.copy(k = cfg.k * math.max(1, oversample))
     val cutoff = math.max(64, bufCfg.k * 4)
     updates
@@ -130,7 +130,7 @@ object TopKStreams {
       " ordering and stalls tick completion forever)")
     require(emitK > 0, s"emitK must be positive, got $emitK")
     val spark = updates.sparkSession
-    LocalCheckpointFileManager.install(spark)
+    install(spark)
     import spark.implicits._
 
     // Null rows are dropped AFTER the casts — a cast can itself produce null

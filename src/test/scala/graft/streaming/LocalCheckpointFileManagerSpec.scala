@@ -6,8 +6,10 @@ import java.nio.file.{Files, Path => NioPath}
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
+import graft.spark.{SparkTestSession, StreamCodegenReuseSpec}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataInputStream, FileAlreadyExistsException, FileStatus, Path, PathFilter}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.CancellableFSDataOutputStream
 import org.scalatest.funsuite.AnyFunSuite
@@ -140,17 +142,49 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
     assert(LocalCheckpointFileManager.isFileScheme(new Path("file:/ckpt"), hdfsDefault))
   }
 
+  /** Runs `body` on the shared session, then restores both keys as set, or unset, before. */
+  private def withStreamingKeys(body: SparkSession => Unit): Unit = {
+    val spark = SparkTestSession.spark
+    val keys  = Seq(CheckpointManagerKey, ArtifactIsolationKey)
+    val prior = spark.conf.getAll.filter { case (k, _) => keys.contains(k) }
+    try body(spark)
+    finally keys.foreach(k => prior.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _)))
+    assert(spark.conf.getAll.filter { case (k, _) => keys.contains(k) } == prior)
+  }
+
   test("install sets Spark's manager conf only when it is unset") {
-    val spark = graft.spark.SparkTestSession.spark
-    val key   = LocalCheckpointFileManager.ConfKey
-    val prior = spark.conf.getOption(key)
-    try {
-      spark.conf.unset(key)
-      LocalCheckpointFileManager.install(spark)
-      assert(spark.conf.get(key) == classOf[LocalCheckpointFileManager].getName)
-      spark.conf.set(key, "com.example.OtherManager")
-      LocalCheckpointFileManager.install(spark)
-      assert(spark.conf.get(key) == "com.example.OtherManager")
-    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    withStreamingKeys { spark =>
+      def conf(k: String) = spark.conf.getAll.get(k)
+      spark.conf.unset(CheckpointManagerKey)
+      spark.conf.unset(ArtifactIsolationKey)
+      install(spark)
+      assert(conf(CheckpointManagerKey).contains(classOf[LocalCheckpointFileManager].getName))
+      assert(conf(ArtifactIsolationKey).contains("false"))
+
+      spark.conf.set(CheckpointManagerKey, "com.example.OtherManager")
+      spark.conf.unset(ArtifactIsolationKey)
+      install(spark)
+      assert(conf(CheckpointManagerKey).contains("com.example.OtherManager"))
+      assert(conf(ArtifactIsolationKey).contains("false"))
+
+      for (isolation <- Seq("true", "false")) {
+        spark.conf.unset(CheckpointManagerKey)
+        spark.conf.set(ArtifactIsolationKey, isolation)
+        install(spark)
+        assert(conf(CheckpointManagerKey).contains(classOf[LocalCheckpointFileManager].getName))
+        assert(conf(ArtifactIsolationKey).contains(isolation))
+      }
+    }
+  }
+
+  test("with artifact isolation explicitly on, every fresh query compiles its classes again") {
+    withStreamingKeys { spark =>
+      spark.conf.set(ArtifactIsolationKey, "true")
+      val (_, first)         = StreamCodegenReuseSpec.freshRun(StreamCodegenReuseSpec.sliding)
+      val (compiled, second) = StreamCodegenReuseSpec.freshRun(StreamCodegenReuseSpec.sliding)
+      assert(spark.conf.get(ArtifactIsolationKey) == "true")
+      assert(compiled > 0, "the query reused the first query's classes")
+      assert(second == first)
+    }
   }
 }
