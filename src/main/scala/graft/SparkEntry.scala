@@ -2,8 +2,9 @@ package graft
 
 import graft.core.SketchConfig
 import graft.operators.{SlidingTopK, TopK}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -130,6 +131,26 @@ object SparkEntry {
     require(s.conf.get("spark.sql.session.timeZone") == "UTC",
       "stream queries cast TIMESTAMP_NTZ event time and align day windows; " +
         "run with spark.sql.session.timeZone=UTC (Verify/Bench set it)")
+
+  /** The events table as a parquet file-source stream. Watermarks require
+    * TIMESTAMP (the testdata is NTZ; session tz is UTC so the queries' cast
+    * is value-preserving — they cast back for oracle parity).
+    */
+  private def eventsStream(s: SparkSession, dir: String): DataFrame = {
+    requireUtc(s)
+    s.readStream.schema(events(s, dir).schema).parquet(streamSourceDir(dir).toString)
+  }
+
+  /** Run `out` to completion (`AvailableNow`, fresh checkpoint) into a fresh
+    * memory sink and return the sink's rows.
+    */
+  private def drain(s: SparkSession, out: Dataset[_], sinkPrefix: String): DataFrame = {
+    val name = freshSinkName(s, sinkPrefix)
+    out.writeStream.format("memory").queryName(name)
+      .outputMode("append").option("checkpointLocation", newCheckpointDir())
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    s.table(name)
+  }
 
   /** State partitions for the bounded-state streaming queries at bench SFs.
     *
@@ -506,25 +527,14 @@ object SparkEntry {
     // batch flushes the last window); replays from the checkpoint would
     // reproduce identical rows (covered by StreamResumeSpec).
     "topk_stream_tumbling" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val schema = events(s, dir).schema
-      // watermarks require TIMESTAMP (the testdata is NTZ; session tz is UTC
-      // so the cast is value-preserving — cast back for oracle parity below)
-      requireUtc(s)
       withShufflePartitions(s, StreamStatePartitions) {
-        val src = s.readStream.schema(schema).parquet(streamSourceDir(dir).toString)
+        val src = eventsStream(s, dir)
           .select(col("ts").cast("timestamp").as("ts"),
             col("event_type").as("item"), lit(1L).as("weight"))
         val out = graft.streaming.TopKStreams.tumbling(
           src, windowDuration = "1 day", watermarkDelay = "0 seconds",
           SketchConfig.withDefaults(k = 3, width = 1024, depth = 3))
-        val name = freshSinkName(s, "stream_tumbling_")
-        val ckpt = newCheckpointDir()
-        val q = out.writeStream.format("memory").queryName(name)
-          .outputMode("append").option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        s.table(name)
+        drain(s, out, "stream_tumbling_")
           .select(col("window.start").cast("timestamp_ntz").as("day"),
             col("rank"), col("item"), col("count"))
       }
@@ -537,11 +547,8 @@ object SparkEntry {
     // final day stays pending (oracle excludes it, same as the tumbling
     // stream query).
     "topk_stream_sliding" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val schema = events(s, dir).schema
-      requireUtc(s)
       withShufflePartitions(s, StreamStatePartitions) {
-        val src = s.readStream.schema(schema).parquet(streamSourceDir(dir).toString)
+        val src = eventsStream(s, dir)
           .select(lit("all").as("key"), col("ts").cast("timestamp").as("ts"),
             col("event_type").as("item"), lit(1L).as("weight"))
         val out = graft.streaming.TopKStreams.sliding(
@@ -549,13 +556,7 @@ object SparkEntry {
           graft.core.SlidingConfig.withDefaults(
             k = 5, width = 1024, depth = 3, windowSize = 7),
           emitK = 3)
-        val name = freshSinkName(s, "stream_sliding_")
-        val ckpt = newCheckpointDir()
-        val q = out.writeStream.format("memory").queryName(name)
-          .outputMode("append").option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        s.table(name)
+        drain(s, out, "stream_sliding_")
           .select((col("tick") - datediff(to_date(lit("2024-01-01")), to_date(lit("1970-01-01"))))
               .as("tick"),
             col("rank").cast("long").as("rank"), col("item"), col("count"))
@@ -567,28 +568,20 @@ object SparkEntry {
     // streaming aggregation's state store; a session emits exactly once, when
     // the watermark passes session_end. Sessions still open at end-of-input
     // stay in the state store (oracle keeps only session_end <= max ts).
-    // NOTE: session_window's boundary convention — an event exactly `gap`
-    // after its predecessor starts a NEW session — differs from the batch
-    // aggregateGap query; the oracle breaks on >= accordingly.
+    // NOTE: session_window continues a session on an event exactly `gap`
+    // after its predecessor, like the batch aggregateGap query; this
+    // oracle breaks on >=, which differs only on such a pair, and the
+    // events tables have none.
     "topk_stream_sessions" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val schema = events(s, dir).schema
-      requireUtc(s)
       withShufflePartitions(s, StreamStatePartitions) {
-        val src = s.readStream.schema(schema).parquet(streamSourceDir(dir).toString)
+        val src = eventsStream(s, dir)
           .select(col("user_id").cast("long").as("key"),
             col("ts").cast("timestamp").as("ts"),
             col("event_type").as("item"), lit(1L).as("weight"))
         val out = graft.streaming.TopKStreams.session(
           src, gap = "1 hour", watermarkDelay = "0 seconds",
           SketchConfig.withDefaults(k = 2, width = 256, depth = 3))
-        val name = freshSinkName(s, "stream_sessions_")
-        val ckpt = newCheckpointDir()
-        val q = out.writeStream.format("memory").queryName(name)
-          .outputMode("append").option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        s.table(name)
+        drain(s, out, "stream_sessions_")
           .select(col("key").as("user_id"),
             col("session_start").cast("timestamp_ntz").as("session_start"),
             col("session_end").cast("timestamp_ntz").as("session_end"),
@@ -605,23 +598,14 @@ object SparkEntry {
     // AvailableNow over a bounded input the result equals the batch
     // self-join, which is the oracle.
     "stream_join_follows" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val schema = events(s, dir).schema
-      requireUtc(s)
       withShufflePartitions(s, StreamStatePartitions) {
-        def src() = s.readStream.schema(schema).parquet(streamSourceDir(dir).toString)
+        def src() = eventsStream(s, dir)
           .select(col("user_id").cast("long").as("key"),
             col("ts").cast("timestamp").as("ts"), col("event_type").as("payload"))
         val out = graft.streaming.StreamJoins.followsWithin(
           src(), src(), withinSeconds = 600L, watermarkDelay = "0 seconds")
         withNoDataBatchesOff(out) {
-          val name = freshSinkName(s, "stream_join_")
-          val ckpt = newCheckpointDir()
-          val q = out.writeStream.format("memory").queryName(name)
-            .outputMode("append").option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-          s.table(name).select(col("key").as("user_id"),
+          drain(s, out, "stream_join_").select(col("key").as("user_id"),
             col("ts_a").cast("timestamp_ntz").as("ts_a"), col("payload_a").as("type_a"),
             col("ts_b").cast("timestamp_ntz").as("ts_b"), col("payload_b").as("type_b"))
         }
@@ -1020,9 +1004,10 @@ object SparkEntry {
            FROM win)
          SELECT tick, rank, item, count FROM r WHERE rank <= 3 ORDER BY tick, rank""",
 
-    // streaming sessions use Spark's session_window convention (an event at
-    // exactly prev + gap STARTS a new session -> break on >=), and only
-    // sessions the final watermark (= max ts, delay 0) has closed emit
+    // streaming sessions: break on >= (session_window itself continues a
+    // session at exactly prev + gap; no events pair lands there, see the
+    // query), and only sessions the final watermark (= max ts, delay 0)
+    // has closed emit
     "topk_stream_sessions" ->
       """WITH o AS (
            SELECT user_id, ts, event_type,

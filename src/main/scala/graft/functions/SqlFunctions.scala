@@ -1,7 +1,8 @@
 package graft.functions
 
 import graft.core.SketchConfig
-import graft.plans.{ItemsTopKAgg, TokensTopKAgg}
+import graft.plans.{AdaptiveTopKAgg, ItemsTopKAgg, TokensTopKAgg}
+import graft.plans.TopKAggregates.candidates
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.types.{LongType, StringType}
@@ -83,7 +84,7 @@ object SqlFunctions {
   }
 
   /** Oversampling factor applied to partial candidate tracking (see
-    * `TopK.topkColumn`); emitted rows stay at k.
+    * `TopKAggregates.candidates`); emitted rows stay at k.
     */
   private val Oversample = 4
 
@@ -93,7 +94,7 @@ object SqlFunctions {
       require(args.length >= 2 && args.length <= 5,
         "usage: topk_tokens(tokens_array, k[, width, depth[, decay]])")
       val cfg = cfgFrom(args, 1)
-      TokensTopKAgg(args.head, cfg.copy(k = cfg.k * Oversample), cfg.k)
+      TokensTopKAgg(args.head, candidates(cfg, Oversample), cfg.k)
         .toAggregateExpression()
     },
 
@@ -104,20 +105,17 @@ object SqlFunctions {
       // cast for SQL ergonomics (ints as items, int weights); the aggregate
       // itself validates strictly via checkInputDataTypes
       ItemsTopKAgg(Cast(args.head, StringType), Cast(args(1), LongType),
-        cfg.copy(k = cfg.k * Oversample), cfg.k)
+        candidates(cfg, Oversample), cfg.k)
         .toAggregateExpression()
     },
 
     // exact below an item-count cutoff, sketch above — the many-small-groups
-    // aggregate (cutoff = max(64, 4·k·oversample))
+    // aggregate (sizing rule: AdaptiveTopKAgg.expression)
     "topk_items_adaptive" -> { args =>
       require(args.length >= 3 && args.length <= 6,
         "usage: topk_items_adaptive(item, weight, k[, width, depth[, decay]])")
-      val cfg    = cfgFrom(args, 2)
-      val bufK   = cfg.k * Oversample
-      graft.plans.AdaptiveItemsTopKAgg(
-        Cast(args.head, StringType), Cast(args(1), LongType),
-        cfg.copy(k = bufK), cfg.k, cutoff = math.max(64, bufK * 4))
+      AdaptiveTopKAgg.expression(Cast(args.head, StringType), Cast(args(1), LongType),
+        cfgFrom(args, 2), Oversample)
         .toAggregateExpression()
     },
 
@@ -131,7 +129,7 @@ object SqlFunctions {
       val cfg = cfgFrom(args, 4)
       graft.plans.SlidingTopKAgg(
         Cast(args.head, LongType), Cast(args(1), StringType), Cast(args(2), LongType),
-        windowTicks, cfg.k, cfg.copy(k = cfg.k * Oversample))
+        windowTicks, cfg.k, candidates(cfg, Oversample))
         .toAggregateExpression()
     },
 

@@ -5,65 +5,36 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Session-window top-K: one HeavyKeeper sketch per (key, activity session),
-  * sessions defined by an inactivity gap. Works identically over batch
-  * DataFrames and watermarked streams (Spark's `session_window` merges
-  * session state in the streaming aggregation's state store; in batch it is
-  * a regular aggregation).
+/** Batch session-window top-K: one top-K buffer per (key, activity
+  * session), sessions defined by an inactivity gap. The streaming session
+  * path (and the one that runs Spark's `session_window`, over batch or
+  * stream) is `graft.streaming.TopKStreams.session`; both return the same
+  * sessions and rows.
   *
-  * Scale shape: identical to the tumbling path — partial sketches per
-  * (partition x key x session) merge map-side; the shuffle key is
-  * (key, session), never the item.
+  * Scale shape: one shuffle on the session key; partial buffers per
+  * (key, session) never shuffle on the item.
   */
 object SessionTopK {
-
-  /** @param df      rows with an event-time column
-    * @param key     session partition key (e.g. user)
-    * @param ts      event-time column
-    * @param gap     inactivity gap, e.g. "1 hour"
-    * @param item    counted item
-    * @param weight  per-row weight
-    * Output: key, session_start, session_end, rank, item, count, fingerprint.
-    *
-    * Boundary convention (differs from `aggregateGap`!): Spark's
-    * `session_window` treats an event exactly `gap` after its predecessor as
-    * starting a NEW session (windows are half-open `[start, start+gap)`),
-    * while `aggregateGap` — like SQL `lag`-based sessionization and the
-    * driver oracle — CONTINUES the session on the boundary timestamp (break
-    * only when `ts > prev + gap`). The two agree on every input whose
-    * inter-event gaps never land exactly on `gap`.
-    */
-  def aggregate(df: DataFrame, key: Column, ts: Column, gap: String,
-                item: Column, weight: Column, cfg: SketchConfig,
-                oversample: Int = 4): DataFrame =
-    df.select(key.as("key"), ts.as("ts"),
-        item.cast("string").as("item"), weight.cast("long").as("weight"))
-      .groupBy(col("key"), session_window(col("ts"), gap))
-      .agg(TopK.topkColumn(col("item"), col("weight"), cfg, oversample).as("topk"))
-      .select(col("key"), col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"),
-        posexplode(col("topk")).as(Seq("rank0", "e")))
-      .select(col("key"), col("session_start"), col("session_end"),
-        (col("rank0") + 1).cast("long").as("rank"),
-        col("e.item"), col("e.count"), col("e.fingerprint"))
 
   /** Batch-optimized session top-K via gap detection over a per-key
     * event-time sort: `lag` marks session breaks (gap strictly greater than
     * `gapSeconds`), a running sum numbers the sessions, and ONE hash
     * aggregation on (key, session) builds the per-session sketches.
     *
-    * Why this exists alongside `aggregate`: Spark's batch `session_window`
-    * runs the sort-heavy UpdatingSessions/MergingSessions machinery, which
-    * costs several seconds even on 100k rows. This path is two exchanges
-    * total — shuffle on key for the window sort, then the (key, session)
-    * aggregation reuses that partitioning (HashPartitioning(key) satisfies
-    * the ClusteredDistribution(key, session)), so the sketch aggregation adds
-    * NO extra shuffle. At 100 TB the per-key sort is the standard
-    * sessionization plan; skewed keys split via the salted variant upstream.
+    * Why this exists alongside `TopKStreams.session`: Spark's batch
+    * `session_window` runs the sort-heavy UpdatingSessions/MergingSessions
+    * machinery, which costs several seconds even on 100k rows. This path is
+    * two exchanges total — shuffle on key for the window sort, then the
+    * (key, session) aggregation reuses that partitioning
+    * (HashPartitioning(key) satisfies the ClusteredDistribution(key,
+    * session)), so the sketch aggregation adds NO extra shuffle. At 100 TB
+    * the per-key sort is the standard sessionization plan; skewed keys split
+    * via the salted variant upstream.
     *
     * Boundary convention matches SQL sessionization (and the driver oracle):
     * an event exactly `gapSeconds` after its predecessor CONTINUES the
-    * session; `session_end = last_ts + gap`.
+    * session (break only when `ts > prev + gap`); `session_end = last_ts +
+    * gap`. `TopKStreams.session`'s `session_window` does the same.
     *
     * Recommended session conf: raise
     * `spark.sql.objectHashAggregate.sortBased.fallbackThreshold` (default
@@ -102,19 +73,14 @@ object SessionTopK {
     // adaptive buffer: sessions typically hold a handful of distinct items,
     // so the exact-map phase avoids allocating + serializing a full sketch
     // per tiny group (the dominant cost in the many-small-groups regime)
-    val bufCfg = cfg.copy(k = cfg.k * math.max(1, oversample))
-    val cutoff = math.max(64, bufCfg.k * 4)
-    sessions
+    val perSession = sessions
       .groupBy(col("key"), col("sess"))
       .agg(
         min(col("ts")).as("session_start"),
         (max(col("ts")) + expr(s"INTERVAL $gapSeconds SECOND")).as("session_end"),
-        graft.plans.AdaptiveTopKAgg.adaptive(
-          col("item"), col("weight"), bufCfg, cfg.k, cutoff).as("topk"))
-      .select(col("key"), col("session_start"), col("session_end"),
-        posexplode(col("topk")).as(Seq("rank0", "e")))
-      .select(col("key"), col("session_start"), col("session_end"),
-        (col("rank0") + 1).cast("long").as("rank"),
-        col("e.item"), col("e.count"), col("e.fingerprint"))
+        graft.plans.AdaptiveTopKAgg.adaptive(col("item"), col("weight"), cfg, oversample)
+          .as("topk"))
+    TopK.ranked(perSession, Seq(col("key"), col("session_start"), col("session_end")),
+      col("topk"))
   }
 }

@@ -57,6 +57,9 @@ object SlidingTopK {
     // evaluates with implicit step -1 — silently attributing each tick's
     // data to the PREVIOUS window instead of erroring
     require(windowTicks >= 1, s"windowTicks must be >= 1, got $windowTicks")
+    // k = 0 would emit no rows at all (the row decode clamps at 0), where
+    // the same-semantics topk_sliding rejects it
+    require(k >= 1, s"k must be >= 1, got $k")
     val updates = df.select(
       tick.cast("long").as("tick"),
       item.cast("string").as("item"),
@@ -89,18 +92,11 @@ object SlidingTopK {
     // (HashPartitioning(out_tick, n) satisfies its distribution), so the
     // shuffle count is unchanged at any scale.
     val mergeParts = spark.sessionState.conf.numShufflePartitions
-    window
+    val merged = window
       .repartition(mergeParts, col("out_tick"))
       .groupBy(col("out_tick"))
       .agg(TopKAggregates.mergeBlobs(col("sketch")).as("m"))
-      .select(col("out_tick").as("tick"),
-        posexplode(TopKAggregates.sketchRows(col("m"), lit(k))).as(Seq("rank0", "e")))
-      .select(
-        col("tick"),
-        (col("rank0") + 1).cast("long").as("rank"),
-        col("e.item"),
-        col("e.count"),
-        col("e.fingerprint")
-      )
+    TopK.ranked(merged, Seq(col("out_tick").as("tick")),
+      TopKAggregates.sketchRows(col("m"), lit(k)))
   }
 }

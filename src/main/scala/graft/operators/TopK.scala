@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.core.SketchConfig
+import graft.plans.TopKAggregates
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
@@ -17,18 +18,22 @@ import org.apache.spark.sql.graftbridge.Bridge
 object TopK {
 
   /** The aggregation Column on the native (InternalRow-level) expression:
-    * partials track k×oversample candidates, emitK = cfg.k rows come out.
-    *
-    * `oversample`: bucket counters are completely unaffected by heap
-    * capacity (the heap only selects what gets *reported*, reference:
-    * sketch.go:169), but a partition-local top-k heap can drop items that
-    * are top-k only globally; oversampling the candidate set in the partials
-    * recovers them. oversample = 1 reproduces the reference's exact
-    * single-writer candidate retention.
+    * partials track k×oversample candidates, emitK = cfg.k rows come out
+    * (the oversample rule: [[graft.plans.TopKAggregates.candidates]]).
     */
   def topkColumn(item: Column, weight: Column, cfg: SketchConfig, oversample: Int): Column =
-    graft.plans.TopKAggregates.itemsTopK(
-      item, weight, cfg.copy(k = cfg.k * math.max(1, oversample)), cfg.k)
+    TopKAggregates.itemsTopK(item, weight, TopKAggregates.candidates(cfg, oversample), cfg.k)
+
+  /** The one ranked-rows projection: `keys`, then one row per element of
+    * the `array<struct item,count,fingerprint>` column `topk` with its
+    * 1-based `rank` (long), `item`, `count` and `fingerprint`.
+    */
+  def ranked(df: DataFrame, keys: Seq[Column], topk: Column): DataFrame = {
+    val exploded = df.select((keys :+ posexplode(topk).as(Seq("rank0", "e"))): _*)
+    val keyCols  = exploded.columns.dropRight(2).map(col)
+    exploded.select((keyCols :+ (col("rank0") + 1).cast("long").as("rank") :+ col("e.item")
+      :+ col("e.count") :+ col("e.fingerprint")): _*)
+  }
 
   /** Shared global-top-K plan with the two-level TREE merge and its cutover.
     *
@@ -56,7 +61,6 @@ object TopK {
     */
   private def globalTopK(df: DataFrame, k: Int, mergeFanIn: Int,
                          flatAgg: Column, blobAgg: Column): DataFrame = {
-    import graft.plans.TopKAggregates
     // streaming plans reject multi-aggregation (groupBy agg -> agg), so the
     // flat single-union plan is the only legal shape there — even when the
     // caller forces the tree with a negative fan-in
@@ -103,12 +107,11 @@ object TopK {
     */
   def aggregate(df: DataFrame, item: Column, weight: Column, cfg: SketchConfig,
                 oversample: Int = 4, mergeFanIn: Int = 64): DataFrame = {
-    import graft.plans.TopKAggregates
-    val bufCfg  = cfg.copy(k = cfg.k * math.max(1, oversample))
     val updates = df.select(item.cast("string").as("item"), weight.cast("long").as("weight"))
     globalTopK(updates, cfg.k, mergeFanIn,
       flatAgg = topkColumn(col("item"), col("weight"), cfg, oversample),
-      blobAgg = TopKAggregates.sketchBytes(col("item"), col("weight"), bufCfg))
+      blobAgg = TopKAggregates.sketchBytes(col("item"), col("weight"),
+        TopKAggregates.candidates(cfg, oversample)))
   }
 
   /** Token top-K straight off the `array<int>` column — no explode stage;
@@ -118,8 +121,7 @@ object TopK {
     */
   def tokensArray(df: DataFrame, tokens: Column, cfg: SketchConfig,
                   oversample: Int = 4, mergeFanIn: Int = 64): DataFrame = {
-    import graft.plans.TopKAggregates
-    val bufCfg = cfg.copy(k = cfg.k * math.max(1, oversample))
+    val bufCfg = TopKAggregates.candidates(cfg, oversample)
     globalTopK(df, cfg.k, mergeFanIn,
       flatAgg = TopKAggregates.tokensTopK(tokens, bufCfg, cfg.k),
       blobAgg = TopKAggregates.tokensSketchBytes(tokens, bufCfg))
@@ -133,12 +135,9 @@ object TopK {
     val keyed = df.select((groupCols :+ item.cast("string").as("item")
       :+ weight.cast("long").as("weight")): _*)
     val groupNames = keyed.columns.dropRight(2).map(col)
-    keyed
-      .groupBy(groupNames: _*)
-      .agg(topkColumn(col("item"), col("weight"), cfg, oversample).as("topk"))
-      .select((groupNames :+ posexplode(col("topk")).as(Seq("rank0", "e"))): _*)
-      .select((groupNames :+ (col("rank0") + 1).cast("long").as("rank") :+ col("e.item")
-        :+ col("e.count") :+ col("e.fingerprint")): _*)
+    ranked(keyed.groupBy(groupNames: _*)
+      .agg(topkColumn(col("item"), col("weight"), cfg, oversample).as("topk")),
+      groupNames, col("topk"))
   }
 
   /** Per-group top-K with EXPLICIT skew handling: two-level salted
@@ -152,8 +151,7 @@ object TopK {
     */
   def aggregateBySalted(df: DataFrame, groupCols: Seq[Column], item: Column, weight: Column,
                         cfg: SketchConfig, saltFanout: Int = 16, oversample: Int = 4): DataFrame = {
-    import graft.plans.TopKAggregates
-    val bufCfg = cfg.copy(k = cfg.k * math.max(1, oversample))
+    val bufCfg = TopKAggregates.candidates(cfg, oversample)
     val keyed = df.select((groupCols :+ item.cast("string").as("item")
       :+ weight.cast("long").as("weight")): _*)
     val groupNames = keyed.columns.dropRight(2).map(col)
@@ -161,13 +159,8 @@ object TopK {
     val level1 = salted
       .groupBy((groupNames :+ col("_salt")): _*)
       .agg(TopKAggregates.sketchBytes(col("item"), col("weight"), bufCfg).as("blob"))
-    level1
-      .groupBy(groupNames: _*)
-      .agg(TopKAggregates.mergeBlobs(col("blob")).as("merged"))
-      .select((groupNames :+ posexplode(TopKAggregates.sketchRows(col("merged"), lit(cfg.k)))
-        .as(Seq("rank0", "e"))): _*)
-      .select((groupNames :+ (col("rank0") + 1).cast("long").as("rank") :+ col("e.item")
-        :+ col("e.count") :+ col("e.fingerprint")): _*)
+    ranked(level1.groupBy(groupNames: _*).agg(TopKAggregates.mergeBlobs(col("blob")).as("merged")),
+      groupNames, TopKAggregates.sketchRows(col("merged"), lit(cfg.k)))
   }
 
   /** `Count(item)` over a serialized sketch blob (reference: sketch.go:90-111). */

@@ -201,12 +201,18 @@ case class AdaptiveItemsTopKAgg(
 }
 
 object AdaptiveTopKAgg {
-  /** `agg(adaptive($"item", $"weight", cfg, k))` — exact below `cutoff`
-    * distinct items per group, sketch above.
+  /** The one adaptive sizing rule: k×oversample candidates
+    * ([[TopKAggregates.candidates]]), exact below
+    * cutoff = max(64, 4·k·oversample) distinct items per group, sketch above.
     */
-  def adaptive(item: Column, weight: Column, cfg: SketchConfig, emitK: Int,
-               cutoff: Int): Column =
-    Bridge.column(
-      AdaptiveItemsTopKAgg(Bridge.expression(item), Bridge.expression(weight),
-        cfg, emitK, cutoff).toAggregateExpression())
+  def expression(item: Expression, weight: Expression, cfg: SketchConfig,
+                 oversample: Int): AdaptiveItemsTopKAgg = {
+    val bufCfg = TopKAggregates.candidates(cfg, oversample)
+    AdaptiveItemsTopKAgg(item, weight, bufCfg, cfg.k, cutoff = math.max(64, bufCfg.k * 4))
+  }
+
+  /** `agg(adaptive($"item", $"weight", cfg, oversample))` — see [[expression]]. */
+  def adaptive(item: Column, weight: Column, cfg: SketchConfig, oversample: Int): Column =
+    Bridge.column(expression(Bridge.expression(item), Bridge.expression(weight),
+      cfg, oversample).toAggregateExpression())
 }

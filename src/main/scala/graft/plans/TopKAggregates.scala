@@ -277,6 +277,18 @@ case class SketchBytesAgg(
 }
 
 object TopKAggregates {
+  /** The one oversample rule: a row-emitting aggregate's buffer tracks
+    * k×oversample candidates (oversample < 1 counts as 1) and emits cfg.k
+    * rows. Bucket counters are unaffected by heap capacity (the heap only
+    * selects what gets *reported*, reference: sketch.go:169), but a
+    * partition-local top-k heap can drop items that are top-k only
+    * globally; oversampling the partials' candidate set recovers them.
+    * oversample = 1 reproduces the reference's exact single-writer
+    * candidate retention.
+    */
+  def candidates(cfg: SketchConfig, oversample: Int): SketchConfig =
+    cfg.copy(k = cfg.k * math.max(1, oversample))
+
   /** `agg(tokensTopK($"tokens", cfg, k))` — array-native token top-K. */
   def tokensTopK(tokens: Column, cfg: SketchConfig, emitK: Int): Column =
     Bridge.column(

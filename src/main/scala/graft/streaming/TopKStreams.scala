@@ -17,10 +17,13 @@ final case class TickTopK(key: String, tick: Long, rank: Int, item: String,
 
 /** Streaming top-K engines.
   *
-  * Tumbling: plain watermarked window aggregation — each window is its own
-  * sketch group, the use-then-discard pattern of the reference's `Reset`
-  * (reference: sketch.go:211-215). Fully partition-parallel: partial sketches
-  * per executor merge through the streaming aggregation's state store.
+  * Tumbling: `TopK.aggregateBy` over the watermarked stream, grouped by a
+  * `window` column — each window is its own sketch group, the
+  * use-then-discard pattern of the reference's `Reset` (reference:
+  * sketch.go:211-215). Fully partition-parallel: partial sketches per
+  * executor merge through the streaming aggregation's state store.
+  *
+  * Session: `session_window` over an adaptive buffer (see [[session]]).
   *
   * Sliding: the reference's tick ring (reference: sliding/sketch.go:106-129)
   * as a `flatMapGroupsWithState` operator. Event-time ticks; the watermark
@@ -45,13 +48,9 @@ object TopKStreams {
       oversample: Int = 4
   ): DataFrame = {
     install(updates.sparkSession)
-    updates
-      .withWatermark("ts", watermarkDelay)
-      .groupBy(window(col("ts"), windowDuration))
-      .agg(TopK.topkColumn(col("item"), col("weight"), cfg, oversample).as("topk"))
-      .select(col("window"), posexplode(col("topk")).as(Seq("rank0", "e")))
-      .select(col("window"), (col("rank0") + 1).cast("long").as("rank"),
-        col("e.item"), col("e.count"), col("e.fingerprint"))
+    TopK.aggregateBy(updates.withWatermark("ts", watermarkDelay),
+      Seq(window(col("ts"), windowDuration).as("window")), col("item"), col("weight"),
+      cfg, oversample)
   }
 
   /** Session-window streaming top-K (beyond-reference, completes the window
@@ -67,6 +66,13 @@ object TopKStreams {
     * (measured: ~9 KB/session × 90k live sessions ≈ 800 MB of state churn,
     * ~24 s at sf0.1 — the adaptive map blobs are a few dozen bytes).
     *
+    * Runs on a batch DataFrame too (the watermark is then a no-op); batch
+    * sessionization is faster through `SessionTopK.aggregateGap`. Boundary
+    * convention, the same in both (SessionJoinSpec pins it, batch and
+    * stream): an event exactly `gap` after its predecessor CONTINUES the
+    * session — a break needs `ts > prev + gap` — even though each event's
+    * own window is `[ts, ts + gap)`; `session_end` is the last event + gap.
+    *
     * @param updates streaming DataFrame with (key, ts timestamp, item string,
     *                weight long)
     * @param gap     inactivity gap, e.g. "1 hour"
@@ -79,19 +85,13 @@ object TopKStreams {
       oversample: Int = 4
   ): DataFrame = {
     install(updates.sparkSession)
-    val bufCfg = cfg.copy(k = cfg.k * math.max(1, oversample))
-    val cutoff = math.max(64, bufCfg.k * 4)
-    updates
+    val perSession = updates
       .withWatermark("ts", watermarkDelay)
       .groupBy(col("key"), session_window(col("ts"), gap))
-      .agg(graft.plans.AdaptiveTopKAgg.adaptive(
-        col("item"), col("weight"), bufCfg, cfg.k, cutoff).as("topk"))
-      .select(col("key"), col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"),
-        posexplode(col("topk")).as(Seq("rank0", "e")))
-      .select(col("key"), col("session_start"), col("session_end"),
-        (col("rank0") + 1).cast("long").as("rank"),
-        col("e.item"), col("e.count"), col("e.fingerprint"))
+      .agg(graft.plans.AdaptiveTopKAgg.adaptive(col("item"), col("weight"), cfg, oversample)
+        .as("topk"))
+    TopK.ranked(perSession, Seq(col("key"), col("session_window.start").as("session_start"),
+      col("session_window.end").as("session_end")), col("topk"))
   }
 
   /** Sliding-window streaming top-K over event-time ticks.

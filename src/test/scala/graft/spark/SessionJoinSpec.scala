@@ -4,6 +4,8 @@ import java.sql.Timestamp
 
 import graft.core.SketchConfig
 import graft.operators.SessionTopK
+import graft.streaming.TopKStreams
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -16,21 +18,25 @@ class SessionJoinSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def ts(sec: Long) = new Timestamp(sec * 1000L)
+  private val cfg2 = SketchConfig.withDefaults(2, width = 256, depth = 3)
+
+  /** (key, ts, item) rows with weight 1, in `TopKStreams.session`'s input shape. */
+  private def sessionInput(rows: (Long, Timestamp, String)*): DataFrame =
+    rows.toDF("key", "ts", "item").withColumn("weight", lit(1L))
+
+  /** Sorted (key, session_start s, session_end s, rank, item, count). */
+  private def sessionRows(df: DataFrame) =
+    df.collect().map(r => (r.getLong(0), r.getTimestamp(1).getTime / 1000,
+      r.getTimestamp(2).getTime / 1000, r.getLong(3), r.getString(4), r.getLong(5))).toSeq.sorted
 
   test("batch session windows: gap-separated sessions with per-session top-K") {
     // user 1: two sessions (events at 0-100s, then 5000-5100s; gap 60s)
-    val rows = Seq(
+    val rows = sessionInput(
       (1L, ts(0), "a"), (1L, ts(50), "a"), (1L, ts(100), "b"),
       (1L, ts(5000), "c"), (1L, ts(5030), "c"),
-      (2L, ts(10), "z")
-    ).toDF("user", "ts", "item")
-    val out = SessionTopK.aggregate(rows, $"user", $"ts", "60 seconds",
-        $"item", lit(1L), SketchConfig.withDefaults(2, width = 256, depth = 3))
-      .orderBy("key", "session_start", "rank")
-      .collect()
-      .map(r => (r.getLong(0), r.getTimestamp(1).getTime / 1000, r.getTimestamp(2).getTime / 1000,
-        r.getLong(3), r.getString(4), r.getLong(5)))
-    assert(out.toSeq == Seq(
+      (2L, ts(10), "z"))
+    val out = sessionRows(TopKStreams.session(rows, "60 seconds", "0 seconds", cfg2))
+    assert(out == Seq(
       (1L, 0L, 160L, 1L, "a", 2L),     // session [0, 100+60): a x2, b x1
       (1L, 0L, 160L, 2L, "b", 1L),
       (1L, 5000L, 5090L, 1L, "c", 2L), // second session after the gap
@@ -41,10 +47,8 @@ class SessionJoinSpec extends AnyFunSuite {
   test("streaming session windows finalize on watermark") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, Timestamp, String)]
-    val df    = input.toDF.toDF("user", "ts", "item")
-    val q = SessionTopK.aggregate(
-        df.withWatermark("ts", "0 seconds"), $"user", $"ts", "30 seconds",
-        $"item", lit(1L), SketchConfig.withDefaults(2, width = 256, depth = 3))
+    val df    = input.toDF.toDF("key", "ts", "item").withColumn("weight", lit(1L))
+    val q = TopKStreams.session(df, "30 seconds", "0 seconds", cfg2)
       .writeStream.format("memory").queryName("sess").outputMode("append").start()
     try {
       input.addData((1L, ts(0), "x"), (1L, ts(10), "x"), (1L, ts(20), "y"))
@@ -61,6 +65,41 @@ class SessionJoinSpec extends AnyFunSuite {
         (1L, 0L, 1L, "x", 2L), (1L, 0L, 2L, "y", 1L),
         (1L, 500L, 1L, "z", 1L)
       ))
+    } finally q.stop()
+  }
+
+  test("batch sessions: aggregateGap and session_window return identical rows") {
+    // inter-event gaps 59, 1, 61, 120, 30 and 5000 seconds
+    val rows = sessionInput(
+      (1L, ts(0), "a"), (1L, ts(59), "b"), (1L, ts(60), "a"), (1L, ts(121), "c"),
+      (1L, ts(241), "c"), (1L, ts(271), "a"), (2L, ts(5), "z"), (2L, ts(5005), "z"))
+    val gap = SessionTopK.aggregateGap(rows, $"key", $"ts", 60L, $"item", $"weight", cfg2)
+    val win = TopKStreams.session(rows, "60 seconds", "0 seconds", cfg2)
+    assert(gap.columns.toSeq == win.columns.toSeq)
+    assert(sessionRows(gap) == sessionRows(win))
+    assert(sessionRows(gap).map(r => (r._1, r._2)).distinct.size == 5)
+  }
+
+  test("an event exactly gap after its predecessor continues the session in aggregateGap and session_window, batch and stream") {
+    val rows = sessionInput((1L, ts(0), "a"), (1L, ts(60), "b"))
+    val oneSession = Seq((1L, 0L, 120L, 1L, "a", 1L), (1L, 0L, 120L, 2L, "b", 1L))
+    assert(sessionRows(
+      SessionTopK.aggregateGap(rows, $"key", $"ts", 60L, $"item", $"weight", cfg2)) == oneSession)
+    assert(sessionRows(TopKStreams.session(rows, "60 seconds", "0 seconds", cfg2)) == oneSession)
+
+    // streaming: the boundary event arrives in a later micro-batch, after
+    // the watermark has reached the first event
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[(Long, Timestamp, String)]
+    val df    = input.toDF.toDF("key", "ts", "item").withColumn("weight", lit(1L))
+    val q = TopKStreams.session(df, "60 seconds", "0 seconds", cfg2)
+      .writeStream.format("memory").queryName("sess_boundary").outputMode("append").start()
+    try {
+      Seq(ts(0) -> "a", ts(60) -> "b", ts(1000) -> "c").foreach { case (t, item) =>
+        input.addData((1L, t, item))
+        q.processAllAvailable()
+      }
+      assert(sessionRows(spark.table("sess_boundary")) == oneSession)
     } finally q.stop()
   }
 
