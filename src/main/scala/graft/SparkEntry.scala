@@ -568,10 +568,9 @@ object SparkEntry {
     // streaming aggregation's state store; a session emits exactly once, when
     // the watermark passes session_end. Sessions still open at end-of-input
     // stay in the state store (oracle keeps only session_end <= max ts).
-    // NOTE: session_window continues a session on an event exactly `gap`
-    // after its predecessor, like the batch aggregateGap query; this
-    // oracle breaks on >=, which differs only on such a pair, and the
-    // events tables have none.
+    // session_window continues a session on an event exactly `gap` after
+    // its predecessor, like the batch aggregateGap query; the oracle breaks
+    // on > to match.
     "topk_stream_sessions" -> ((s, dir) => {
       withShufflePartitions(s, StreamStatePartitions) {
         val src = eventsStream(s, dir)
@@ -1004,15 +1003,14 @@ object SparkEntry {
            FROM win)
          SELECT tick, rank, item, count FROM r WHERE rank <= 3 ORDER BY tick, rank""",
 
-    // streaming sessions: break on >= (session_window itself continues a
-    // session at exactly prev + gap; no events pair lands there, see the
-    // query), and only sessions the final watermark (= max ts, delay 0)
-    // has closed emit
+    // streaming sessions: break on > (session_window continues a session
+    // at exactly prev + gap, as topk_sessions does), and only sessions the
+    // final watermark (= max ts, delay 0) has closed emit
     "topk_stream_sessions" ->
       """WITH o AS (
            SELECT user_id, ts, event_type,
                   CASE WHEN lag(ts) OVER w IS NULL
-                         OR ts - lag(ts) OVER w >= INTERVAL 1 HOUR
+                         OR ts - lag(ts) OVER w > INTERVAL 1 HOUR
                        THEN 1 ELSE 0 END AS brk
            FROM events
            WINDOW w AS (PARTITION BY user_id ORDER BY ts)),

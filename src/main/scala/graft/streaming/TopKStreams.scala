@@ -47,7 +47,7 @@ object TopKStreams {
       cfg: SketchConfig,
       oversample: Int = 4
   ): DataFrame = {
-    install(updates.sparkSession)
+    install(updates)
     TopK.aggregateBy(updates.withWatermark("ts", watermarkDelay),
       Seq(window(col("ts"), windowDuration).as("window")), col("item"), col("weight"),
       cfg, oversample)
@@ -84,7 +84,7 @@ object TopKStreams {
       cfg: SketchConfig,
       oversample: Int = 4
   ): DataFrame = {
-    install(updates.sparkSession)
+    install(updates)
     val perSession = updates
       .withWatermark("ts", watermarkDelay)
       .groupBy(col("key"), session_window(col("ts"), gap))
@@ -130,7 +130,7 @@ object TopKStreams {
       " ordering and stalls tick completion forever)")
     require(emitK > 0, s"emitK must be positive, got $emitK")
     val spark = updates.sparkSession
-    install(spark)
+    install(updates)
     import spark.implicits._
 
     // Null rows are dropped AFTER the casts — a cast can itself produce null

@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The entry points the docs tell a reader to run must exist: a deleted or
   * renamed main otherwise leaves a README command or a source comment that
-  * points at nothing. No Spark session is started.
+  * points at nothing. Likewise every session-wide Spark default graft sets
+  * must be documented. No Spark session is started.
   */
 class DocEntryPointsSpec extends AnyFunSuite {
 
@@ -45,5 +46,18 @@ class DocEntryPointsSpec extends AnyFunSuite {
       if !Files.isRegularFile(tools.resolve(s"$name.scala"))
     } yield s"$src:${i + 1} tools/$name"
     assert(missing.isEmpty, missing.mkString("cited but missing: ", ", ", ""))
+  }
+
+  test("every Spark key graft.streaming.install may set is named in README.md") {
+    val pkg  = Class.forName("graft.streaming.package$")
+    val obj  = pkg.getField("MODULE$").get(null)
+    val keys = pkg.getDeclaredMethods.toSeq
+      .filter(m => m.getName.endsWith("Key") && m.getParameterCount == 0 && m.getReturnType == classOf[String])
+      .map(m => m.getName -> m.invoke(obj).asInstanceOf[String])
+    assert(keys.size >= 3, s"found only ${keys.map(_._1)} in graft.streaming")
+    val readme = Files.readString(Paths.get("README.md"))
+    val undocumented = keys.filterNot { case (_, key) => readme.contains(s"`$key") }
+    assert(undocumented.isEmpty,
+      undocumented.map { case (name, key) => s"$name = $key" }.mkString("not in README.md: ", ", ", ""))
   }
 }

@@ -2,17 +2,24 @@ package graft.streaming
 
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path => NioPath}
+import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
+import graft.core.SlidingConfig
 import graft.spark.{SparkTestSession, StreamCodegenReuseSpec}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataInputStream, FileAlreadyExistsException, FileStatus, Path, PathFilter}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SQLContext, SparkSession}
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.CancellableFSDataOutputStream
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.{col, expr}
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
 
 class LocalCheckpointFileManagerSpec extends AnyFunSuite {
   private val conf = new Configuration()
@@ -142,37 +149,74 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
     assert(LocalCheckpointFileManager.isFileScheme(new Path("file:/ckpt"), hdfsDefault))
   }
 
-  /** Runs `body` on the shared session, then restores both keys as set, or unset, before. */
+  /** Runs `body` on the shared session, then restores every key `install`
+    * may set as set, or unset, before.
+    */
   private def withStreamingKeys(body: SparkSession => Unit): Unit = {
     val spark = SparkTestSession.spark
-    val keys  = Seq(CheckpointManagerKey, ArtifactIsolationKey)
+    val keys  = Seq(CheckpointManagerKey, ArtifactIsolationKey, ListingThresholdKey)
     val prior = spark.conf.getAll.filter { case (k, _) => keys.contains(k) }
     try body(spark)
     finally keys.foreach(k => prior.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _)))
     assert(spark.conf.getAll.filter { case (k, _) => keys.contains(k) } == prior)
   }
 
+  private lazy val memoryInput: DataFrame = {
+    val spark = SparkTestSession.spark
+    import spark.implicits._
+    implicit val sqlCtx: SQLContext = spark.sqlContext
+    MemoryStream[(String, Long)].toDF()
+  }
+
+  private def fileInput(format: String): DataFrame =
+    SparkTestSession.spark.readStream.schema("key STRING, ts_ms LONG").format(format)
+      .load(Files.createTempDirectory(s"graft_install_$format").toString)
+
   test("install sets Spark's manager conf only when it is unset") {
     withStreamingKeys { spark =>
       def conf(k: String) = spark.conf.getAll.get(k)
       spark.conf.unset(CheckpointManagerKey)
       spark.conf.unset(ArtifactIsolationKey)
-      install(spark)
+      install(memoryInput)
       assert(conf(CheckpointManagerKey).contains(classOf[LocalCheckpointFileManager].getName))
       assert(conf(ArtifactIsolationKey).contains("false"))
 
       spark.conf.set(CheckpointManagerKey, "com.example.OtherManager")
       spark.conf.unset(ArtifactIsolationKey)
-      install(spark)
+      install(memoryInput)
       assert(conf(CheckpointManagerKey).contains("com.example.OtherManager"))
       assert(conf(ArtifactIsolationKey).contains("false"))
 
       for (isolation <- Seq("true", "false")) {
         spark.conf.unset(CheckpointManagerKey)
         spark.conf.set(ArtifactIsolationKey, isolation)
-        install(spark)
+        install(memoryInput)
         assert(conf(CheckpointManagerKey).contains(classOf[LocalCheckpointFileManager].getName))
         assert(conf(ArtifactIsolationKey).contains(isolation))
+      }
+    }
+  }
+
+  test("install keeps file listings on the driver for local file streams unless the user set the threshold") {
+    withStreamingKeys { spark =>
+      def threshold = spark.conf.getAll.get(ListingThresholdKey)
+      for (format <- Seq("parquet", "csv")) {
+        spark.conf.unset(ListingThresholdKey)
+        install(fileInput(format))
+        assert(threshold.contains(Int.MaxValue.toString), format)
+        spark.conf.unset(ListingThresholdKey)
+        install(memoryInput, fileInput(format))
+        assert(threshold.contains(Int.MaxValue.toString), s"memory + $format")
+      }
+
+      spark.conf.unset(ListingThresholdKey)
+      install(memoryInput)
+      assert(threshold.isEmpty, "no file source")
+
+      for (user <- Seq("32", "64")) {
+        spark.conf.set(ListingThresholdKey, user)
+        install(fileInput("parquet"))
+        assert(threshold.contains(user))
       }
     }
   }
@@ -186,5 +230,61 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
       assert(compiled > 0, "the query reused the first query's classes")
       assert(second == first)
     }
+  }
+
+  test("a 40-file drain batch of local files starts a listing job only at Spark's threshold of 32") {
+    withStreamingKeys { spark =>
+      spark.conf.unset(ListingThresholdKey)
+      val (byDefault, rows) = listingJobs(spark)
+      spark.conf.set(ListingThresholdKey, "32")
+      val (at32, rowsAt32) = listingJobs(spark)
+      assert(byDefault.isEmpty, byDefault.mkString("listing jobs: ", "; ", ""))
+      assert(at32.nonEmpty, "no listing job at threshold 32")
+      assert(rows.nonEmpty)
+      assert(rowsAt32 == rows)
+    }
+  }
+
+  /** 48 CSV files, each one 250 ms of events for two keys: the drain's
+    * first batch takes 40 of them, above Spark's listing threshold of 32.
+    */
+  private lazy val manyFiles: String = {
+    val dir = Files.createTempDirectory("graft_listing_in")
+    for (file <- 0 until 48) {
+      val rows = for (key <- Seq("k0", "k1"); j <- 0 until 3)
+        yield s"$key,${file * 250L + j},i${(file + j) % 5},${j + 1}"
+      Files.write(dir.resolve(f"part-$file%03d.csv"), rows.mkString("", "\n", "\n").getBytes(UTF_8))
+    }
+    dir.toString
+  }
+
+  /** Drains `manyFiles` through `TopKStreams.sliding` at 40 files per batch.
+    * Returns the descriptions of the listing jobs Spark started meanwhile,
+    * and the rows emitted, sorted.
+    */
+  private def listingJobs(spark: SparkSession): (Seq[String], Seq[String]) = {
+    val jobs = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(jobs.add(_))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val (_, rows) = StreamCodegenReuseSpec.freshRun { () =>
+        val input = spark.readStream.schema("key STRING, ts_ms LONG, item STRING, weight LONG")
+          .option("maxFilesPerTrigger", 40L).csv(manyFiles)
+          .select(col("key"), expr("timestamp_millis(ts_ms)").as("ts"), col("item"), col("weight"))
+        TopKStreams.sliding(input, 1000L, "0 seconds",
+          SlidingConfig.withDefaults(2, 2, width = 256, depth = 3), emitK = 2).toDF()
+      }
+      // listener events arrive in order: once a marker job is seen, so are the drain's jobs
+      val marker = s"listing_marker_${System.nanoTime()}"
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      eventually(timeout(Span(30, Seconds)))(assert(jobs.contains(marker)))
+      (jobs.asScala.filter(_.startsWith("Listing leaf files and directories")).toSeq, rows)
+    } finally sc.removeSparkListener(listener)
   }
 }
