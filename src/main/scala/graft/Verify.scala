@@ -2,7 +2,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB compare
+  * (src/test/resources/oracle_compare.py, which OracleSpec runs). */
 object Verify {
   def main(args: Array[String]): Unit = {
     require(args.length == 2,
@@ -19,9 +20,20 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    dump(spark, sfDir, outDir)
+    spark.stop()
+  }
+
+  /** Writes each registry query's rows on the tables in `sfDir` to
+    * `<outDir>/<name>/` as one parquet file, and every query's oracle SQL
+    * to `<outDir>/oracle_sql.json`. A query that fails is reported on
+    * stderr and leaves no output directory.
+    */
+  def dump(spark: SparkSession, sfDir: String, outDir: String): Unit = {
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+    SparkEntry.registry.foreach { query =>
+      val name = query.name
+      try query.run(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
@@ -52,6 +64,5 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }

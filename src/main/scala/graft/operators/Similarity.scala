@@ -28,8 +28,8 @@ object Similarity {
 
   /** Grid-kernel sizing defaults (see [[nearDupPairsBlocked]]): auto-sizing
     * targets ~64 MiB of vectors per block row; an explicit nBlocks implying
-    * more than 256 MiB per block fails fast. Overridable per session via
-    * spark.graft.grid.targetBlockBytes / spark.graft.grid.maxBlockBytes.
+    * more than 256 MiB per block fails fast. The bound is overridable per
+    * session via spark.graft.grid.maxBlockBytes.
     */
   private[graft] val GridTargetBlockBytes: Long = 64L << 20
   private[graft] val GridMaxBlockBytes: Long    = 256L << 20
@@ -59,12 +59,6 @@ object Similarity {
         .min(GridMaxBlocks).toInt
     math.min(GridMaxBlocks, math.max(16, math.max(byParallelism, byPayload)))
   }
-
-  /** Cosine similarity of two float-array columns, computed in double with
-    * left-to-right accumulation (deterministic, oracle-reproducible).
-    */
-  def cosine(a: Column, b: Column): Column =
-    VecDot(a, b) / (sqrt(VecDot(a, a)) * sqrt(VecDot(b, b)))
 
   /** Exact top-K neighbors for each query row (brute force).
     * @param corpus  (id long, vec array<float>)
@@ -313,23 +307,6 @@ object Similarity {
         col("neighbor_id"), round(col("similarity"), 6).as("similarity"))
   }
 
-  /** Exact (all-pairs) embedding near-duplicate pairs via a nested-loop
-    * self-join — kept as the differential baseline for the blocked/LSH
-    * variants; do not use at scale (O(n²) pairs through a
-    * BroadcastNestedLoopJoin).
-    */
-  def nearDupPairsBrute(df: DataFrame, id: Column, vec: Column,
-                        threshold: Double): DataFrame = {
-    val l = df.select(id.cast("long").as("a"), vec.as("va"))
-      .where(VecDot(col("va"), col("va")) > 0) // NaN-guard: see cosineTopK
-    val r = df.select(id.cast("long").as("b"), vec.as("vb"))
-      .where(VecDot(col("vb"), col("vb")) > 0)
-    l.join(r, col("a") < col("b"))
-      .withColumn("similarity", cosine(col("va"), col("vb")))
-      .where(col("similarity") >= threshold)
-      .select(col("a"), col("b"), round(col("similarity"), 6).as("similarity"))
-  }
-
   /** EXACT all-pairs cosine threshold join as a block-matrix grid self-join —
     * the scale path when the threshold is too low for LSH selectivity.
     *
@@ -352,7 +329,7 @@ object Similarity {
     * an undersized nBlocks turns a correct query into an executor OOM / 2 GB
     * array failure at scale, not a slow query. `nBlocks <= 0` (the default)
     * auto-sizes from planning-time stats: nBlocks = max(parallelism floor
-    * √(2·shufflePartitions), ceil(inputBytes / targetBlockBytes)), capped at
+    * √(2·shufflePartitions), ceil(inputBytes / 64 MiB)), capped at
     * 1024 (a 64 GB input — past which the n²/2 dot products are infeasible
     * anyway). Any nBlocks — explicit OR auto-sized at its cap — whose
     * implied per-block payload exceeds `spark.graft.grid.maxBlockBytes`
@@ -360,8 +337,7 @@ object Similarity {
     * Stats caveat (same as Dedup.exactJaccard): file-scan plans carry real
     * sizes; in-memory/synthetic plans may report the unknown sentinel, which
     * disables the payload term/guard — materialize such corpora to parquet
-    * first. Confs: spark.graft.grid.targetBlockBytes (default 64 MiB),
-    * spark.graft.grid.maxBlockBytes (default 256 MiB).
+    * first. Conf: spark.graft.grid.maxBlockBytes (default 256 MiB).
     *
     * The cell interior is a DENSE KERNEL, not a row join: each side's block
     * aggregates its vectors into one array row, the grid join matches
@@ -378,8 +354,6 @@ object Similarity {
     import spark.implicits._
     val projected = df.select(id.cast("long").as("id"), vec.as("v"))
     val estBytes  = projected.queryExecution.optimizedPlan.stats.sizeInBytes
-    val target    = spark.conf.getOption("spark.graft.grid.targetBlockBytes")
-      .map(_.toLong).getOrElse(GridTargetBlockBytes)
     val shuffleParts = spark.sessionState.conf.numShufflePartitions
     val maxBlock = spark.conf.getOption("spark.graft.grid.maxBlockBytes")
       .map(_.toLong).getOrElse(GridMaxBlockBytes)
@@ -395,8 +369,8 @@ object Similarity {
           s"nearDupPairsBlocked: $source nBlocks=$nb implies ~$perBlock B per " +
             s"block (input ~$estBytes B), over the $maxBlock B bound — each " +
             "block is ONE collect_list row, so an undersized grid OOMs at " +
-            "scale. Size nBlocks >= ceil(inputBytes/targetBlockBytes) = " +
-            s"${((estBytes + target - 1) / target).max(1)} (and >= " +
+            "scale. Size nBlocks >= ceil(inputBytes/64 MiB) = " +
+            s"${((estBytes + GridTargetBlockBytes - 1) / GridTargetBlockBytes).max(1)} (and >= " +
             f"sqrt(2*shufflePartitions) = ${math.sqrt(2.0 * shuffleParts)}%.0f " +
             "for parallelism), pass nBlocks <= 0 to auto-size, raise " +
             "spark.graft.grid.maxBlockBytes, or — if auto-sizing hit its " +
@@ -405,7 +379,7 @@ object Similarity {
       }
     val nb =
       if (nBlocks <= 0) {
-        val auto = autoGridBlocks(estBytes, shuffleParts, target)
+        val auto = autoGridBlocks(estBytes, shuffleParts, GridTargetBlockBytes)
         requireBlockFits(auto, "auto-sized")
         auto
       } else {

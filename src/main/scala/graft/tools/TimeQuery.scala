@@ -47,13 +47,14 @@ object TimeQuery {
     // round-3 bench failure mode), and this tool's minima become the
     // floor-guard baseline, where an inflated floor silently disarms the guard
     runs.foreach { case (_, run) => run() }
-    val samples = scala.collection.mutable.Map.empty[String, List[Double]]
-      .withDefaultValue(Nil)
+    // only the min is reported: the first timed reps still carry a JIT
+    // slope (1.27-1.45x the JVM's min at sf0.1), so the min is the floor
+    val best = scala.collection.mutable.Map.empty[String, Double]
+      .withDefaultValue(Double.PositiveInfinity)
     for (_ <- 1 to reps; (name, run) <- runs)
-      samples(name) ::= graft.Bench.time(run())._2
+      best(name) = best(name) min graft.Bench.time(run())._2
     runs.foreach { case (name, _) =>
-      val times = samples(name).reverse
-      println(f"[timequery] $name%-28s min=${times.min}%.2f s  all=${times.map(t => f"$t%.2f").mkString(",")}")
+      println(f"[timequery] $name%-28s min=${best(name)}%.2f s  reps=$reps")
     }
     spark.stop()
   }
