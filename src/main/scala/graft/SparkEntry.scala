@@ -17,13 +17,25 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object SparkEntry {
 
-  private def events(s: SparkSession, dir: String)    = s.read.parquet(s"$dir/events.parquet")
-  private def documents(s: SparkSession, dir: String) = s.read.parquet(s"$dir/documents.parquet")
+  /** `dir` with the glob characters \[]{}*? escaped: Spark globs every
+    * read path holding one, so `sf[1]` would otherwise match `sf1`, not
+    * itself.
+    */
+  private def globEscaped(dir: String): String =
+    dir.flatMap(c => if ("""\[]{}*?""".contains(c)) s"\\$c" else s"$c")
+
+  /** Batch read of the `<name>.parquet` table in `dir`, taken literally. */
+  private def table(s: SparkSession, dir: String, name: String): DataFrame =
+    s.read.parquet(s"${globEscaped(dir)}/$name.parquet")
+
+  private def events(s: SparkSession, dir: String)    = table(s, dir, "events")
+  private def documents(s: SparkSession, dir: String) = table(s, dir, "documents")
   // ASCII-only docs (chars == bytes) — the multimodal oracle parity filter;
   // see the comment at the multimodal query block
   private def asciiDocuments(s: SparkSession, dir: String) =
     documents(s, dir).where(length(col("text")) === octet_length(col("text")))
-  private def lineitem(s: SparkSession, dir: String)  = s.read.parquet(s"$dir/lineitem.parquet")
+  private def lineitem(s: SparkSession, dir: String)  = table(s, dir, "lineitem")
+  private def embeddings(s: SparkSession, dir: String) = table(s, dir, "embeddings")
 
   // Collision-free geometry at verification scale: width >> distinct items.
   private val cfgWide  = SketchConfig.withDefaults(k = 5, width = 1024, depth = 3)
@@ -89,15 +101,14 @@ object SparkEntry {
 
   /** The events table as a parquet file-source stream. The file source
     * refuses a plain file path (its base path must be a directory), so the
-    * path is a glob that matches only `events.parquet`, with the glob
-    * characters in `dir` escaped. Watermarks require TIMESTAMP (the
+    * path is a glob that matches only `events.parquet`, with `dir` taken
+    * literally as in the batch reads. Watermarks require TIMESTAMP (the
     * testdata is NTZ; the session must be UTC so the queries' cast is
     * value-preserving — they cast back for oracle parity).
     */
   private def eventsStream(s: SparkSession, dir: String): DataFrame = {
     requireUtc(s)
-    val escapedDir = dir.flatMap(c => if ("""\[]{}*?""".contains(c)) s"\\$c" else s"$c")
-    s.readStream.schema(events(s, escapedDir).schema).parquet(s"$escapedDir/events.parque[t]")
+    s.readStream.schema(events(s, dir).schema).parquet(s"${globEscaped(dir)}/events.parque[t]")
   }
 
   /** Run `out` to completion (`AvailableNow`, fresh checkpoint) into a fresh
@@ -552,7 +563,7 @@ object SparkEntry {
     },
 
     Query("ann_cosine_topk", annTop10Sql) { (s, dir) =>
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = embeddings(s, dir)
       graft.operators.Similarity.cosineTopK(
         emb, col("vec_id"), col("embedding"),
         emb.where(col("vec_id") < 5), col("vec_id"), col("embedding"), k = 10)
@@ -567,7 +578,7 @@ object SparkEntry {
     Query("ann_cosine_topk_ivf",
       // probing ALL cells makes IVF exhaustive: same oracle as the exact path
       annTop10Sql) { (s, dir) =>
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = embeddings(s, dir)
       graft.operators.Similarity.ivfCosineTopK(
         emb, col("vec_id"), col("embedding"),
         emb.where(col("vec_id") < 5), col("vec_id"), col("embedding"), k = 10,
@@ -589,7 +600,7 @@ object SparkEntry {
       // the verification SFs, and the rerank/verify stage is exact, so the
       // approximate plans must reproduce the exact answers bit-for-bit
       annTop10Sql) { (s, dir) =>
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = embeddings(s, dir)
       graft.operators.Similarity.lshCosineTopK(
         emb, col("vec_id"), col("embedding"),
         emb.where(col("vec_id") < 5), col("vec_id"), col("embedding"),
@@ -611,7 +622,7 @@ object SparkEntry {
            AND list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
                                       CAST(b.embedding AS DOUBLE[])) >= 0.5""") { (s, dir) =>
       graft.operators.Similarity.nearDupPairs(
-        s.read.parquet(s"$dir/embeddings.parquet"), col("vec_id"), col("embedding"),
+        embeddings(s, dir), col("vec_id"), col("embedding"),
         threshold = 0.5, nBits = 64, bands = 16)
     },
 
@@ -627,7 +638,7 @@ object SparkEntry {
            AND list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
                                       CAST(b.embedding AS DOUBLE[])) >= 0.42""") { (s, dir) =>
       graft.operators.Similarity.nearDupPairsBlocked(
-        s.read.parquet(s"$dir/embeddings.parquet"), col("vec_id"), col("embedding"),
+        embeddings(s, dir), col("vec_id"), col("embedding"),
         threshold = 0.42) // nBlocks auto-sized from file-scan stats
     },
 

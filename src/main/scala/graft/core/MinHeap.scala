@@ -23,53 +23,67 @@ final case class TopKEntry(fingerprint: Int, item: String, count: Long)
   *     never updated below minCount; the stale higher count persists until
   *     the next admissible update or a reinit/recount;
   *   - `reinit`: re-heapify, then pop all zero-count entries (heap/heap.go:48-55).
+  *
+  * Each entry lives in a stable id slot (item, fingerprint, count) from its
+  * insert until its eviction or pop; the heap orders ids (`heapIds(pos)`,
+  * with `posOf(id)` its inverse), so a sift moves ints and the item→id index
+  * changes only on insert, evict and pop. Positions — what `itemAt(i)` and
+  * `entries` walk — are exactly those of a heap of whole entries.
   */
 final class MinHeap(val k: Int) extends Serializable {
-  private var _size                      = 0
-  private val itemsArr: Array[String]    = new Array[String](math.max(k, 1))
-  private val fpArr: Array[Int]          = new Array[Int](math.max(k, 1))
-  private val countArr: Array[Long]      = new Array[Long](math.max(k, 1))
-  private val index                      = new mutable.AnyRefMap[String, Int](k * 2)
+  private var _size                   = 0
+  private val slots                   = math.max(k, 1)
+  private val items: Array[String]    = new Array[String](slots)
+  private val fps: Array[Int]         = new Array[Int](slots)
+  private val counts: Array[Long]     = new Array[Long](slots)
+  // a permutation of the ids: heapIds(0 until size) is the heap, the rest free
+  private val heapIds: Array[Int]     = Array.range(0, slots)
+  private val posOf: Array[Int]       = Array.range(0, slots)
+  private val index                   = new mutable.AnyRefMap[String, Int](k * 2)
 
   def size: Int      = _size
   def isFull: Boolean = _size == k
   def isEmpty: Boolean = _size == 0
 
   /** Minimum tracked count; 0 when empty (heap/heap.go:102-107). */
-  def minCount: Long = if (_size == 0) 0L else countArr(0)
+  def minCount: Long = if (_size == 0) 0L else counts(heapIds(0))
 
   def contains(item: String): Boolean = index.contains(item)
-  def find(item: String): Int         = index.getOrElse(item, -1)
+
+  /** Heap position of `item`, or -1 when it is not tracked. */
+  def find(item: String): Int = {
+    val id = index.getOrElse(item, -1)
+    if (id < 0) -1 else posOf(id)
+  }
 
   def get(item: String): Option[TopKEntry] = {
-    val i = find(item)
-    if (i < 0) None else Some(TopKEntry(fpArr(i), itemsArr(i), countArr(i)))
+    val id = index.getOrElse(item, -1)
+    if (id < 0) None else Some(TopKEntry(fps(id), items(id), counts(id)))
   }
 
   def countOf(item: String): Long = {
-    val i = find(item)
-    if (i < 0) -1L else countArr(i)
+    val id = index.getOrElse(item, -1)
+    if (id < 0) -1L else counts(id)
   }
 
-  def itemAt(i: Int): String     = itemsArr(i)
-  def fingerprintAt(i: Int): Int = fpArr(i)
-  def countAt(i: Int): Long      = countArr(i)
-  def setCountAt(i: Int, c: Long): Unit = countArr(i) = c
+  def itemAt(i: Int): String     = items(heapIds(i))
+  def fingerprintAt(i: Int): Int = fps(heapIds(i))
+  def countAt(i: Int): Long      = counts(heapIds(i))
+  def setCountAt(i: Int, c: Long): Unit = counts(heapIds(i)) = c
 
   @inline private def less(i: Int, j: Int): Boolean = {
-    val ci = countArr(i); val cj = countArr(j)
+    val a = heapIds(i); val b = heapIds(j)
+    val ca = counts(a); val cb = counts(b)
     // tie-break by code point (== UTF-8 byte order), matching the Go
     // reference's string `<`, Spark's UTF8String and DuckDB — NOT Java's
     // UTF-16-unit compareTo (diverges on supplementary characters)
-    if (ci == cj) SketchOps.compareItems(itemsArr(i), itemsArr(j)) < 0 else ci < cj
+    if (ca == cb) SketchOps.compareItems(items(a), items(b)) < 0 else ca < cb
   }
 
   @inline private def swap(i: Int, j: Int): Unit = {
-    val ti = itemsArr(i); itemsArr(i) = itemsArr(j); itemsArr(j) = ti
-    val tf = fpArr(i); fpArr(i) = fpArr(j); fpArr(j) = tf
-    val tc = countArr(i); countArr(i) = countArr(j); countArr(j) = tc
-    index(itemsArr(i)) = i
-    index(itemsArr(j)) = j
+    val a = heapIds(i); val b = heapIds(j)
+    heapIds(i) = b; posOf(b) = i
+    heapIds(j) = a; posOf(a) = j
   }
 
   private def siftUp(start: Int): Unit = {
@@ -108,56 +122,60 @@ final class MinHeap(val k: Int) extends Serializable {
   def update(item: String, fingerprint: Int, count: Long): Boolean = {
     if (count < minCount && isFull) return false // not in top-K: ignore
 
-    val i = find(item)
-    if (i >= 0) { // already tracked: overwrite count (up or down) and re-fix
-      countArr(i) = count
-      fix(i)
+    val tracked = index.getOrElse(item, -1)
+    if (tracked >= 0) { // already tracked: overwrite count (up or down) and re-fix
+      counts(tracked) = count
+      fix(posOf(tracked))
       return true
     }
 
-    if (!isFull) { // room available: push
-      itemsArr(_size) = item
-      fpArr(_size) = fingerprint
-      countArr(_size) = count
-      index(item) = _size
+    if (!isFull) { // room available: push into the free id at position size
+      val id = heapIds(_size)
+      put(id, item, fingerprint, count)
       _size += 1
       siftUp(_size - 1)
       return true
     }
 
-    // full: replace the minimum (root) and sift
-    index.remove(itemsArr(0))
-    itemsArr(0) = item
-    fpArr(0) = fingerprint
-    countArr(0) = count
-    index(item) = 0
+    // full: the new item takes over the minimum's (root's) id, then sifts
+    val root = heapIds(0)
+    index.remove(items(root))
+    put(root, item, fingerprint, count)
     fix(0)
     true
+  }
+
+  private def put(id: Int, item: String, fingerprint: Int, count: Long): Unit = {
+    items(id) = item
+    fps(id) = fingerprint
+    counts(id) = count
+    index(item) = id
   }
 
   /** Re-heapify and drop all zero-count entries (reference: heap/heap.go:48-55). */
   def reinit(): Unit = {
     var i = _size / 2 - 1
     while (i >= 0) { siftDown(i); i -= 1 }
-    while (_size > 0 && countArr(0) == 0) pop()
+    while (_size > 0 && counts(heapIds(0)) == 0) pop()
   }
 
+  /** Move the last entry to the root and sift it down; the popped root's id
+    * goes free at the old last position.
+    */
   private def pop(): Unit = {
-    index.remove(itemsArr(0))
+    val root = heapIds(0)
+    index.remove(items(root))
+    items(root) = null
     _size -= 1
     if (_size > 0) {
-      itemsArr(0) = itemsArr(_size)
-      fpArr(0) = fpArr(_size)
-      countArr(0) = countArr(_size)
-      index(itemsArr(0)) = 0
+      swap(0, _size)
       siftDown(0)
     }
-    itemsArr(_size) = null
   }
 
   def reset(): Unit = {
     var i = 0
-    while (i < _size) { itemsArr(i) = null; i += 1 }
+    while (i < _size) { items(heapIds(i)) = null; i += 1 }
     index.clear()
     _size = 0
   }
@@ -166,7 +184,11 @@ final class MinHeap(val k: Int) extends Serializable {
   def entries: Array[TopKEntry] = {
     val out = new Array[TopKEntry](_size)
     var i   = 0
-    while (i < _size) { out(i) = TopKEntry(fpArr(i), itemsArr(i), countArr(i)); i += 1 }
+    while (i < _size) {
+      val id = heapIds(i)
+      out(i) = TopKEntry(fps(id), items(id), counts(id))
+      i += 1
+    }
     out
   }
 
@@ -180,7 +202,7 @@ final class MinHeap(val k: Int) extends Serializable {
   def sizeBytes: Long = {
     var keyBytes = 0L
     var i        = 0
-    while (i < _size) { keyBytes += itemsArr(i).length; i += 1 }
+    while (i < _size) { keyBytes += itemAt(i).length; i += 1 }
     40L + k.toLong * 24 + keyBytes + index.size.toLong * 48
   }
 }

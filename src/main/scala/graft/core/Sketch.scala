@@ -91,6 +91,11 @@ abstract class HeavyKeeper private[core] (private val params: HeavyKeeperParams)
   val heap: MinHeap            = new MinHeap(params.k)
   val rng: Rng                 = new Rng(params.seed)
 
+  /** `Hashing.place` output of the item being added or re-estimated: its
+    * fingerprint, then its bucket in each row.
+    */
+  private val placement = new Array[Int](depth + 1)
+
   /** Each bucket's current count, the one the point estimate reads. */
   protected def bucketCounts: Array[Long]
 
@@ -141,11 +146,12 @@ abstract class HeavyKeeper private[core] (private val params: HeavyKeeperParams)
     // owned bucket negative or claim an empty bucket with count <= 0 (which
     // would break the count==0 empty-bucket sentinel and heap invariants)
     if (increment <= 0L) return false
-    val fingerprint = Hashing.fingerprintAt(base, offset, len)
+    Hashing.place(base, offset, len, depth, width, placement)
+    val fingerprint = placement(0)
     var maxCount    = 0L
     var row         = 0
     while (row < depth) {
-      val c = updateBucket(Hashing.bucketIndexAt(base, offset, len, row, width), fingerprint, increment)
+      val c = updateBucket(placement(row + 1), fingerprint, increment)
       if (c > maxCount) maxCount = c
       row += 1
     }
@@ -184,9 +190,24 @@ abstract class HeavyKeeper private[core] (private val params: HeavyKeeperParams)
   def count(item: String): Long = {
     val tracked = heap.countOf(item)
     if (tracked >= 0) return tracked
-    val bytes = item.getBytes(StandardCharsets.UTF_8)
-    SketchOps.estimate(bytes, Hashing.fingerprint(bytes), fingerprints, bucketCounts, depth, width)
+    // its own placement array: a point query writes no sketch state
+    val place = new Array[Int](depth + 1)
+    Hashing.place(item.getBytes(StandardCharsets.UTF_8), depth, width, place)
+    SketchOps.estimate(place, place(0), fingerprints, bucketCounts, depth)
   }
+
+  /** Places `item` into the sketch's placement array and returns its
+    * fingerprint; for the merge rebuild and the sliding recount, which own
+    * the sketch while they run.
+    */
+  protected final def placeItem(item: String): Int = {
+    Hashing.place(item.getBytes(StandardCharsets.UTF_8), depth, width, placement)
+    placement(0)
+  }
+
+  /** Point estimate of the item last placed, read against fingerprint `fp`. */
+  protected final def placedEstimate(fp: Int): Long =
+    SketchOps.estimate(placement, fp, fingerprints, bucketCounts, depth)
 
   /** Top-K membership (reference: sketch.go:172-175). */
   def query(item: String): Boolean = heap.contains(item)
@@ -221,9 +242,8 @@ abstract class HeavyKeeper private[core] (private val params: HeavyKeeperParams)
   protected final def rebuildHeapFromUnion(other: HeavyKeeper): Unit = {
     val candidates = (heap.entries ++ other.heap.entries).map(_.item).distinct
     val estimated = candidates.map { it =>
-      val bytes = it.getBytes(StandardCharsets.UTF_8)
-      val fp    = Hashing.fingerprint(bytes)
-      TopKEntry(fp, it, SketchOps.estimate(bytes, fp, fingerprints, bucketCounts, depth, width))
+      val fp = placeItem(it)
+      TopKEntry(fp, it, placedEstimate(fp))
     }
     heap.reset()
     estimated.filter(_.count > 0).sortWith(SketchOps.entryOrder).take(params.k).foreach { e =>
@@ -265,19 +285,19 @@ final class Sketch(val cfg: SketchConfig) extends HeavyKeeper(cfg) {
 
   /** Write the decimal representation of v into `scratch`; returns length. */
   private def encodeInt(v: Int): Int = {
-    var x = v
-    if (x == Int.MinValue) { // cannot negate; rare, fall back
-      val s = java.lang.Integer.toString(x); val b = s.getBytes(StandardCharsets.UTF_8)
+    if (v == Int.MinValue) { // cannot negate; rare, fall back
+      val s = java.lang.Integer.toString(v); val b = s.getBytes(StandardCharsets.UTF_8)
       System.arraycopy(b, 0, scratch, 0, b.length); return b.length
     }
-    val neg = x < 0
-    if (neg) x = -x
-    // write digits backwards into the tail, then shift to the front
-    var p = scratch.length
+    val neg = v < 0
+    var x   = if (neg) -v else v
+    // count the digits, then write them in place from the last one back
+    var digits = 1
+    while (digits < Sketch.Pow10.length && x >= Sketch.Pow10(digits)) digits += 1
+    val len = if (neg) digits + 1 else digits
+    if (neg) scratch(0) = '-'
+    var p = len
     do { p -= 1; scratch(p) = ('0' + x % 10).toByte; x /= 10 } while (x != 0)
-    if (neg) { p -= 1; scratch(p) = '-' }
-    val len = scratch.length - p
-    System.arraycopy(scratch, p, scratch, 0, len)
     len
   }
 
@@ -357,4 +377,9 @@ object Sketch {
     * distribution is preserved.
     */
   final val GeometricSkipThreshold: Long = 4096L
+
+  /** 10^0 to 10^9: a non-negative Int has n digits iff it is at least
+    * 10^(n-1) and below 10^n.
+    */
+  private val Pow10: Array[Int] = Array.iterate(1, 10)(_ * 10)
 }

@@ -90,15 +90,16 @@ private[core] object SketchOps {
     c
   }
 
-  /** Max count over the item's buckets whose fingerprint is `fp`, else 0
-    * (reference: sketch.go:90-111).
+  /** Max count over an item's buckets whose fingerprint is `fp`, else 0
+    * (reference: sketch.go:90-111). `placement` is the item's
+    * `Hashing.place` output: its bucket in row r at `placement(1 + r)`.
     */
-  def estimate(bytes: Array[Byte], fp: Int, fingerprints: Array[Int], counts: Array[Long],
-               depth: Int, width: Int): Long = {
+  def estimate(placement: Array[Int], fp: Int, fingerprints: Array[Int], counts: Array[Long],
+               depth: Int): Long = {
     var mx  = 0L
     var row = 0
     while (row < depth) {
-      val idx = Hashing.bucketIndex(bytes, row, width)
+      val idx = placement(row + 1)
       if (fingerprints(idx) == fp && counts(idx) > mx) mx = counts(idx)
       row += 1
     }

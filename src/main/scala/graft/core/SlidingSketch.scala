@@ -1,7 +1,5 @@
 package graft.core
 
-import java.nio.charset.StandardCharsets
-
 /** Sliding-window sketch configuration (reference: sliding/sketch.go:45-80,
   * sliding/options.go): plain defaults plus `windowSize` (N ticks) and
   * `bucketHistoryLength` (ring slots per bucket; defaults to windowSize,
@@ -178,9 +176,8 @@ final class SlidingSketch(val cfg: SlidingConfig) extends HeavyKeeper(cfg) {
     var i = 0
     while (i < heap.size) {
       if (heap.countAt(i) != 0L) {
-        val bytes = heap.itemAt(i).getBytes(StandardCharsets.UTF_8)
-        heap.setCountAt(i,
-          SketchOps.estimate(bytes, heap.fingerprintAt(i), fingerprints, countsSum, depth, width))
+        placeItem(heap.itemAt(i))
+        heap.setCountAt(i, placedEstimate(heap.fingerprintAt(i)))
       }
       i += 1
     }

@@ -15,18 +15,18 @@ import org.apache.spark.unsafe.Platform
   * All arithmetic is mod 2^32 — JVM `Int` overflow gives exactly that.
   */
 object XxHash32 {
-  private final val P1 = 0x9e3779b1 // 2654435761
-  private final val P2 = 0x85ebca77 // 2246822519
-  private final val P3 = 0xc2b2ae3d // 3266489917
-  private final val P4 = 668265263
-  private final val P5 = 374761393
+  private[core] final val P1 = 0x9e3779b1 // 2654435761
+  private[core] final val P2 = 0x85ebca77 // 2246822519
+  private[core] final val P3 = 0xc2b2ae3d // 3266489917
+  private[core] final val P4 = 668265263
+  private[core] final val P5 = 374761393
 
   // Platform.getInt reads in NATIVE byte order; XXH32 reads little-endian, so
   // byte-swap on big-endian JVMs
   private final val BigEndian =
     java.nio.ByteOrder.nativeOrder() == java.nio.ByteOrder.BIG_ENDIAN
 
-  @inline private def readLE(base: AnyRef, i: Long): Int = {
+  @inline private[core] def readLE(base: AnyRef, i: Long): Int = {
     val v = Platform.getInt(base, i)
     if (BigEndian) Integer.reverseBytes(v) else v
   }
@@ -81,12 +81,43 @@ object XxHash32 {
       h = Integer.rotateLeft(h + (Platform.getByte(base, i) & 0xff) * P5, 11) * P1
       i += 1
     }
+    avalanche(h)
+  }
+
+  @inline private def avalanche(h0: Int): Int = {
+    var h = h0
     h ^= h >>> 15
     h *= P2
     h ^= h >>> 13
     h *= P3
     h ^= h >>> 16
     h
+  }
+
+  /** XXH32 with `seed` of an input under 16 bytes long, given its 4-byte
+    * words already multiplied by P3 (`w0..w2`, the first `words` of them)
+    * and its tail bytes already multiplied by P5 (`t0..t2`, the first
+    * `tail`): the seed only enters the accumulator, so these products can
+    * be shared by every seed the same input is hashed with.
+    */
+  @inline private[core] def hashShort(seed: Int, len: Int, words: Int, w0: Int, w1: Int, w2: Int,
+                                      tail: Int, t0: Int, t1: Int, t2: Int): Int = {
+    var h = seed + P5 + len
+    if (words > 0) {
+      h = Integer.rotateLeft(h + w0, 17) * P4
+      if (words > 1) {
+        h = Integer.rotateLeft(h + w1, 17) * P4
+        if (words > 2) h = Integer.rotateLeft(h + w2, 17) * P4
+      }
+    }
+    if (tail > 0) {
+      h = Integer.rotateLeft(h + t0, 11) * P1
+      if (tail > 1) {
+        h = Integer.rotateLeft(h + t1, 11) * P1
+        if (tail > 2) h = Integer.rotateLeft(h + t2, 11) * P1
+      }
+    }
+    avalanche(h)
   }
 }
 
@@ -96,37 +127,50 @@ object Hashing {
   final val FingerprintSeed = 4848280
 
   /** Raw 32-bit fingerprint of an item (reference: hash.go:8-10). */
-  @inline def fingerprint(bytes: Array[Byte]): Int =
-    XxHash32.hash(bytes, FingerprintSeed)
-
-  @inline def fingerprint(bytes: Array[Byte], off: Int, len: Int): Int =
-    XxHash32.hash(bytes, off, len, FingerprintSeed)
-
-  @inline def fingerprint(item: String): Int =
+  def fingerprint(item: String): Int =
     XxHash32.hashString(item, FingerprintSeed)
 
-  /** Fingerprint of `len` bytes at `offset` of a `Platform` memory base. */
-  @inline def fingerprintAt(base: AnyRef, offset: Long, len: Int): Int =
-    XxHash32.hashUnsafe(base, offset, len, FingerprintSeed)
-
-  /** Flat bucket index of the item at `offset` of a `Platform` memory base in
-    * `row` of a d×w sketch (reference: hash.go:13-16). Go computes
-    * `int(uint32) % width` — a non-negative 64-bit mod; mirror that by
-    * widening the unsigned 32-bit value to Long before the mod.
+  /** The placement of the `len` bytes at `offset` of a `Platform` memory base
+    * in a depth×width sketch, from one read of the bytes: `out(0)` gets the
+    * fingerprint and `out(1 + row)` the flat bucket index in each row
+    * (reference: hash.go:5-16). A row's column is its row-seeded XXH32 mod
+    * width; Go computes `int(uint32) % width`, a non-negative 64-bit mod, so
+    * the unsigned 32-bit value is widened to Long before the mod. `out`
+    * holds at least depth + 1 ints. The caller guarantees the range is
+    * readable.
     */
-  @inline def bucketIndexAt(base: AnyRef, offset: Long, len: Int, row: Int, width: Int): Int = {
-    val h = XxHash32.hashUnsafe(base, offset, len, row)
+  def place(base: AnyRef, offset: Long, len: Int, depth: Int, width: Int, out: Array[Int]): Unit = {
+    if (len >= 16) {
+      out(0) = XxHash32.hashUnsafe(base, offset, len, FingerprintSeed)
+      var row = 0
+      while (row < depth) {
+        out(row + 1) = column(XxHash32.hashUnsafe(base, offset, len, row), row, width)
+        row += 1
+      }
+    } else {
+      import XxHash32.{P3, P5, readLE}
+      val words = len >>> 2
+      val tail  = len & 3
+      val w0    = if (words > 0) readLE(base, offset) * P3 else 0
+      val w1    = if (words > 1) readLE(base, offset + 4) * P3 else 0
+      val w2    = if (words > 2) readLE(base, offset + 8) * P3 else 0
+      val at    = offset + (words << 2)
+      val t0    = if (tail > 0) (Platform.getByte(base, at) & 0xff) * P5 else 0
+      val t1    = if (tail > 1) (Platform.getByte(base, at + 1) & 0xff) * P5 else 0
+      val t2    = if (tail > 2) (Platform.getByte(base, at + 2) & 0xff) * P5 else 0
+      out(0) = XxHash32.hashShort(FingerprintSeed, len, words, w0, w1, w2, tail, t0, t1, t2)
+      var row = 0
+      while (row < depth) {
+        out(row + 1) = column(XxHash32.hashShort(row, len, words, w0, w1, w2, tail, t0, t1, t2), row, width)
+        row += 1
+      }
+    }
+  }
+
+  /** The placement of a whole byte array (see the `Platform` overload). */
+  def place(bytes: Array[Byte], depth: Int, width: Int, out: Array[Int]): Unit =
+    place(bytes, Platform.BYTE_ARRAY_OFFSET, bytes.length, depth, width, out)
+
+  @inline private def column(h: Int, row: Int, width: Int): Int =
     row * width + ((h & 0xffffffffL) % width).toInt
-  }
-
-  @inline def bucketIndex(bytes: Array[Byte], off: Int, len: Int, row: Int, width: Int): Int = {
-    java.util.Objects.checkFromIndexSize(off, len, bytes.length)
-    bucketIndexAt(bytes, Platform.BYTE_ARRAY_OFFSET + off, len, row, width)
-  }
-
-  @inline def bucketIndex(bytes: Array[Byte], row: Int, width: Int): Int =
-    bucketIndex(bytes, 0, bytes.length, row, width)
-
-  @inline def bucketIndex(item: String, row: Int, width: Int): Int =
-    bucketIndex(item.getBytes(java.nio.charset.StandardCharsets.UTF_8), row, width)
 }

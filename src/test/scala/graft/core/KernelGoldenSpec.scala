@@ -12,7 +12,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * geometries so collisions, decays and takeovers all happen. The sliding
   * stream ticks between adds, including one `ticks(n)` jump that takes the
   * full-clear fast path. Each fixture's blob, top-K rows and point estimates
-  * are pinned, as are both merges.
+  * are pinned, as are both merges. The heap-churn fixtures pin, by SHA-256
+  * of the blob, a k=64 sketch after 200k power-law adds (where most adds
+  * reach the heap and evict), its merge, and a sliding sketch whose ticks
+  * pop entries from a full heap until it is empty.
   */
 class KernelGoldenSpec extends AnyFunSuite {
   import KernelGoldenSpec._
@@ -44,6 +47,31 @@ class KernelGoldenSpec extends AnyFunSuite {
     val s = slidingFixture("").merge(slidingFixture("b"))
     check("merged sliding blob", hex(SketchCodec.encodeSliding(s)), goldenSlidingMerged)
     check("merged sliding rows", rows(s.sortedSlice), goldenSlidingMergedRows)
+  }
+
+  test("heap churn: 200k power-law adds into a k=64 512x4 sketch, and its merge") {
+    val a = churnFixture(1L)
+    check("churn blob", sha256(SketchCodec.encode(a)), goldenChurn)
+    check("churn rows", rows(a.sortedSlice.take(8)), goldenChurnRows)
+    val m = a.merge(churnFixture(2L))
+    check("churn merged blob", sha256(SketchCodec.encode(m)), goldenChurnMerged)
+    check("churn merged rows", rows(m.sortedSlice.take(8)), goldenChurnMergedRows)
+  }
+
+  test("heap churn: a sliding sketch ticked until reinit pops entries") {
+    val s     = slidingChurnFixture()
+    val sizes = Seq.newBuilder[Int]
+    val blobs = new java.io.ByteArrayOutputStream()
+    blobs.write(SketchCodec.encodeSliding(s))
+    while (s.heap.size > 0) {
+      s.tick()
+      sizes += s.heap.size
+      blobs.write(SketchCodec.encodeSliding(s))
+    }
+    val trace = sizes.result()
+    assert(trace.exists(n => n > 0 && n < slidingChurnCfg.k), s"no partial pop in $trace")
+    check("sliding churn sizes", trace.mkString(","), goldenSlidingChurnSizes)
+    check("sliding churn blobs", sha256(blobs.toByteArray), goldenSlidingChurn)
   }
 }
 
@@ -131,6 +159,70 @@ object KernelGoldenSpec {
 
   def hex(b: Array[Byte]): String = b.map(x => f"${x & 0xff}%02x").mkString
 
+  def sha256(b: Array[Byte]): String = hex(java.security.MessageDigest.getInstance("SHA-256").digest(b))
+
+  val churnCfg: SketchConfig =
+    SketchConfig(k = 64, width = 512, depth = 4, decay = 0.9f, lutSize = 256, seed = 7L)
+  val slidingChurnCfg: SlidingConfig = SlidingConfig(k = 32, width = 128, depth = 3,
+    windowSize = 16, bucketHistoryLength = 4, decay = 0.9f, lutSize = 256, seed = 7L)
+
+  /** One op of a seeded power-law replay: a rank drawn log-uniformly (a
+    * uniform magnitude 0..15, then uniform below 2^magnitude), so rank r
+    * comes up about as often as 1/r; and a weight that is mostly 1, now and
+    * then 2..8, and every ~4000th op above `Sketch.GeometricSkipThreshold`.
+    */
+  private def churnOp(rng: Rng): (Int, Long) = {
+    val mag  = (rng.nextLong() >>> 60).toInt
+    val rank = ((rng.nextLong() >>> 1) & ((1L << mag) - 1)).toInt
+    val r    = (rng.nextLong() >>> 33).toInt
+    val w =
+      if (r % 4001 == 0) Sketch.GeometricSkipThreshold + r % 3000
+      else if (r % 97 == 0) (r % 7 + 2).toLong
+      else 1L
+    (rank, w)
+  }
+
+  /** The item of a rank: a token, a short or a >=16-byte string, some non-ASCII. */
+  private def churnItem(rank: Int): String = rank % 5 match {
+    case 0 | 1 => (if (rank % 2 == 0) rank else -rank).toString
+    case 2     => s"w$rank"
+    case 3     => s"\u00fc$rank\u20ac"
+    case _     => s"a-longer-item-name-$rank"
+  }
+
+  /** 200k power-law adds mixing `addToken`, `add(String)` and `addUnsafe`. */
+  def churnFixture(seed: Long): Sketch = {
+    val s   = new Sketch(churnCfg)
+    val rng = new Rng(seed)
+    val buf = new Array[Byte](64)
+    for (i <- 0 until 200000) {
+      val (rank, w) = churnOp(rng)
+      val item      = churnItem(rank)
+      rank % 5 match {
+        case 0 | 1 => s.addToken(item.toInt, w)
+        case _ if i % 2 == 0 => s.add(item, w)
+        case _ =>
+          val b = item.getBytes(UTF_8)
+          System.arraycopy(b, 0, buf, 3, b.length)
+          val u = UTF8String.fromBytes(buf, 3, b.length)
+          s.addUnsafe(u.getBaseObject, u.getBaseOffset, u.numBytes, w)
+      }
+    }
+    s
+  }
+
+  /** 40k power-law adds with a tick every 1000 adds. */
+  def slidingChurnFixture(): SlidingSketch = {
+    val s   = new SlidingSketch(slidingChurnCfg)
+    val rng = new Rng(3L)
+    for (i <- 0 until 40000) {
+      val (rank, w) = churnOp(rng)
+      s.add(churnItem(rank), w)
+      if (i % 1000 == 999) s.tick()
+    }
+    s
+  }
+
   val goldenPlain = """
       544b50320000000400000008000000023f66666600000100000000000000002a4e415c4b3ba13c8000000010d46c3948
       000000000000000e37813106000000000000000114a21fc40000000000001744acdd84fd000000000000002a60a354ab
@@ -193,4 +285,14 @@ object KernelGoldenSpec {
       0337813106000000056170706c6500000000000000122e0c3d8f000000046269673300000000000027132a12134b0000
       0004626967310000000000002712"""
   val goldenSlidingMergedRows = "big3=10003@2e0c3d8f;big1=10002@2a12134b;apple=18@37813106"
+  val goldenChurn = "14d7895e6364e55cdf74227c2e1de01dc372548ab4a37dcd26bd7d045edeeb3d"
+  val goldenChurnRows =
+    "0=72811@edd54dfd;-1=48670@87ebee00;\\u00fc3\\u20ac=13224@35428694;w7=11859@38a99aad;" +
+    "w2=10677@467a2352;6=9635@0bc1262e;-5=9099@b695fb6d;w22=7636@8a42b0b0"
+  val goldenChurnMerged = "ff34f19ef931bc6e93ae7d07971b329838e4768405e9e296a1971f1b77f1a0e9"
+  val goldenChurnMergedRows =
+    "0=126004@edd54dfd;-1=73554@87ebee00;-5=28503@b695fb6d;\\u00fc3\\u20ac=24919@35428694;" +
+    "w2=17148@467a2352;\\u00fc13\\u20ac=16517@cb893332;w7=15211@38a99aad;a-longer-item-name-9=13774@f21ed44f"
+  val goldenSlidingChurnSizes = "32,32,32,32,32,32,32,32,32,32,32,32,30,19,0"
+  val goldenSlidingChurn = "be972a691b6028c21ed50fbe649ad0c28a0273af8359911fe70e64906309deab"
 }

@@ -118,4 +118,53 @@ class MinHeapSpec extends AnyFunSuite {
     h.update("abcdefgh", fp("abcdefgh"), 5)
     assert(h.sizeBytes > s0)
   }
+
+  test("randomized: update, setCountAt+reinit and reset agree with a naive model of heap/heap.go") {
+    // items with many count ties, including a supplementary character that
+    // sorts after every BMP one by code point
+    val universe = (0 until 24).map(i => s"i${i % 7}" + "\uD83D\uDE00" * (i % 2) + "\uFFFD" * (i % 3))
+    val rnd      = new scala.util.Random(20)
+    for (k <- Seq(1, 2, 3, 8, 16)) {
+      val h     = new MinHeap(k)
+      val model = scala.collection.mutable.LinkedHashMap.empty[String, (Int, Long)]
+      def modelMin: Option[(String, Long)] =
+        model.toSeq.map { case (it, (_, c)) => (it, c) }
+          .sortWith((a, b) => a._2 < b._2 || (a._2 == b._2 && SketchOps.compareItems(a._1, b._1) < 0))
+          .headOption
+      for (op <- 0 until 4000) {
+        val what = rnd.nextInt(100)
+        if (what < 85) { // update (heap/heap.go:136-170)
+          val item  = universe(rnd.nextInt(universe.size))
+          val count = rnd.nextInt(12).toLong
+          val want =
+            if (model.size == k && count < modelMin.get._2) false
+            else {
+              if (!model.contains(item) && model.size == k) model.remove(modelMin.get._1)
+              model(item) = (fp(item), count)
+              true
+            }
+          assert(h.update(item, fp(item), count) == want, s"k=$k op $op update($item, $count)")
+        } else if (what < 99) { // setCountAt + reinit, as the sliding recount does
+          if (h.size > 0) {
+            val i    = rnd.nextInt(h.size)
+            val item = h.itemAt(i)
+            val c    = if (rnd.nextBoolean()) 0L else rnd.nextInt(12).toLong
+            h.setCountAt(i, c)
+            model(item) = (model(item)._1, c)
+          }
+          h.reinit() // heap/heap.go:48-55: every zero-count entry is popped
+          model.filterInPlace { case (_, (_, c)) => c != 0L }
+        } else {
+          h.reset()
+          model.clear()
+        }
+        val wantSorted = model.toSeq.collect { case (it, (f, c)) if c > 0 => TopKEntry(f, it, c) }
+          .sortWith(SketchOps.entryOrder)
+        assert(h.sorted.toSeq == wantSorted, s"k=$k op $op sorted")
+        assert(h.minCount == modelMin.fold(0L)(_._2), s"k=$k op $op minCount")
+        assert(h.size == model.size, s"k=$k op $op size")
+        universe.foreach(it => assert(h.contains(it) == model.contains(it), s"k=$k op $op contains($it)"))
+      }
+    }
+  }
 }

@@ -2,6 +2,7 @@ package graft.core
 
 import java.nio.charset.StandardCharsets.UTF_8
 
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -66,10 +67,25 @@ class XxHash32Spec extends AnyFunSuite {
     }
   }
 
+  /** `Hashing.place` of a whole string in a depth×width sketch. */
+  private def placement(item: String, depth: Int, width: Int): Array[Int] = {
+    val out = new Array[Int](depth + 1)
+    Hashing.place(item.getBytes(UTF_8), depth, width, out)
+    out
+  }
+
   test("row-seed vectors (seeds 0..3, reference hash.go:13-16)") {
     rowSeedVectors.foreach { case (item, hashes) =>
       hashes.zipWithIndex.foreach { case (expected, row) =>
         assert(XxHash32.hashString(item, row) == expected, s"xxh32($item, seed=$row)")
+      }
+      for (width <- Seq(460, 8192, 1 << 28)) {
+        val place = placement(item, hashes.size, width)
+        assert(place(0) == Hashing.fingerprint(item), s"fingerprint($item)")
+        hashes.zipWithIndex.foreach { case (expected, row) =>
+          assert(place(row + 1) == row * width + ((expected & 0xffffffffL) % width).toInt,
+            s"place($item, w=$width) row $row")
+        }
       }
     }
   }
@@ -77,12 +93,37 @@ class XxHash32Spec extends AnyFunSuite {
   test("bucketIndex is non-negative and within row bounds (Go int(uint32)%width)") {
     // 0xE2ECCAA5 as signed Int is negative; the unsigned-widening mod must
     // still land in [row*width, (row+1)*width).
-    for (item <- Seq("X", "Y", "Z", "hello world"); row <- 0 until 4; width <- Seq(4, 10, 32, 1024)) {
-      val idx = Hashing.bucketIndex(item, row, width)
-      assert(idx >= row * width && idx < (row + 1) * width, s"($item,$row,$width) -> $idx")
+    for (item <- Seq("X", "Y", "Z", "hello world"); width <- Seq(4, 10, 32, 1024)) {
+      val place = placement(item, 4, width)
+      for (row <- 0 until 4) {
+        val idx = place(row + 1)
+        assert(idx >= row * width && idx < (row + 1) * width, s"($item,$row,$width) -> $idx")
+      }
     }
     // exact placement: column = (hash as uint32) mod width
-    assert(Hashing.bucketIndex("Y", 0, 10) == ((0xe2eccaa5L & 0xffffffffL) % 10).toInt)
+    assert(placement("Y", 1, 10)(1) == ((0xe2eccaa5L & 0xffffffffL) % 10).toInt)
+  }
+
+  test("place equals per-seed hashUnsafe: lengths 0-40, high bytes, offsets, widths, depths") {
+    val rnd  = new scala.util.Random(12)
+    val pool = Array.tabulate(64)(_ => (rnd.nextInt(256) - 128).toByte) // half of them >= 0x80
+    def want(base: AnyRef, off: Long, len: Int, depth: Int, width: Int): Seq[Int] =
+      XxHash32.hashUnsafe(base, off, len, Hashing.FingerprintSeed) +:
+        (0 until depth).map(r => r * width + ((XxHash32.hashUnsafe(base, off, len, r) & 0xffffffffL) % width).toInt)
+    for (len <- 0 to 40; pad <- Seq(0, 1, 3, 5); depth <- 1 to 8;
+         width <- Seq(1, 3, 256, 460, 8192, Int.MaxValue) if width.toLong * depth <= Int.MaxValue) {
+      val buf = java.util.Arrays.copyOfRange(pool, 7 * len % 17, 7 * len % 17 + pad + len)
+      val out = new Array[Int](depth + 1)
+      // a byte array at offset `pad` ...
+      val off = Platform.BYTE_ARRAY_OFFSET + pad
+      Hashing.place(buf, off, len, depth, width, out)
+      assert(out.toSeq == want(buf, off, len, depth, width), s"len $len +$pad d=$depth w=$width")
+      // ... and a UTF8String sliced out of it
+      val u = UTF8String.fromBytes(buf, pad, len)
+      java.util.Arrays.fill(out, -1)
+      Hashing.place(u.getBaseObject, u.getBaseOffset, u.numBytes, depth, width, out)
+      assert(out.toSeq == want(buf, off, len, depth, width), s"utf8 len $len +$pad d=$depth w=$width")
+    }
   }
 
   /** Every vector above as (item, seed, XXH32). */

@@ -7,9 +7,10 @@ import scala.jdk.CollectionConverters._
 import graft.SparkEntry
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The driver's stream queries read `events.parquet` through a file-source
-  * glob: a directory name holding glob characters must read the same rows,
-  * and no side directory may be left under the temp dir.
+/** The driver's queries read their tables from a directory that Spark would
+  * glob if its name held glob characters; such a name must read the same
+  * rows, in batch and through the stream queries' file-source glob, and no
+  * side directory may be left under the temp dir.
   */
 class StreamSourcePathSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -21,8 +22,8 @@ class StreamSourcePathSpec extends AnyFunSuite {
     finally tmp.close()
   }
 
-  private def rows(dir: String): Seq[String] =
-    SparkEntry.queries("topk_stream_tumbling")(spark, dir).collect().map(_.toString).toSeq.sorted
+  private def rows(dir: String, query: String = "topk_stream_tumbling"): Seq[String] =
+    SparkEntry.queries(query)(spark, dir).collect().map(_.toString).toSeq.sorted
 
   test("topk_stream_tumbling reads events.parquet from a dir named with [ and {") {
     val before = streamSrcEntries()
@@ -33,6 +34,20 @@ class StreamSourcePathSpec extends AnyFunSuite {
       assert(expected.nonEmpty)
       assert(rows(dir.toString) == expected)
       assert(streamSrcEntries() -- before == Set.empty)
+    } finally SparkEntry.deleteRecursively(dir)
+  }
+
+  test("batch queries read every table from a dir named with [ and {") {
+    val dir = Files.createTempDirectory("graft_sf[1]{x}")
+    try {
+      for (t <- Seq("events", "lineitem", "documents", "embeddings"))
+        Files.copy(Paths.get(SparkEntry.Sf0001Dir, s"$t.parquet"), dir.resolve(s"$t.parquet"))
+      // one query over each of those tables
+      for (q <- Seq("topk_event_types", "topk_suppliers_by_qty", "text_token_counts", "ann_cosine_topk")) {
+        val expected = rows(SparkEntry.Sf0001Dir, q)
+        assert(expected.nonEmpty, q)
+        assert(rows(dir.toString, q) == expected, q)
+      }
     } finally SparkEntry.deleteRecursively(dir)
   }
 }
