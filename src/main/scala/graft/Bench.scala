@@ -91,7 +91,7 @@ object Bench {
   }
 
   /** The measured token job: scan -> array-native HK partial agg -> merge ->
-    * top-K (no explode stage; the HK loop runs over each row's token array).
+    * top-K (no explode stage; each row's token array is counted in place).
     */
   def tokenTopK(spark: SparkSession, dir: String, cfg: SketchConfig): Array[(String, Long)] = {
     TopK.tokensArray(spark.read.parquet(dir), col("tokens"), cfg)

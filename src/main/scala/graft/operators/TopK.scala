@@ -115,9 +115,11 @@ object TopK {
   }
 
   /** Token top-K straight off the `array<int>` column — no explode stage;
-    * the HK loop runs inside the aggregate over each sequence row (the
-    * 100 TB-shape plan: scan -> per-partition sketch -> TREE merge past the
-    * partition cutover, see [[globalTopK]]).
+    * the aggregate counts each partition's tokens exactly and feeds its
+    * sketch one weighted add per distinct token, heaviest first
+    * ([[graft.plans.TokensSketchAggBase]]); the 100 TB-shape plan: scan ->
+    * per-partition sketch -> TREE merge past the partition cutover, see
+    * [[globalTopK]].
     */
   def tokensArray(df: DataFrame, tokens: Column, cfg: SketchConfig,
                   oversample: Int = 4, mergeFanIn: Int = 64): DataFrame = {

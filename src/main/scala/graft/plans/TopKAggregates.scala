@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.core.{Sketch, SketchCodec, SketchConfig}
+import graft.core.{Sketch, SketchCodec, SketchConfig, TokenCombiner}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -15,9 +15,10 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Native Catalyst aggregate expressions for the HeavyKeeper sketch — the
   * engine's only sketch aggregates. They consume `InternalRow`s directly: no
   * encoder deserialization, no per-row case classes, no String
-  * materialization off the cold path. The buffer is the
-  * mutable Sketch object (ObjectHashAggregateExec keeps it as an object;
-  * SketchCodec bytes only cross the shuffle).
+  * materialization off the cold path. The buffer is a mutable object
+  * (ObjectHashAggregateExec keeps it as one; SketchCodec bytes only cross
+  * the shuffle): a Sketch for the item aggregates, a TokenCombiner (exact
+  * token counts in front of a Sketch) for the token aggregates.
   */
 object TopKResult {
   val entrySchema: StructType = StructType(Seq(
@@ -85,21 +86,6 @@ object TopKResult {
       else weightAsLong(right.eval(input))
   }
 
-  /** Shared token-array update loop (TokensTopKAgg / TokensSketchBytesAgg —
-    * one implementation so the null handling cannot drift).
-    */
-  @inline def updateFromTokens(buffer: Sketch, v: Any): Unit = {
-    if (v != null) {
-      val arr = v.asInstanceOf[ArrayData]
-      val n   = arr.numElements()
-      var i   = 0
-      while (i < n) {
-        if (!arr.isNullAt(i)) buffer.addToken(arr.getInt(i), 1L)
-        i += 1
-      }
-    }
-  }
-
   def toArrayData(buffer: Sketch, emitK: Int): ArrayData = {
     val top = buffer.sortedSlice
     // clamp at 0: k reaches here unvalidated from SQL (topk_rows(blob, -1))
@@ -121,9 +107,18 @@ object TopKResult {
   * rows-emitting and blob-emitting variants differ ONLY in eval/dataType, so
   * type checking, the bound-ordinal reader, update, merge and the codec live
   * here once — a fix to the update path cannot drift between the pair.
+  *
+  * The buffer is a [[TokenCombiner]]: `update` only counts the row's tokens
+  * (null arrays and null elements are skipped, weight 1 per occurrence);
+  * `merge`, `serialize` and `eval` flush the counts into the sketch first,
+  * heaviest token first. Its table is bounded at
+  * `TokenCombiner.capacity(cfg)` 8-byte slots, at most max(16 KB, 16/3 ×
+  * the sketch's cell bytes), and a full table flushes mid-stream. The
+  * partial state is a deterministic function of the partition's input, so
+  * a task retry reproduces the same blob.
   */
 sealed abstract class TokensSketchAggBase
-    extends TypedImperativeAggregate[Sketch] with UnaryLike[Expression] {
+    extends TypedImperativeAggregate[TokenCombiner] with UnaryLike[Expression] {
   def cfg: SketchConfig
   protected def fnName: String
 
@@ -133,30 +128,43 @@ sealed abstract class TokensSketchAggBase
       s"$fnName requires ARRAY<INT> tokens, got ${other.catalogString}")
   }
 
-  override def createAggregationBuffer(): Sketch = new Sketch(cfg)
+  override def createAggregationBuffer(): TokenCombiner = new TokenCombiner(new Sketch(cfg))
 
   @transient private lazy val tokOrd: Int = child match {
     case b: BoundReference => b.ordinal
     case _                 => -1
   }
 
-  override def update(buffer: Sketch, input: InternalRow): Sketch = {
+  override def update(buffer: TokenCombiner, input: InternalRow): TokenCombiner = {
     val v =
       if (tokOrd >= 0) { if (input.isNullAt(tokOrd)) null else input.getArray(tokOrd) }
       else child.eval(input)
-    TopKResult.updateFromTokens(buffer, v)
+    if (v != null) {
+      val arr = v.asInstanceOf[ArrayData]
+      val n   = arr.numElements()
+      var i   = 0
+      while (i < n) {
+        if (!arr.isNullAt(i)) buffer.add(arr.getInt(i))
+        i += 1
+      }
+    }
     buffer
   }
 
-  override def merge(buffer: Sketch, other: Sketch): Sketch = buffer.merge(other)
-  override def serialize(buffer: Sketch): Array[Byte]       = SketchCodec.encode(buffer)
-  override def deserialize(bytes: Array[Byte]): Sketch      = SketchCodec.decode(bytes)
-  override def nullable: Boolean                            = false
+  override def merge(buffer: TokenCombiner, other: TokenCombiner): TokenCombiner = {
+    buffer.flushed.merge(other.flushed)
+    buffer
+  }
+  override def serialize(buffer: TokenCombiner): Array[Byte] = SketchCodec.encode(buffer.flushed)
+  override def deserialize(bytes: Array[Byte]): TokenCombiner =
+    new TokenCombiner(SketchCodec.decode(bytes))
+  override def nullable: Boolean = false
 }
 
 /** Top-K over an `array<int>` token column — one aggregate call per sequence
-  * row, the core HK loop runs over the array in place (the north-star shape:
-  * no explode, no per-token row machinery). Weight 1 per token occurrence.
+  * row, counted over the array in place (the north-star shape: no explode,
+  * no per-token row machinery); the sketch sees one weighted add per
+  * distinct token of a flush window (see [[TokensSketchAggBase]]).
   */
 case class TokensTopKAgg(
     child: Expression,
@@ -165,9 +173,9 @@ case class TokensTopKAgg(
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0
 ) extends TokensSketchAggBase {
-  override protected def fnName: String   = "topk_tokens"
-  override def eval(buffer: Sketch): Any  = TopKResult.toArrayData(buffer, emitK)
-  override def dataType: DataType         = TopKResult.dataType
+  override protected def fnName: String         = "topk_tokens"
+  override def eval(buffer: TokenCombiner): Any = TopKResult.toArrayData(buffer.flushed, emitK)
+  override def dataType: DataType               = TopKResult.dataType
 
   override def withNewMutableAggBufferOffset(newOffset: Int): TokensTopKAgg =
     copy(mutableAggBufferOffset = newOffset)
@@ -190,9 +198,9 @@ case class TokensSketchBytesAgg(
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0
 ) extends TokensSketchAggBase {
-  override protected def fnName: String   = "topk_tokens_sketch"
-  override def eval(buffer: Sketch): Any  = SketchCodec.encode(buffer)
-  override def dataType: DataType         = BinaryType
+  override protected def fnName: String         = "topk_tokens_sketch"
+  override def eval(buffer: TokenCombiner): Any = SketchCodec.encode(buffer.flushed)
+  override def dataType: DataType               = BinaryType
 
   override def withNewMutableAggBufferOffset(newOffset: Int): TokensSketchBytesAgg =
     copy(mutableAggBufferOffset = newOffset)

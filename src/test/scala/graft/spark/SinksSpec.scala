@@ -1,7 +1,5 @@
 package graft.spark
 
-import java.nio.file.Files
-
 import graft.streaming.Sinks
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,7 +12,7 @@ class SinksSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("batch replay overwrites its own partition; other batches untouched") {
-    val dir    = Files.createTempDirectory("graft_sink").toString
+    val dir    = graft.TempDirs("graft_sink").toString
     val writer = Sinks.idempotentParquet(dir)
 
     writer(Seq(("a", 1L), ("b", 2L)).toDF("item", "count"), 0L)
@@ -34,8 +32,8 @@ class SinksSpec extends AnyFunSuite {
   test("end-to-end: streaming query through foreachBatch lands exactly-once rows") {
     implicit val sqlCtx = spark.sqlContext
     val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, Long)]
-    val dir   = Files.createTempDirectory("graft_sink_e2e").toString
-    val ckpt  = Files.createTempDirectory("graft_sink_ckpt").toString
+    val dir   = graft.TempDirs("graft_sink_e2e").toString
+    val ckpt  = graft.TempDirs("graft_sink_ckpt").toString
     val q = input.toDF.toDF("item", "weight")
       .writeStream
       .foreachBatch(Sinks.idempotentParquet(dir))

@@ -76,7 +76,7 @@ class SqlSurfaceSpec extends AnyFunSuite {
     // blobs -> exploded contribution range -> semi-join a LITERAL ticks table
     // -> merge per out_tick. The literal tick side must keep the plan at one
     // scan of the fact table; results must match the dataflow operator.
-    val dir = java.nio.file.Files.createTempDirectory("graft_sql_sliding").toString
+    val dir = graft.TempDirs("graft_sql_sliding").toString
     val rows = for {
       tick <- 0L to 9L
       (item, n) <- Seq("a" -> (tick + 1), "b" -> 2L, "c" -> 1L)

@@ -1,6 +1,5 @@
 package graft.spark
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import graft.core.{SketchConfig, SlidingConfig}
@@ -54,7 +53,7 @@ object StreamCodegenReuseSpec {
     */
   private lazy val input: String = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_codegen_reuse_in").resolve("in").toString
+    val dir = graft.TempDirs("graft_codegen_reuse_in").resolve("in").toString
     for (file <- 0 until 4) {
       val rows = for {
         t   <- Seq(4 * file, 4 * file + 1)
@@ -79,7 +78,7 @@ object StreamCodegenReuseSpec {
     */
   def freshRun(build: () => DataFrame): (Long, Seq[String]) = {
     val name   = s"codegen_reuse_${System.nanoTime()}"
-    val ckpt   = Files.createTempDirectory("graft_codegen_reuse_ckpt").toString
+    val ckpt   = graft.TempDirs("graft_codegen_reuse_ckpt").toString
     val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     build().writeStream.format("memory").queryName(name).outputMode("append")
       .option("checkpointLocation", ckpt).trigger(Trigger.AvailableNow()).start()

@@ -1,6 +1,5 @@
 package graft.spark
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import graft.streaming.StreamJoins
@@ -22,7 +21,7 @@ class StreamJoinsSpec extends AnyFunSuite {
     StructField("payload", StringType)))
 
   test("interval join pairs rows across micro-batches; out-of-window rows don't pair") {
-    val base = Files.createTempDirectory("graft_sjoin").toString
+    val base = graft.TempDirs("graft_sjoin").toString
     val in = s"$base/in"; val ckpt = s"$base/ckpt"
     def write(rows: Seq[(Long, Long, String)]): Unit =
       rows.map { case (k, sec, p) => (k, new Timestamp(sec * 1000L), p) }

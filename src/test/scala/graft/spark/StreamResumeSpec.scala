@@ -73,7 +73,7 @@ class StreamResumeSpec extends AnyFunSuite {
   }
 
   test("sliding stream resumes from checkpoint with exactly-once per-tick rows") {
-    val base = Files.createTempDirectory("graft_resume").toString
+    val base = graft.TempDirs("graft_resume").toString
     val in   = s"$base/in"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
 
     // run 1: ticks 0-1 (+ the tick-3 marker advancing the watermark)
@@ -123,7 +123,7 @@ class StreamResumeSpec extends AnyFunSuite {
 
   test("session stream resumes from checkpoint (adaptive buffers in state store)") {
     import graft.core.SketchConfig
-    val base = Files.createTempDirectory("graft_sess_resume").toString
+    val base = graft.TempDirs("graft_sess_resume").toString
     val in = s"$base/in"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
 
     def run(): Unit = {
@@ -167,7 +167,7 @@ class StreamResumeSpec extends AnyFunSuite {
   }
 
   test("metrics listener captures per-batch input rows and state size") {
-    val base = Files.createTempDirectory("graft_metrics").toString
+    val base = graft.TempDirs("graft_metrics").toString
     val in = s"$base/in"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
     val listener = graft.streaming.Lineage.attach(spark)
     try {

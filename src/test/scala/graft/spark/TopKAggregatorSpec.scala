@@ -1,6 +1,6 @@
 package graft.spark
 
-import graft.core.{Hashing, SketchConfig}
+import graft.core.{Hashing, Sketch, SketchCodec, SketchConfig}
 import graft.operators.TopK
 import graft.plans.TopKAggregates
 import org.apache.spark.sql.functions._
@@ -150,6 +150,55 @@ class TopKAggregatorSpec extends AnyFunSuite {
       .orderBy(col("count").desc, col("t").asc).limit(10)
       .collect().map(r => (r.getInt(0).toString, r.getLong(1))).toSeq
     assert(flat.map(e => (e._1, e._2)) == exact)
+  }
+
+  /** Seeded power-law token docs (25 tokens each) in 8 fixed partitions. */
+  private def powerLawDocs(seed: Long) = {
+    val rng  = new java.util.Random(seed)
+    val docs = (0 until 2000).map { d =>
+      (d.toLong, Array.fill(25) { val u = rng.nextDouble(); (2000 * u * u * u).toInt })
+    }
+    spark.sparkContext.parallelize(docs, 8).toDF("doc_id", "tokens")
+  }
+
+  /** One TokensSketchBytesAgg blob per input partition, in partition order. */
+  private def partitionBlobs(df: org.apache.spark.sql.DataFrame, cfg: SketchConfig) =
+    df.groupBy(spark_partition_id().as("p"))
+      .agg(TopKAggregates.tokensSketchBytes(col("tokens"), cfg).as("b"))
+      .orderBy("p").collect().map(_.getAs[Array[Byte]]("b")).toSeq
+
+  test("token partials are byte-identical across runs over the same partitions") {
+    // a task retry reads the same partition again; at a colliding geometry
+    // its blob must come out the same, decay draws included
+    val df  = powerLawDocs(seed = 13)
+    val cfg = SketchConfig.withDefaults(80, width = 1024, depth = 3)
+    val (a, b) = (partitionBlobs(df, cfg), partitionBlobs(df, cfg))
+    assert(a.size == 8)
+    a.zip(b).foreach { case (x, y) => assert(java.util.Arrays.equals(x, y)) }
+  }
+
+  test("token partials at 1024x3: no over-estimation, top-20 error within a unit-add replay's") {
+    // the combiner feeds each partition's sketch one weighted add per
+    // distinct token, heaviest first; against the same partitions replayed
+    // one token at a time into plain sketches, it may not estimate worse
+    val df    = powerLawDocs(seed = 17)
+    val cfg   = SketchConfig.withDefaults(80, width = 1024, depth = 3)
+    def union(parts: Seq[Sketch]) = parts.reduce(_.merge(_))
+    val ours  = union(partitionBlobs(df, cfg).map(SketchCodec.decode))
+    val unit  = union(df.select(spark_partition_id().as("p"), col("tokens")).collect()
+      .groupBy(_.getInt(0)).toSeq.sortBy(_._1).map { case (_, rows) =>
+        val s = new Sketch(cfg)
+        rows.foreach(_.getSeq[Int](1).foreach(t => s.addToken(t, 1L)))
+        s
+      })
+    val truth = df.select(explode(col("tokens")).as("t")).groupBy("t").count()
+      .collect().map(r => (r.getInt(0).toString, r.getLong(1))).toMap
+    truth.foreach { case (i, c) => assert(ours.count(i) <= c, s"$i over-estimated: ${ours.count(i)} > $c") }
+    val top20 = truth.toSeq.sortBy { case (i, c) => (-c, i) }.take(20)
+    def meanRelErr(s: Sketch) =
+      top20.map { case (i, c) => math.abs(s.count(i) - c).toDouble / c }.sum / top20.size
+    assert(meanRelErr(ours) <= meanRelErr(unit),
+      s"combiner ${meanRelErr(ours)} vs unit-add ${meanRelErr(unit)}")
   }
 
   test("sketch-blob aggregate + count/query columns (Count/Query surface)") {

@@ -7,6 +7,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
+import graft.TempDirs
 import graft.core.SlidingConfig
 import graft.spark.{SparkTestSession, StreamCodegenReuseSpec}
 import org.apache.hadoop.conf.Configuration
@@ -17,29 +18,15 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.CancellableFSDataOutputStream
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.{col, expr}
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.time.{Seconds, Span}
 
-class LocalCheckpointFileManagerSpec extends AnyFunSuite with BeforeAndAfterAll {
+class LocalCheckpointFileManagerSpec extends AnyFunSuite {
   private val conf = new Configuration()
 
-  /** Every temp dir the suite makes, deleted after its last test. */
-  private val tempDirs = new ConcurrentLinkedQueue[NioPath]()
-
-  private def tempDir(prefix: String): NioPath = {
-    val dir = Files.createTempDirectory(prefix)
-    tempDirs.add(dir)
-    dir
-  }
-
-  override def afterAll(): Unit =
-    try tempDirs.forEach(graft.SparkEntry.deleteRecursively(_))
-    finally super.afterAll()
-
   private def fresh(): (NioPath, LocalCheckpointFileManager) = {
-    val dir = tempDir("graft_ckpt_fm")
+    val dir = TempDirs("graft_ckpt_fm")
     (dir, new LocalCheckpointFileManager(new Path(dir.toUri), conf))
   }
 
@@ -151,7 +138,7 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite with BeforeAndAfterAll 
       "isLocal", "createCheckpointDirectory"))
 
     // file: and scheme-less paths (under a file: default FS) never touch it
-    val dir   = tempDir("graft_ckpt_fm")
+    val dir   = TempDirs("graft_ckpt_fm")
     val local = new LocalCheckpointFileManager(new Path(dir.toString), conf, () => recording)
     write(local, new Path(dir.toString, "0"), "x", overwrite = false)
     assert(local.exists(new Path(dir.toString, "0")) && local.isLocal)
@@ -184,7 +171,7 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite with BeforeAndAfterAll 
 
   private def fileInput(format: String): DataFrame =
     SparkTestSession.spark.readStream.schema("key STRING, ts_ms LONG").format(format)
-      .load(tempDir(s"graft_install_$format").toString)
+      .load(TempDirs(s"graft_install_$format").toString)
 
   test("install sets Spark's manager conf only when it is unset") {
     withStreamingKeys { spark =>
@@ -263,7 +250,7 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite with BeforeAndAfterAll 
     * first batch takes 40 of them, above Spark's listing threshold of 32.
     */
   private lazy val manyFiles: String = {
-    val dir = tempDir("graft_listing_in")
+    val dir = TempDirs("graft_listing_in")
     for (file <- 0 until 48) {
       val rows = for (key <- Seq("k0", "k1"); j <- 0 until 3)
         yield s"$key,${file * 250L + j},i${(file + j) % 5},${j + 1}"
