@@ -1,7 +1,7 @@
 package graft.functions
 
 import graft.core.SketchConfig
-import graft.plans.{AdaptiveTopKAgg, ItemsTopKAgg, TokensTopKAgg}
+import graft.plans.{ItemsTopKAgg, TokensTopKAgg}
 import graft.plans.TopKAggregates.candidates
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, Literal}
@@ -16,7 +16,9 @@ import org.apache.spark.sql.types.{LongType, StringType}
   * {{{
   *   SELECT topk_tokens(tokens, 10, 1024, 3) FROM seqs                 -- array<int>
   *   SELECT topk_items(item, weight, 10, 1024, 3) FROM updates         -- generic
-  *   SELECT topk_items_adaptive(item, weight, 2, 256, 3) FROM t GROUP BY k
+  *   -- exact counts for groups of at most max(64, 16·k) distinct items;
+  *   -- topk_items_adaptive is an alias kept so older SQL resolves
+  *   SELECT k, topk_items(item, weight, 2, 256, 3) FROM t GROUP BY k
   *   SELECT explode(topk_sliding(tick, item, w, 7, 3, 1024, 3)) FROM t
   *   SELECT xxh32(text, 4848280) FROM docs                             -- seeded hash
   *   -- sketch algebra over blobs (topk_merge is an AGGREGATE — give it its
@@ -88,6 +90,21 @@ object SqlFunctions {
     */
   private val Oversample = 4
 
+  /** `topk_items` and its alias `topk_items_adaptive`: counts are exact for
+    * a group of at most `AdaptiveTopK.cutoff` distinct items, sketched
+    * above (graft.plans.AdaptiveTopK).
+    */
+  private val topkItems: Seq[Expression] => Expression = { args =>
+    require(args.length >= 3 && args.length <= 6,
+      "usage: topk_items(item, weight, k[, width, depth[, decay]])")
+    val cfg = cfgFrom(args, 2)
+    // cast for SQL ergonomics (ints as items, int weights); the aggregate
+    // itself validates strictly via checkInputDataTypes
+    ItemsTopKAgg(Cast(args.head, StringType), Cast(args(1), LongType),
+      candidates(cfg, Oversample), cfg.k)
+      .toAggregateExpression()
+  }
+
   /** name -> (arity doc, expression builder) — the single SQL surface. */
   val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "topk_tokens" -> { args =>
@@ -98,26 +115,8 @@ object SqlFunctions {
         .toAggregateExpression()
     },
 
-    "topk_items" -> { args =>
-      require(args.length >= 3 && args.length <= 6,
-        "usage: topk_items(item, weight, k[, width, depth[, decay]])")
-      val cfg = cfgFrom(args, 2)
-      // cast for SQL ergonomics (ints as items, int weights); the aggregate
-      // itself validates strictly via checkInputDataTypes
-      ItemsTopKAgg(Cast(args.head, StringType), Cast(args(1), LongType),
-        candidates(cfg, Oversample), cfg.k)
-        .toAggregateExpression()
-    },
-
-    // exact below an item-count cutoff, sketch above — the many-small-groups
-    // aggregate (sizing rule: AdaptiveTopKAgg.expression)
-    "topk_items_adaptive" -> { args =>
-      require(args.length >= 3 && args.length <= 6,
-        "usage: topk_items_adaptive(item, weight, k[, width, depth[, decay]])")
-      AdaptiveTopKAgg.expression(Cast(args.head, StringType), Cast(args(1), LongType),
-        cfgFrom(args, 2), Oversample)
-        .toAggregateExpression()
-    },
+    "topk_items"          -> topkItems,
+    "topk_items_adaptive" -> topkItems,
 
     // reference sliding-window semantics in one aggregate (see SlidingTopKAgg
     // scaladoc for the buffer-size contract)

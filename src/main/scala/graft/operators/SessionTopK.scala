@@ -70,16 +70,16 @@ object SessionTopK {
           .otherwise(0L))
       .withColumn("sess", sum(col("brk")).over(
         byKey.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    // adaptive buffer: sessions typically hold a handful of distinct items,
-    // so the exact-map phase avoids allocating + serializing a full sketch
-    // per tiny group (the dominant cost in the many-small-groups regime)
+    // sessions typically hold a handful of distinct items, so the item
+    // aggregate's exact-map phase (graft.plans.AdaptiveTopK) avoids
+    // allocating + serializing a full sketch per tiny group (the dominant
+    // cost in the many-small-groups regime)
     val perSession = sessions
       .groupBy(col("key"), col("sess"))
       .agg(
         min(col("ts")).as("session_start"),
         (max(col("ts")) + expr(s"INTERVAL $gapSeconds SECOND")).as("session_end"),
-        graft.plans.AdaptiveTopKAgg.adaptive(col("item"), col("weight"), cfg, oversample)
-          .as("topk"))
+        TopK.topkColumn(col("item"), col("weight"), cfg, oversample).as("topk"))
     TopK.ranked(perSession, Seq(col("key"), col("session_start"), col("session_end")),
       col("topk"))
   }

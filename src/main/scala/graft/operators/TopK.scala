@@ -10,16 +10,19 @@ import org.apache.spark.sql.graftbridge.Bridge
   *
   * The plan shape is deliberate for 100 TB scale: the HeavyKeeper aggregator
   * runs as a partial aggregate on every input partition (map-side, no row
-  * leaves the executor), then ships one fixed-size sketch per (group ×
-  * partition) through the shuffle and merges. Token/item skew therefore
-  * cannot skew the shuffle — the reduction payload is O(partitions · d · w),
-  * independent of row counts.
+  * leaves the executor), then ships one bounded buffer per (group ×
+  * partition) through the shuffle and merges: a fixed-size sketch, or the
+  * exact counts of a group with few distinct items. Token/item skew
+  * therefore cannot skew the shuffle — the reduction payload is
+  * O(partitions · d · w), independent of row counts.
   */
 object TopK {
 
   /** The aggregation Column on the native (InternalRow-level) expression:
     * partials track k×oversample candidates, emitK = cfg.k rows come out
     * (the oversample rule: [[graft.plans.TopKAggregates.candidates]]).
+    * Counts are exact for a group of at most
+    * [[graft.plans.AdaptiveTopK.cutoff]] distinct items.
     */
   def topkColumn(item: Column, weight: Column, cfg: SketchConfig, oversample: Int): Column =
     TopKAggregates.itemsTopK(item, weight, TopKAggregates.candidates(cfg, oversample), cfg.k)

@@ -3,19 +3,14 @@ package graft.plans
 import java.nio.ByteBuffer
 
 import graft.core.{Hashing, Sketch, SketchCodec, SketchConfig}
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.BinaryLike
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Adaptive top-K buffer: EXACT hash-map counting below `cutoff` distinct
-  * items, HeavyKeeper sketch above it.
+/** The string-item aggregates' buffer ([[ItemsSketchAggBase]]): EXACT
+  * hash-map counting up to `cutoff` distinct items, HeavyKeeper sketch
+  * above it. The buffer picks its mode from the distinct items it has seen,
+  * so no caller chooses between an exact and a sketch aggregate.
   *
   * Rationale (the many-small-groups regime, e.g. per-session aggregation):
   * a fixed d×w sketch buffer costs ~12 KB to allocate and ~9 KB to serialize
@@ -27,7 +22,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * that actually exceed the cutoff pay for a sketch. Estimates remain
   * reference-faithful there: the map is replayed into the sketch in
   * deterministic (count desc, item asc) order via weighted `Add`
-  * (reference: sketch.go:118-170).
+  * (reference: sketch.go:118-170), and later rows are added in input order.
   */
 final class AdaptiveTopK(val cfg: SketchConfig, val cutoff: Int) {
   /** Exact phase: item → mutable count cell; null once spilled. */
@@ -54,15 +49,25 @@ final class AdaptiveTopK(val cfg: SketchConfig, val cutoff: Int) {
 
   def addString(item: String, w: Long): Unit = add(UTF8String.fromString(item), w)
 
-  /** Replay the exact map into a fresh sketch, largest counts first (ties by
-    * item asc) so replay order — and thus HK decay behavior — is a
-    * deterministic function of the map contents.
-    */
   private def spill(): Unit = {
-    sketch = new Sketch(cfg)
-    sortedEntries.foreach { case (item, count) => sketch.add(item.toString, count) }
+    sketch = replayed()
     map = null
   }
+
+  /** The exact map replayed into a fresh sketch, largest counts first (ties
+    * by item asc) so replay order — and thus HK decay behavior — is a
+    * deterministic function of the map contents.
+    */
+  private def replayed(): Sketch = {
+    val s = new Sketch(cfg)
+    sortedEntries.foreach { case (item, count) => s.add(item.toString, count) }
+    s
+  }
+
+  /** The buffer as a sketch: the spilled sketch itself, or the exact map
+    * replayed into a fresh one. The buffer is unchanged.
+    */
+  def toSketch: Sketch = if (sketch != null) sketch else replayed()
 
   private def sortedEntries: Array[(UTF8String, Long)] = {
     val arr = new Array[(UTF8String, Long)](map.size)
@@ -89,8 +94,8 @@ final class AdaptiveTopK(val cfg: SketchConfig, val cutoff: Int) {
   }
 
   /** Top-`emitK` rows, (count desc, item asc), same row type as TopKResult. */
-  def toArrayData(emitK: Int): GenericArrayData = {
-    if (sketch != null) return TopKResult.toArrayData(sketch, emitK).asInstanceOf[GenericArrayData]
+  def toArrayData(emitK: Int): ArrayData = {
+    if (sketch != null) return TopKResult.toArrayData(sketch, emitK)
     val sorted = sortedEntries
     val n      = math.min(emitK, sorted.length)
     val out    = new Array[Any](n)
@@ -106,10 +111,24 @@ final class AdaptiveTopK(val cfg: SketchConfig, val cutoff: Int) {
 }
 
 object AdaptiveTopK {
+  /** The one adaptive sizing rule: a buffer tracking `cfg.k` candidates
+    * (already k×oversample for the row-emitting aggregates,
+    * [[TopKAggregates.candidates]]) counts exactly up to
+    * max(64, 4·cfg.k) distinct items.
+    */
+  def cutoff(cfg: SketchConfig): Int = math.max(64, 4 * cfg.k)
+
+  /** First byte of a bare plain-sketch blob (SketchCodec's "TKP2" magic):
+    * the item aggregates' buffer before it was adaptive, still found in
+    * streaming-aggregation checkpoints. Distinct from the tags 0 and 1.
+    */
+  private final val PlainSketchTag: Byte = 0x54 // 'T'
+
   /** Codec: tag byte (0 exact map / 1 sketch) + payload. Map payloads are a
     * few dozen bytes for small groups — the point of the adaptive buffer.
-    * Session state stores persist these bytes: the layout is pinned by
-    * golden fixtures in SketchCodecSpec.
+    * State stores persist these bytes: the layout is pinned by golden
+    * fixtures in SketchCodecSpec. `decode` also reads a bare TKP2 blob as a
+    * spilled buffer.
     */
   def encode(b: AdaptiveTopK): Array[Byte] =
     if (b.sketch != null) {
@@ -135,6 +154,9 @@ object AdaptiveTopK {
       case 1 =>
         b.sketch = SketchCodec.decode(SketchCodec.readBlock(in))
         b.map = null
+      case PlainSketchTag =>
+        b.sketch = SketchCodec.decode(bytes)
+        b.map = null
       case 0 =>
         val n = in.getInt()
         // every entry is >= 12 bytes (item length 4 + count 8): a count the
@@ -151,68 +173,4 @@ object AdaptiveTopK {
     }
     b
   }
-}
-
-/** Adaptive top-K aggregate over (item string, weight integral) — see
-  * [[AdaptiveTopK]]. Drop-in alternative to ItemsTopKAgg for the
-  * many-small-groups regime.
-  */
-case class AdaptiveItemsTopKAgg(
-    left: Expression,
-    right: Expression,
-    cfg: SketchConfig,
-    emitK: Int,
-    cutoff: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0
-) extends TypedImperativeAggregate[AdaptiveTopK] with BinaryLike[Expression] {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    TopKResult.checkItemWeight(left, right, "topk_items_adaptive")
-
-  override def createAggregationBuffer(): AdaptiveTopK = new AdaptiveTopK(cfg, cutoff)
-
-  @transient private lazy val reader = new TopKResult.ItemWeightReader(left, right)
-
-  override def update(buffer: AdaptiveTopK, input: InternalRow): AdaptiveTopK = {
-    val u = reader.item(input)
-    if (u != null) buffer.add(u, reader.weight(input))
-    buffer
-  }
-
-  override def merge(buffer: AdaptiveTopK, other: AdaptiveTopK): AdaptiveTopK =
-    buffer.mergeWith(other)
-
-  override def eval(buffer: AdaptiveTopK): Any = buffer.toArrayData(emitK)
-
-  override def serialize(buffer: AdaptiveTopK): Array[Byte] = AdaptiveTopK.encode(buffer)
-  override def deserialize(bytes: Array[Byte]): AdaptiveTopK =
-    AdaptiveTopK.decode(bytes, cfg, cutoff)
-
-  override def dataType: DataType = TopKResult.dataType
-  override def nullable: Boolean  = false
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): AdaptiveItemsTopKAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): AdaptiveItemsTopKAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): AdaptiveItemsTopKAgg =
-    copy(left = newLeft, right = newRight)
-}
-
-object AdaptiveTopKAgg {
-  /** The one adaptive sizing rule: k×oversample candidates
-    * ([[TopKAggregates.candidates]]), exact below
-    * cutoff = max(64, 4·k·oversample) distinct items per group, sketch above.
-    */
-  def expression(item: Expression, weight: Expression, cfg: SketchConfig,
-                 oversample: Int): AdaptiveItemsTopKAgg = {
-    val bufCfg = TopKAggregates.candidates(cfg, oversample)
-    AdaptiveItemsTopKAgg(item, weight, bufCfg, cfg.k, cutoff = math.max(64, bufCfg.k * 4))
-  }
-
-  /** `agg(adaptive($"item", $"weight", cfg, oversample))` — see [[expression]]. */
-  def adaptive(item: Column, weight: Column, cfg: SketchConfig, oversample: Int): Column =
-    Bridge.column(expression(Bridge.expression(item), Bridge.expression(weight),
-      cfg, oversample).toAggregateExpression())
 }

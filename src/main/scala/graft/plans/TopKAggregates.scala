@@ -16,9 +16,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * engine's only sketch aggregates. They consume `InternalRow`s directly: no
   * encoder deserialization, no per-row case classes, no String
   * materialization off the cold path. The buffer is a mutable object
-  * (ObjectHashAggregateExec keeps it as one; SketchCodec bytes only cross
-  * the shuffle): a Sketch for the item aggregates, a TokenCombiner (exact
-  * token counts in front of a Sketch) for the token aggregates.
+  * (ObjectHashAggregateExec keeps it as one; codec bytes only cross the
+  * shuffle): an [[AdaptiveTopK]] (exact item counts up to a cutoff, a
+  * Sketch above it) for the item aggregates, a TokenCombiner (exact token
+  * counts in front of a Sketch) for the token aggregates.
   */
 object TopKResult {
   val entrySchema: StructType = StructType(Seq(
@@ -210,34 +211,39 @@ case class TokensSketchBytesAgg(
     copy(child = newChild)
 }
 
-/** Shared machinery for the (item string, weight long) sketch aggregates —
-  * same single-definition rationale as [[TokensSketchAggBase]]. Hashes the
-  * UTF8String's bytes in place; the heap's String key materializes only on
-  * admitted updates (memoized per buffer).
+/** Shared machinery for the (item string, weight long) aggregates — same
+  * single-definition rationale as [[TokensSketchAggBase]]. The buffer is an
+  * [[AdaptiveTopK]]: exact counts up to `AdaptiveTopK.cutoff(cfg)` distinct
+  * items per group, a sketch above, so every string-item aggregate is exact
+  * on small groups. The sketch hashes the UTF8String's bytes in place; the
+  * heap's String key materializes only on admitted updates (memoized per
+  * buffer).
   */
 sealed abstract class ItemsSketchAggBase
-    extends TypedImperativeAggregate[Sketch] with BinaryLike[Expression] {
+    extends TypedImperativeAggregate[AdaptiveTopK] with BinaryLike[Expression] {
   def cfg: SketchConfig
   protected def fnName: String
 
   override def checkInputDataTypes(): TypeCheckResult =
     TopKResult.checkItemWeight(left, right, fnName)
 
-  override def createAggregationBuffer(): Sketch = new Sketch(cfg)
+  override def createAggregationBuffer(): AdaptiveTopK =
+    new AdaptiveTopK(cfg, AdaptiveTopK.cutoff(cfg))
 
   @transient private lazy val reader = new TopKResult.ItemWeightReader(left, right)
 
-  override def update(buffer: Sketch, input: InternalRow): Sketch = {
+  override def update(buffer: AdaptiveTopK, input: InternalRow): AdaptiveTopK = {
     val u = reader.item(input)
-    if (u != null)
-      buffer.addUnsafe(u.getBaseObject, u.getBaseOffset, u.numBytes, reader.weight(input))
+    if (u != null) buffer.add(u, reader.weight(input))
     buffer
   }
 
-  override def merge(buffer: Sketch, other: Sketch): Sketch = buffer.merge(other)
-  override def serialize(buffer: Sketch): Array[Byte]       = SketchCodec.encode(buffer)
-  override def deserialize(bytes: Array[Byte]): Sketch      = SketchCodec.decode(bytes)
-  override def nullable: Boolean                            = false
+  override def merge(buffer: AdaptiveTopK, other: AdaptiveTopK): AdaptiveTopK =
+    buffer.mergeWith(other)
+  override def serialize(buffer: AdaptiveTopK): Array[Byte] = AdaptiveTopK.encode(buffer)
+  override def deserialize(bytes: Array[Byte]): AdaptiveTopK =
+    AdaptiveTopK.decode(bytes, cfg, AdaptiveTopK.cutoff(cfg))
+  override def nullable: Boolean = false
 }
 
 /** Top-K over generic (item string, weight long) updates. */
@@ -249,9 +255,9 @@ case class ItemsTopKAgg(
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0
 ) extends ItemsSketchAggBase {
-  override protected def fnName: String   = "topk_items"
-  override def eval(buffer: Sketch): Any  = TopKResult.toArrayData(buffer, emitK)
-  override def dataType: DataType         = TopKResult.dataType
+  override protected def fnName: String        = "topk_items"
+  override def eval(buffer: AdaptiveTopK): Any = buffer.toArrayData(emitK)
+  override def dataType: DataType              = TopKResult.dataType
 
   override def withNewMutableAggBufferOffset(newOffset: Int): ItemsTopKAgg =
     copy(mutableAggBufferOffset = newOffset)
@@ -261,9 +267,10 @@ case class ItemsTopKAgg(
     copy(left = newLeft, right = newRight)
 }
 
-/** Variant of ItemsTopKAgg that emits the serialized sketch blob instead of
-  * rows — the SQL-facing `topk_sketch(...)` builder for sketch-algebra
-  * pipelines (store per-slice sketches, merge/query later).
+/** Variant of ItemsTopKAgg that emits a TKP2 sketch blob instead of rows —
+  * the SQL-facing `topk_sketch(...)` builder for sketch-algebra pipelines
+  * (store per-slice sketches, merge/query later). An exact buffer is
+  * replayed into a fresh sketch for the blob ([[AdaptiveTopK.toSketch]]).
   */
 case class SketchBytesAgg(
     left: Expression,
@@ -272,9 +279,9 @@ case class SketchBytesAgg(
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0
 ) extends ItemsSketchAggBase {
-  override protected def fnName: String   = "topk_sketch"
-  override def eval(buffer: Sketch): Any  = SketchCodec.encode(buffer)
-  override def dataType: DataType         = BinaryType
+  override protected def fnName: String        = "topk_sketch"
+  override def eval(buffer: AdaptiveTopK): Any = SketchCodec.encode(buffer.toSketch)
+  override def dataType: DataType              = BinaryType
 
   override def withNewMutableAggBufferOffset(newOffset: Int): SketchBytesAgg =
     copy(mutableAggBufferOffset = newOffset)

@@ -23,7 +23,7 @@ final case class TickTopK(key: String, tick: Long, rank: Int, item: String,
   * sketch.go:211-215). Fully partition-parallel: partial sketches per
   * executor merge through the streaming aggregation's state store.
   *
-  * Session: `session_window` over an adaptive buffer (see [[session]]).
+  * Session: `session_window` over the same item aggregate (see [[session]]).
   *
   * Sliding: the reference's tick ring (reference: sliding/sketch.go:106-129)
   * as a `flatMapGroupsWithState` operator. Event-time ticks; the watermark
@@ -66,12 +66,13 @@ object TopKStreams {
     * session's top-K emits exactly once — when the watermark passes
     * `session_end` (gap after the last event).
     *
-    * Uses the ADAPTIVE buffer (exact map below cutoff, sketch above), the
-    * same choice as the batch sessionization path: sessions are the
-    * many-tiny-groups regime, and a full d×w sketch blob per session would
-    * put O(sessions × sketch bytes) through the state store each batch
+    * Runs `TopK.topkColumn`, as the batch sessionization path does. Its
+    * buffer (graft.plans.AdaptiveTopK) keeps an exact map up to a cutoff
+    * of distinct items and a sketch above it. Sessions are the
+    * many-tiny-groups regime: a full d×w sketch blob per session would put
+    * O(sessions × sketch bytes) through the state store each batch
     * (measured: ~9 KB/session × 90k live sessions ≈ 800 MB of state churn,
-    * ~24 s at sf0.1 — the adaptive map blobs are a few dozen bytes).
+    * ~24 s at sf0.1 — the exact-map blobs are a few dozen bytes).
     *
     * Runs on a batch DataFrame too (the watermark is then a no-op); batch
     * sessionization is faster through `SessionTopK.aggregateGap`. Boundary
@@ -95,8 +96,7 @@ object TopKStreams {
     val perSession = updates
       .withWatermark("ts", watermarkDelay)
       .groupBy(col("key"), session_window(col("ts"), gap))
-      .agg(graft.plans.AdaptiveTopKAgg.adaptive(col("item"), col("weight"), cfg, oversample)
-        .as("topk"))
+      .agg(TopK.topkColumn(col("item"), col("weight"), cfg, oversample).as("topk"))
     TopK.ranked(perSession, Seq(col("key"), col("session_window.start").as("session_start"),
       col("session_window.end").as("session_end")), col("topk"))
   }
@@ -131,7 +131,29 @@ object TopKStreams {
       emitK: Int,
       reduceMetrics: Option[(org.apache.spark.util.LongAccumulator,
         org.apache.spark.util.LongAccumulator)] = None
+  ): Dataset[TickTopK] =
+    slidingWithReduceCap(updates, tickMillis, watermarkDelay, cfg, emitK, reduceMetrics,
+      ReduceMaxEntries)
+
+  /** Cap of [[sliding]]'s map-side reduce map, in distinct (key, tick,
+    * item) groups per flush: ~100 B/entry, so ~25 MB/task.
+    */
+  private[graft] final val ReduceMaxEntries = 262144
+
+  /** [[sliding]] with an explicit reduce-map cap (specs force mid-batch
+    * flushes with a tiny one).
+    */
+  private[graft] def slidingWithReduceCap(
+      updates: DataFrame,
+      tickMillis: Long,
+      watermarkDelay: String,
+      cfg: SlidingConfig,
+      emitK: Int,
+      reduceMetrics: Option[(org.apache.spark.util.LongAccumulator,
+        org.apache.spark.util.LongAccumulator)],
+      reduceCap: Int
   ): Dataset[TickTopK] = {
+    require(reduceCap > 0, s"reduceCap must be positive, got $reduceCap")
     require(tickMillis > 0, s"tickMillis must be positive, got $tickMillis" +
       " (zero divides by zero in the tick ordinal; negative inverts tick" +
       " ordering and stalls tick completion forever)")
@@ -187,10 +209,7 @@ object TopKStreams {
     // group rows across flushes stay correct: the state machine sums
     // pending updates per (tick, item), and each flush row carries its
     // groups' max ts, so per-batch event-time stats (and the watermark) see
-    // the same maximum. ~100 B/entry => the default 262144 is ~25 MB/task.
-    val reduceCap = spark.conf.getOption("spark.graft.stream.reduceMaxEntries")
-      .map(_.toInt).getOrElse(262144)
-    require(reduceCap > 0, s"spark.graft.stream.reduceMaxEntries must be positive, got $reduceCap")
+    // the same maximum.
     val reduced = typed.mapPartitions { rows =>
       import scala.jdk.CollectionConverters._
       new Iterator[Iterator[(String, java.sql.Timestamp, String, Long)]] {

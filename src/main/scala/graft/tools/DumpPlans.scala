@@ -83,7 +83,7 @@ object DumpPlans {
         SketchConfig.withDefaults(5, width = 1024, depth = 3), 3,
         knownTicks = Some(0L to 29L)))
 
-    section("Session top-K (gap sessionization + adaptive aggregate)",
+    section("Session top-K (gap sessionization + item aggregate)",
       """ONE exchange on the session key feeds the window sort (lag + running
         |sum number the sessions); the (key, sess) aggregation REUSES that
         |partitioning (HashPartitioning(key) satisfies
@@ -91,9 +91,9 @@ object DumpPlans {
         |final aggregate. The exchange is an EXPLICIT key repartition with a
         |pinned count (round 6): the stage it feeds is compute-dense per
         |byte, and AQE's byte-based coalescing otherwise serializes it into
-        |one task on slim inputs. The aggregate is AdaptiveItemsTopKAgg:
-        |exact tiny maps for small sessions, sketch only past the
-        |cutoff.""".stripMargin,
+        |one task on slim inputs. The aggregate is ItemsTopKAgg, whose
+        |AdaptiveTopK buffer keeps exact tiny maps for small sessions and a
+        |sketch only past the cutoff.""".stripMargin,
       graft.operators.SessionTopK.aggregateGap(ev, col("user_id").cast("long"),
         col("ts"), 3600L, col("event_type"), lit(1L),
         SketchConfig.withDefaults(2, width = 256, depth = 3)))

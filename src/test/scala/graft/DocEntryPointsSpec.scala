@@ -10,7 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The entry points the docs tell a reader to run must exist: a deleted or
   * renamed main otherwise leaves a README command or a source comment that
   * points at nothing. Likewise every session-wide Spark default graft sets
-  * must be documented. No Spark session is started.
+  * must be documented, and README's Architecture block must name only the
+  * SQL functions and `graft.plans` classes that exist. No Spark session is
+  * started.
   */
 class DocEntryPointsSpec extends AnyFunSuite {
 
@@ -59,5 +61,37 @@ class DocEntryPointsSpec extends AnyFunSuite {
     val undocumented = keys.filterNot { case (_, key) => readme.contains(s"`$key") }
     assert(undocumented.isEmpty,
       undocumented.map { case (name, key) => s"$name = $key" }.mkString("not in README.md: ", ", ", ""))
+  }
+
+  /** The lines of README's Architecture block after the one that starts
+    * with package `pkg`, up to the next package line or the block's end.
+    */
+  private def architectureSection(pkg: String): Seq[String] = {
+    val readme = Files.readAllLines(Paths.get("README.md")).asScala.toSeq
+    val block  = readme.dropWhile(_ != "## Architecture").drop(1)
+      .dropWhile(_ != "```").drop(1).takeWhile(_ != "```")
+    val section = block.dropWhile(l => !l.startsWith(s"$pkg ")).drop(1)
+      .takeWhile(l => !l.startsWith("graft."))
+    assert(section.nonEmpty, s"no $pkg section in README.md's Architecture block")
+    section
+  }
+
+  test("README's SQL function list is the SqlFunctions builder table") {
+    val named = architectureSection("graft.functions")
+      .flatMap("""\b(topk_\w+|xxh32)\b""".r.findAllMatchIn(_).map(_.group(1))).toSet
+    val built = graft.functions.SqlFunctions.builders.map(_._1).toSet
+    assert(named == built,
+      s"README lists ${(named -- built).mkString(", ")}; misses ${(built -- named).mkString(", ")}")
+  }
+
+  test("every graft.plans class in README's Architecture block exists") {
+    val named = architectureSection("graft.plans")
+      .flatMap("""^  ([A-Z]\w*)\b""".r.findFirstMatchIn(_).map(_.group(1)))
+    assert(named.size >= 5, s"found only $named")
+    val missing = named.filterNot { n =>
+      try { Class.forName(s"graft.plans.$n", false, getClass.getClassLoader); true }
+      catch { case _: ClassNotFoundException => false }
+    }
+    assert(missing.isEmpty, missing.mkString("not in graft.plans: ", ", ", ""))
   }
 }

@@ -116,4 +116,36 @@ class AdaptiveTopKSpec extends AnyFunSuite {
     }
     assert(sketchTrials > 5, "random cutoffs should exercise the sketch phase")
   }
+
+  private def rowsOf(a: org.apache.spark.sql.catalyst.util.ArrayData) =
+    (0 until a.numElements()).map { i =>
+      val r = a.getStruct(i, 3); (r.getUTF8String(0).toString, r.getLong(1), r.getLong(2))
+    }
+
+  test("a bare TKP2 sketch blob decodes to a spilled buffer with the sketch's rows") {
+    // the item aggregates buffered a plain Sketch before they buffered
+    // AdaptiveTopK: state checkpointed then must still restore
+    val s = new Sketch(SketchConfig.withDefaults(k = 4, width = 8, depth = 2))
+    (1 to 40).foreach(i => s.add(s"i${i % 11}", (i % 5 + 1).toLong))
+    val blob = SketchCodec.encode(s)
+    val b    = AdaptiveTopK.decode(blob, cfg, cutoff = 16)
+    assert(b.map == null && b.sketch != null)
+    assert(rowsOf(b.toArrayData(4)) == rowsOf(graft.plans.TopKResult.toArrayData(s, 4)))
+    assert(SketchCodec.encode(b.toSketch).sameElements(blob))
+    (0 until blob.length).foreach { n =>
+      withClue(s"TKP2 truncated to $n bytes") {
+        intercept[IllegalArgumentException](AdaptiveTopK.decode(blob.take(n), cfg, 16))
+      }
+    }
+  }
+
+  test("toSketch replays an exact buffer heaviest-first and leaves the buffer exact") {
+    val b = new AdaptiveTopK(cfg, cutoff = 16)
+    Seq("b" -> 3L, "a" -> 5L, "c" -> 3L, "a" -> 2L).foreach { case (i, w) => b.addString(i, w) }
+    val before = AdaptiveTopK.encode(b)
+    val want   = new Sketch(cfg)
+    Seq("a" -> 7L, "b" -> 3L, "c" -> 3L).foreach { case (i, w) => want.add(i, w) }
+    assert(SketchCodec.encode(b.toSketch).sameElements(SketchCodec.encode(want)))
+    assert(b.sketch == null && AdaptiveTopK.encode(b).sameElements(before))
+  }
 }

@@ -201,6 +201,100 @@ class TopKAggregatorSpec extends AnyFunSuite {
       s"combiner ${meanRelErr(ours)} vs unit-add ${meanRelErr(unit)}")
   }
 
+  /** `n` distinct items with tied counts 1 + (7j mod 23), one weight-1 row
+    * per unit, shuffled into 8 fixed partitions.
+    */
+  private def tiedItems(n: Int, groups: Seq[String]) = {
+    val rows = for {
+      g <- groups; j <- 0 until n; _ <- 0 until 1 + (7 * j) % 23
+    } yield (g, f"i$j%03d", 1L)
+    spark.sparkContext.parallelize(new scala.util.Random(5).shuffle(rows), 8)
+      .toDF("grp", "item", "weight")
+  }
+
+  test("item aggregates count exactly up to the cutoff at a colliding geometry") {
+    // width 4 x depth 1 collides almost every item, so only the exact
+    // buffer can return these counts: every row-emitting item aggregate
+    // (TopK.aggregate's flat plan, aggregateBy, SQL topk_items) must match
+    // the exact answer, ties ordered by item asc, for <= cutoff distinct
+    // items. (The tree plan unions sketch blobs, exact only collision-free.)
+    val cfg = SketchConfig.withDefaults(5, width = 4, depth = 1)
+    val n   = graft.plans.AdaptiveTopK.cutoff(TopKAggregates.candidates(cfg, 4))
+    val df  = tiedItems(n, Seq("g0", "g1"))
+    def exactTop(rows: Seq[(String, Long)]) =
+      rows.groupBy(_._1).view.mapValues(_.map(_._2).sum).toSeq
+        .sortBy { case (i, c) => (-c, i) }.take(5)
+    val local = df.collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
+    val want  = exactTop(local.map(r => (r._2, r._3)))
+    val fp    = (i: String) => Hashing.fingerprint(i).toLong & 0xffffffffL
+
+    val global = TopK.aggregate(df, col("item"), col("weight"), cfg, mergeFanIn = 1).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(global == want.map { case (i, c) => (i, c, fp(i)) })
+
+    val perGroup = TopK.aggregateBy(df, Seq(col("grp")), col("item"), col("weight"), cfg)
+      .orderBy("grp", "rank").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getString(2), r.getLong(3))).toSeq
+    val wantPerGroup = Seq("g0", "g1").flatMap { g =>
+      exactTop(local.filter(_._1 == g).map(r => (r._2, r._3))).zipWithIndex
+        .map { case ((i, c), r) => (g, r + 1L, i, c) }
+    }
+    assert(perGroup == wantPerGroup)
+
+    graft.functions.SqlFunctions.register(spark)
+    df.createOrReplaceTempView("tied_items")
+    val sql = spark.sql(
+      """SELECT grp, e.item, e.count FROM (
+        |  SELECT grp, posexplode(topk_items(item, weight, 5, 4, 1)) AS (pos, e)
+        |  FROM tied_items GROUP BY grp)
+        |ORDER BY grp, pos""".stripMargin)
+      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
+    assert(sql == wantPerGroup.map(r => (r._1, r._3, r._4)))
+  }
+
+  test("topk_sketch partials are byte-identical across runs over the same partitions") {
+    // a task retry reads the same partition again: each partition spills
+    // past its cutoff (max(64, 4k) = 64 distinct items) at a colliding
+    // geometry, and its blob must come out the same, replay order and
+    // decay draws included
+    val rng  = new java.util.Random(23)
+    val rows = (0 until 8000).map { _ => val u = rng.nextDouble(); (s"t${(400 * u * u * u).toInt}", 1L) }
+    spark.sparkContext.parallelize(rows, 8).toDF("item", "w").createOrReplaceTempView("sk_retry")
+    graft.functions.SqlFunctions.register(spark)
+    val distinct = spark.sql("SELECT count(DISTINCT item) FROM sk_retry GROUP BY spark_partition_id()")
+      .collect().map(_.getLong(0))
+    assert(distinct.length == 8 && distinct.forall(_ > 64), distinct.toSeq)
+    def blobs() = spark.sql(
+      """SELECT p, topk_sketch(item, w, 10, 64, 3) AS b
+        |FROM (SELECT spark_partition_id() AS p, item, w FROM sk_retry)
+        |GROUP BY p ORDER BY p""".stripMargin).collect().map(_.getAs[Array[Byte]]("b")).toSeq
+    val (a, b) = (blobs(), blobs())
+    assert(a.size == 8)
+    a.zip(b).foreach { case (x, y) => assert(java.util.Arrays.equals(x, y)) }
+  }
+
+  test("SketchBytesAgg.eval leaves the buffer's serialized bytes unchanged") {
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow}
+    import org.apache.spark.sql.types.{LongType, StringType}
+    import org.apache.spark.unsafe.types.UTF8String
+    val cfg = SketchConfig.withDefaults(3, width = 256, depth = 3)
+    val agg = graft.plans.SketchBytesAgg(
+      BoundReference(0, StringType, nullable = true), BoundReference(1, LongType, nullable = true), cfg)
+    Seq(5, 200).foreach { distinct => // exact, then spilled past the cutoff of 64
+      val buf = agg.createAggregationBuffer()
+      (0 until 3 * distinct).foreach { i =>
+        agg.update(buf, new GenericInternalRow(Array[Any](UTF8String.fromString(s"x${i % distinct}"), (i % 4 + 1).toLong)))
+      }
+      val before = agg.serialize(buf)
+      val blob   = agg.eval(buf).asInstanceOf[Array[Byte]]
+      withClue(s"$distinct distinct") {
+        assert(agg.serialize(buf).sameElements(before))
+        assert((buf.sketch == null) == (distinct <= 64))
+        assert(SketchCodec.decode(blob).cfg == cfg)
+      }
+    }
+  }
+
   test("sketch-blob aggregate + count/query columns (Count/Query surface)") {
     val df  = Seq(("X", 5L), ("Y", 3L), ("Z", 2L)).toDF("item", "weight")
     val cfg = SketchConfig.withDefaults(2, width = 256, depth = 3)

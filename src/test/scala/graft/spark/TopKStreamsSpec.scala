@@ -118,36 +118,34 @@ class TopKStreamsSpec extends AnyFunSuite {
   }
 
   test("map-side reduce cap: flushed partial groups merge to the same answer") {
-    // reduceMaxEntries=2 forces the bounded reduce map to flush mid-batch
+    // a reduce cap of 2 forces the bounded reduce map to flush mid-batch
     // (7 distinct (key, tick, item) groups below); the state machine must
     // sum the partial flush rows back to the uncapped result
     implicit val sqlCtx = spark.sqlContext
-    spark.conf.set("spark.graft.stream.reduceMaxEntries", "2")
+    val input = MemoryStream[(String, Timestamp, String, Long)]
+    val df    = input.toDF.toDF("key", "ts", "item", "weight")
+    val cfg   = SlidingConfig.withDefaults(3, 2, width = 256, depth = 3)
+    val q = TopKStreams.slidingWithReduceCap(df, 1000L, "0 seconds", cfg, emitK = 3,
+        reduceMetrics = None, reduceCap = 2)
+      .writeStream.format("memory").queryName("slide_cap").outputMode("append").start()
     try {
-      val input = MemoryStream[(String, Timestamp, String, Long)]
-      val df    = input.toDF.toDF("key", "ts", "item", "weight")
-      val cfg   = SlidingConfig.withDefaults(3, 2, width = 256, depth = 3)
-      val q = TopKStreams.sliding(df, 1000L, "0 seconds", cfg, emitK = 3)
-        .writeStream.format("memory").queryName("slide_cap").outputMode("append").start()
-      try {
-        input.addData(
-          ("g", ts(1L), "a", 1L), ("g", ts(2L), "a", 1L), ("g", ts(3L), "b", 5L),
-          ("g", ts(4L), "c", 2L), ("h", ts(5L), "a", 7L), ("h", ts(6L), "b", 1L),
-          ("g", ts(1001L), "a", 4L), ("h", ts(1002L), "c", 3L))
-        q.processAllAvailable()
-        input.addData(("z", ts(3000L), "wm", 0L)) // complete ticks 0 and 1
-        q.processAllAvailable()
-        val rows = spark.table("slide_cap")
-          .where(col("key").isin("g", "h") && col("tick") === 0)
-          .select("key", "rank", "item", "count")
-          .collect().map(r => (r.getString(0), r.getInt(1), r.getString(2), r.getLong(3)))
-          .sortBy(t => (t._1, t._2.toLong))
-        // tick 0 exact counts: g: b=5, c=2, a=2 ; h: a=7, b=1
-        assert(rows.toSeq == Seq(
-          ("g", 1, "b", 5L), ("g", 2, "a", 2L), ("g", 3, "c", 2L),
-          ("h", 1, "a", 7L), ("h", 2, "b", 1L)))
-      } finally q.stop()
-    } finally spark.conf.unset("spark.graft.stream.reduceMaxEntries")
+      input.addData(
+        ("g", ts(1L), "a", 1L), ("g", ts(2L), "a", 1L), ("g", ts(3L), "b", 5L),
+        ("g", ts(4L), "c", 2L), ("h", ts(5L), "a", 7L), ("h", ts(6L), "b", 1L),
+        ("g", ts(1001L), "a", 4L), ("h", ts(1002L), "c", 3L))
+      q.processAllAvailable()
+      input.addData(("z", ts(3000L), "wm", 0L)) // complete ticks 0 and 1
+      q.processAllAvailable()
+      val rows = spark.table("slide_cap")
+        .where(col("key").isin("g", "h") && col("tick") === 0)
+        .select("key", "rank", "item", "count")
+        .collect().map(r => (r.getString(0), r.getInt(1), r.getString(2), r.getLong(3)))
+        .sortBy(t => (t._1, t._2.toLong))
+      // tick 0 exact counts: g: b=5, c=2, a=2 ; h: a=7, b=1
+      assert(rows.toSeq == Seq(
+        ("g", 1, "b", 5L), ("g", 2, "a", 2L), ("g", 3, "c", 2L),
+        ("h", 1, "a", 7L), ("h", 2, "b", 1L)))
+    } finally q.stop()
   }
 
   test("sliding streaming: independent keys, out-of-order arrivals within watermark") {
