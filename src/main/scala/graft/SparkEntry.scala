@@ -263,8 +263,8 @@ object SparkEntry {
 
     // EXPLICIT skew path: two-level salted aggregation (level 1 shuffles on
     // (group, salt=hash(item)) so a hot group's updates spread over 16
-    // reducers; level 2 unions 16 fixed-size blobs per group). Same answer as
-    // the plain path — driver-verified against the same exact oracle.
+    // reducers; level 2 merges the 16 item-aggregate buffers per group).
+    // Same answer as the plain path — driver-verified against the oracle.
     Query("topk_event_types_salted",
       """SELECT event_type AS item, count(*) AS count
          FROM events GROUP BY 1 ORDER BY count DESC, item LIMIT 5""") { (s, dir) =>

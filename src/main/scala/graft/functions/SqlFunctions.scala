@@ -155,13 +155,14 @@ object SqlFunctions {
         .toAggregateExpression()
     },
 
-    // array-native token partial emitting the blob — the SQL handle for
-    // tree-merged token pipelines: GROUP BY pmod(spark_partition_id(), N)
-    // -> topk_tokens_sketch -> topk_merge -> topk_rows
+    // array-native token partial emitting the blob (its serialized buffer) —
+    // the SQL handle for tree-merged token pipelines: GROUP BY
+    // pmod(spark_partition_id(), N) -> topk_tokens_sketch -> topk_merge -> topk_rows
     "topk_tokens_sketch" -> { args =>
       require(args.length >= 2 && args.length <= 5,
         "usage: topk_tokens_sketch(tokens_array, k[, width, depth[, decay]])")
-      graft.plans.TokensSketchBytesAgg(args.head, cfgFrom(args, 1))
+      val cfg = cfgFrom(args, 1)
+      graft.plans.BufferBytesAgg(TokensTopKAgg(args.head, cfg, cfg.k))
         .toAggregateExpression()
     },
 

@@ -1,26 +1,27 @@
 package graft.operators
 
 import graft.core.SketchConfig
-import graft.plans.TopKAggregates
+import graft.plans.{ItemsTopKAgg, TopKAggregates}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Distributed batch sliding-window top-K: the "ring of per-tick sub-sketches"
   * realization of the reference's sliding semantics (sliding/sketch.go) —
   * semantically the tick-ring with bucketHistoryLength = windowSize, where
-  * each tick's sub-counters live in their own sketch and window ageing is the
-  * sketch dropping out of the merge range.
+  * each tick's sub-counters live in their own buffer and window ageing is the
+  * buffer dropping out of the merge range.
   *
   * Plan shape (all distributed, no driver loop):
-  *   1. partial-aggregate one sketch per tick (map-side combine per partition,
-  *      shuffle = #ticks × sketch-size, independent of row count);
+  *   1. partial-aggregate one buffer per tick (map-side combine per
+  *      partition, shuffle = #ticks × buffer size, independent of row count);
   *   2. explode each tick's contribution range [t, t+N-1] (linear N-fold
-  *      duplication of fixed-size blobs — an equality groupBy, NOT a range
+  *      duplication of bounded buffers — an equality groupBy, NOT a range
   *      join) — #ticks × N tiny rows;
-  *   3. union-merge the window's sketches per t, emit top-K rows.
+  *   3. merge the window's buffers per t (the aggregate's own merge), emit rows.
   *
   * At 100 TB the expensive step is (1), which is a single scan with map-side
-  * reduction; (2)+(3) operate on #ticks rows of fixed-size blobs. The
+  * reduction; (2)+(3) operate on #ticks rows of bounded buffers. The
   * event-time streaming equivalent (state-store ring, watermark-driven
   * expiry) is `graft.streaming.TopKStreams.sliding`.
   */
@@ -32,7 +33,7 @@ object SlidingTopK {
     * @param weight     per-row weight
     * @param windowTicks window size N in ticks
     * @param cfg        sketch geometry; cfg.k is the candidate-tracking
-    *                   capacity per tick-sketch (oversample upstream of this)
+    *                   capacity per tick buffer (oversample upstream of this)
     * @param k          emitted rows per tick
     * Output: (tick, rank, item, count) for every tick present in the input,
     * where count sums the item's weight over ticks [t-N+1, t].
@@ -65,12 +66,13 @@ object SlidingTopK {
       item.cast("string").as("item"),
       weight.cast("long").as("weight")
     )
-    val perTickSketch = updates
+    val agg        = ItemsTopKAgg(Bridge.expression(col("item")), Bridge.expression(col("weight")), cfg, k)
+    val perTickBuf = updates
       .groupBy(col("tick"))
-      .agg(TopKAggregates.sketchBytes(col("item"), col("weight"), cfg).as("sketch"))
+      .agg(TopKAggregates.bufferBytes(agg).as("buf"))
 
     // Each source tick s contributes to output ticks [s, s+N-1]: explode the
-    // contribution range (N-fold duplication of fixed-size blobs, LINEAR in
+    // contribution range (N-fold duplication of bounded buffers, LINEAR in
     // #ticks) and equality-group on out_tick — no range join. A left-semi
     // join against the broadcast tick list keeps only output ticks that are
     // present in the input (range-join parity; also drops the trailing
@@ -79,24 +81,23 @@ object SlidingTopK {
     import spark.implicits._
     val tickList = knownTicks
       .map(_.toDF("out_tick"))
-      .getOrElse(perTickSketch.select(col("tick").as("out_tick")))
-    val window = perTickSketch
+      .getOrElse(perTickBuf.select(col("tick").as("out_tick")))
+    val window = perTickBuf
       .select(explode(sequence(col("tick"), col("tick") + (windowTicks - 1)))
-        .as("out_tick"), col("sketch"))
+        .as("out_tick"), col("buf"))
       .join(broadcast(tickList), Seq("out_tick"), "left_semi")
-    // Pin the merge exchange's width: the union-merge stage decodes and
-    // merges N sketch blobs per tick — compute-dense per byte on a few MB
-    // of blobs, which AQE's byte-based coalescing otherwise bundles into
-    // one task (same pattern as the grid kernel / verify spreads). The
-    // repartition REPLACES the groupBy's own exchange
+    // Pin the merge exchange's width: the merge stage decodes and merges N
+    // buffers per tick — compute-dense per byte (a few MB of sketches once
+    // ticks pass the cutoff), which AQE's byte-based coalescing otherwise
+    // bundles into one task (same pattern as the grid kernel / verify
+    // spreads). The repartition REPLACES the groupBy's own exchange
     // (HashPartitioning(out_tick, n) satisfies its distribution), so the
     // shuffle count is unchanged at any scale.
     val mergeParts = spark.sessionState.conf.numShufflePartitions
     val merged = window
       .repartition(mergeParts, col("out_tick"))
       .groupBy(col("out_tick"))
-      .agg(TopKAggregates.mergeBlobs(col("sketch")).as("m"))
-    TopK.ranked(merged, Seq(col("out_tick").as("tick")),
-      TopKAggregates.sketchRows(col("m"), lit(k)))
+      .agg(TopKAggregates.mergeBuffers(col("buf"), agg).as("topk"))
+    TopK.ranked(merged, Seq(col("out_tick").as("tick")), col("topk"))
   }
 }

@@ -1,8 +1,9 @@
 package graft.operators
 
 import graft.core.SketchConfig
-import graft.plans.TopKAggregates
+import graft.plans.{ItemsTopKAgg, TokensTopKAgg, TopKAggregates}
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 
@@ -25,7 +26,16 @@ object TopK {
     * [[graft.plans.AdaptiveTopK.cutoff]] distinct items.
     */
   def topkColumn(item: Column, weight: Column, cfg: SketchConfig, oversample: Int): Column =
-    TopKAggregates.itemsTopK(item, weight, TopKAggregates.candidates(cfg, oversample), cfg.k)
+    Bridge.column(itemsAgg(item, weight, cfg, oversample).toAggregateExpression())
+
+  /** The row aggregate of [[topkColumn]] and [[aggregate]]. */
+  private[graft] def itemsAgg(item: Column, weight: Column, cfg: SketchConfig, oversample: Int) =
+    ItemsTopKAgg(Bridge.expression(item), Bridge.expression(weight),
+      TopKAggregates.candidates(cfg, oversample), cfg.k)
+
+  /** The row aggregate of [[tokensArray]]. */
+  private[graft] def tokensAgg(tokens: Column, cfg: SketchConfig, oversample: Int) =
+    TokensTopKAgg(Bridge.expression(tokens), TopKAggregates.candidates(cfg, oversample), cfg.k)
 
   /** The one ranked-rows projection: `keys`, then one row per element of
     * the `array<struct item,count,fingerprint>` column `topk` with its
@@ -40,12 +50,12 @@ object TopK {
 
   /** Shared global-top-K plan with the two-level TREE merge and its cutover.
     *
-    * The union is two-level: scan tasks emit one partial blob each (map-side
-    * combine), the blobs hash to `fanIn` intermediate union tasks, and the
-    * final task unions only `fanIn` blobs. A single-level merge makes the
-    * final task O(#partitions) serial decode+union work — ~2-4 ms per
-    * wide-geometry blob, an Amdahl tail at local[32] with ~850 splits and
-    * fatal at 100 TB (10⁵-10⁶ splits would funnel hundreds of GB of blobs
+    * The merge is two-level: scan tasks emit one partial buffer each
+    * (map-side combine), the buffers hash to 64 intermediate merge tasks,
+    * and the final task merges only 64. A single-level merge makes the
+    * final task O(#partitions) serial decode+merge work — ~2-4 ms per
+    * wide-geometry sketch, an Amdahl tail at local[32] with ~850 splits and
+    * fatal at 100 TB (10⁵-10⁶ splits would funnel hundreds of GB of sketches
     * through one task). The tree itself pays one extra stage barrier
     * (~0.1 s), so for small inputs — or streaming plans — the flat
     * single-union plan is selected instead. The size signal is the
@@ -53,25 +63,18 @@ object TopK {
     * estimates) against the session's split size — deliberately NOT
     * `df.rdd.getNumPartitions`, which under AQE materializes (executes!)
     * every upstream shuffle stage just to ask. A coarse estimate is fine:
-    * the cutover is a latency heuristic, both plans are correct.
-    * `mergeFanIn < 0` FORCES the tree with fan-in |mergeFanIn| (tests,
-    * plan dumps, or callers that know better).
-    *
-    * @param flatAgg  aggregate emitting array<struct item,count,fingerprint>
-    *                 (the flat plan's single aggregation)
-    * @param blobAgg  aggregate emitting the serialized sketch blob
-    *                 (the tree's level-1 partial)
+    * the cutover is a latency heuristic, both plans merge the same buffer
+    * (`agg`'s own, via [[graft.plans.BufferBytesAgg]]). Specs and plan dumps
+    * pin `fanIn`: `Some(1)` is the flat plan, `Some(n)` an n-way tree.
     */
-  private def globalTopK(df: DataFrame, k: Int, mergeFanIn: Int,
-                         flatAgg: Column, blobAgg: Column): DataFrame = {
+  private[graft] def globalTopK(df: DataFrame, agg: TypedImperativeAggregate[_],
+                                fanIn: Option[Int] = None): DataFrame = {
     // streaming plans reject multi-aggregation (groupBy agg -> agg), so the
-    // flat single-union plan is the only legal shape there — even when the
-    // caller forces the tree with a negative fan-in
+    // flat single-union plan is the only legal shape there
     val effFanIn =
       if (df.isStreaming) 1
-      else if (mergeFanIn < 0) -mergeFanIn
-      else if (mergeFanIn <= 1) 1
-      else {
+      else fanIn.getOrElse {
+        val treeFanIn = 64
         val stats     = df.queryExecution.optimizedPlan.stats
         val estBytes  = stats.sizeInBytes
         val splitSize = BigInt(df.sparkSession.sessionState.conf.filesMaxPartitionBytes)
@@ -81,23 +84,18 @@ object TopK {
         // scaladoc promises); truly unknown stays tree — the scale-safe
         // default, at worst two extra small shuffles on a small input
         if (graft.operators.Similarity.statsKnown(estBytes))
-          if (estBytes > splitSize * mergeFanIn * 2) mergeFanIn else 1
+          if (estBytes > splitSize * treeFanIn * 2) treeFanIn else 1
         else stats.rowCount match {
-          case Some(n) if n < BigInt(mergeFanIn) * 65536 => 1
-          case _                                         => mergeFanIn
+          case Some(n) if n < BigInt(treeFanIn) * 65536 => 1
+          case _                                        => treeFanIn
         }
       }
-    val emitted =
-      if (effFanIn <= 1) {
-        df.agg(flatAgg.as("topk"))
-          .select(explode(col("topk")).as("e"))
-      } else {
-        df.groupBy(pmod(spark_partition_id(), lit(effFanIn)).as("_g"))
-          .agg(blobAgg.as("blob"))
-          .agg(TopKAggregates.mergeBlobs(col("blob")).as("m"))
-          .select(explode(TopKAggregates.sketchRows(col("m"), lit(k))).as("e"))
-      }
-    emitted
+    val topk =
+      if (effFanIn <= 1) df.agg(Bridge.column(agg.toAggregateExpression()).as("topk"))
+      else df.groupBy(pmod(spark_partition_id(), lit(effFanIn)).as("_g"))
+        .agg(TopKAggregates.bufferBytes(agg).as("buf"))
+        .agg(TopKAggregates.mergeBuffers(col("buf"), agg).as("topk"))
+    topk.select(explode(col("topk")).as("e"))
       .select(col("e.item"), col("e.count"), col("e.fingerprint"))
       .orderBy(col("count").desc, col("item").asc)
   }
@@ -106,31 +104,23 @@ object TopK {
     * Output: (item string, count long, fingerprint long), ordered by
     * (count desc, item asc) — the reference's SortedSlice order
     * (reference: sketch.go:189-209). Tree-merged past the partition cutover
-    * (see [[globalTopK]]); `mergeFanIn <= 1` forces the flat plan.
+    * (see [[globalTopK]]).
     */
   def aggregate(df: DataFrame, item: Column, weight: Column, cfg: SketchConfig,
-                oversample: Int = 4, mergeFanIn: Int = 64): DataFrame = {
-    val updates = df.select(item.cast("string").as("item"), weight.cast("long").as("weight"))
-    globalTopK(updates, cfg.k, mergeFanIn,
-      flatAgg = topkColumn(col("item"), col("weight"), cfg, oversample),
-      blobAgg = TopKAggregates.sketchBytes(col("item"), col("weight"),
-        TopKAggregates.candidates(cfg, oversample)))
-  }
+                oversample: Int = 4): DataFrame =
+    globalTopK(df.select(item.cast("string").as("item"), weight.cast("long").as("weight")),
+      itemsAgg(col("item"), col("weight"), cfg, oversample))
 
   /** Token top-K straight off the `array<int>` column — no explode stage;
     * the aggregate counts each partition's tokens exactly and feeds its
     * sketch one weighted add per distinct token, heaviest first
-    * ([[graft.plans.TokensSketchAggBase]]); the 100 TB-shape plan: scan ->
+    * ([[graft.plans.TokensTopKAgg]]); the 100 TB-shape plan: scan ->
     * per-partition sketch -> TREE merge past the partition cutover, see
     * [[globalTopK]].
     */
   def tokensArray(df: DataFrame, tokens: Column, cfg: SketchConfig,
-                  oversample: Int = 4, mergeFanIn: Int = 64): DataFrame = {
-    val bufCfg = TopKAggregates.candidates(cfg, oversample)
-    globalTopK(df, cfg.k, mergeFanIn,
-      flatAgg = TopKAggregates.tokensTopK(tokens, bufCfg, cfg.k),
-      blobAgg = TopKAggregates.tokensSketchBytes(tokens, bufCfg))
-  }
+                  oversample: Int = 4): DataFrame =
+    globalTopK(df, tokensAgg(tokens, cfg, oversample))
 
   /** Per-group top-K: one top-K list per value of `groupCols` (e.g. a
     * tumbling `window($"ts", ...)` column, a `source` dimension, or both).
@@ -147,25 +137,29 @@ object TopK {
 
   /** Per-group top-K with EXPLICIT skew handling: two-level salted
     * aggregation. Level 1 shuffles on (group, salt) — a hot group's updates
-    * spread over `saltFanout` reducers, each building a partial sketch over a
-    * disjoint item subset (salt = hash(item), so the level-2 union adds
+    * spread over `saltFanout` reducers, each building a partial buffer over
+    * a disjoint item subset (salt = hash(item), so the level-2 merge adds
     * counts only for identical items — no cross-item fingerprint conflicts).
-    * Level 2 shuffles `saltFanout` fixed-size blobs per group and unions
-    * them. Use when group cardinality is low relative to data volume (the
-    * regime where plain aggregateBy's map-side combine is not enough).
+    * Level 2 shuffles `saltFanout` serialized buffers per group and merges
+    * them with the aggregate's own merge, so the rows equal
+    * [[aggregateBy]]'s wherever both count exactly. Use when group
+    * cardinality is low relative to data volume (the regime where plain
+    * aggregateBy's map-side combine is not enough).
     */
   def aggregateBySalted(df: DataFrame, groupCols: Seq[Column], item: Column, weight: Column,
                         cfg: SketchConfig, saltFanout: Int = 16, oversample: Int = 4): DataFrame = {
-    val bufCfg = TopKAggregates.candidates(cfg, oversample)
+    // pmod by 0 fails mid-job under ANSI, and silently runs unsalted without it
+    require(saltFanout >= 1, s"saltFanout must be >= 1, got $saltFanout")
+    val agg = itemsAgg(col("item"), col("weight"), cfg, oversample)
     val keyed = df.select((groupCols :+ item.cast("string").as("item")
       :+ weight.cast("long").as("weight")): _*)
     val groupNames = keyed.columns.dropRight(2).map(col)
     val salted = keyed.withColumn("_salt", pmod(xxhash64(col("item")), lit(saltFanout)))
     val level1 = salted
       .groupBy((groupNames :+ col("_salt")): _*)
-      .agg(TopKAggregates.sketchBytes(col("item"), col("weight"), bufCfg).as("blob"))
-    ranked(level1.groupBy(groupNames: _*).agg(TopKAggregates.mergeBlobs(col("blob")).as("merged")),
-      groupNames, TopKAggregates.sketchRows(col("merged"), lit(cfg.k)))
+      .agg(TopKAggregates.bufferBytes(agg).as("buf"))
+    ranked(level1.groupBy(groupNames: _*).agg(TopKAggregates.mergeBuffers(col("buf"), agg).as("topk")),
+      groupNames, col("topk"))
   }
 
   /** `Count(item)` over a serialized sketch blob (reference: sketch.go:90-111). */

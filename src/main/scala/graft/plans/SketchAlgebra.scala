@@ -2,11 +2,10 @@ package graft.plans
 
 import graft.core.{Sketch, SketchCodec}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -23,15 +22,11 @@ case class MergeSketchBlobsAgg(
     child: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0
-) extends TypedImperativeAggregate[MergeBuf] with UnaryLike[Expression] {
+) extends TypedImperativeAggregate[MergeBuf] with UnaryLike[Expression] with ExpectsInputTypes {
 
   // analysis-time validation, like every other sketch aggregate: a wrong
   // column otherwise dies with a ClassCastException on the executors
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"topk_merge expects a BINARY sketch blob, got ${child.dataType.catalogString}")
+  override def inputTypes = Seq(BinaryType)
 
   override def createAggregationBuffer(): MergeBuf = new MergeBuf(null)
 
@@ -74,14 +69,9 @@ case class MergeSketchBlobsAgg(
   * (item, count, fingerprint), SortedSlice order. Pair with explode().
   */
 case class SketchRowsExpr(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
+    extends BinaryExpression with CodegenFallback with ExpectsInputTypes {
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (left.dataType == BinaryType && right.dataType == IntegerType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"topk_rows expects (binary, int), got (${left.dataType.catalogString}, ${right.dataType.catalogString})")
-
+  override def inputTypes = Seq(BinaryType, IntegerType)
   override def dataType: DataType = TopKResult.dataType
   override def nullable: Boolean  = true
 
@@ -137,14 +127,9 @@ private[plans] final class BlobDecodeMemo {
   * blob change, not once per row; see [[BlobDecodeMemo]].
   */
 case class SketchCountExpr(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
+    extends BinaryExpression with CodegenFallback with ExpectsInputTypes {
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (left.dataType == BinaryType && right.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"topk_count expects (binary, string), got (${left.dataType}, ${right.dataType})")
-
+  override def inputTypes = Seq(BinaryType, StringType)
   override def dataType: DataType = LongType
   override def nullable: Boolean  = false
 
@@ -174,14 +159,9 @@ case class SketchCountExpr(left: Expression, right: Expression)
   * (sketch.go:172-175) over a serialized sketch blob.
   */
 case class SketchQueryExpr(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
+    extends BinaryExpression with CodegenFallback with ExpectsInputTypes {
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (left.dataType == BinaryType && right.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"topk_query expects (binary, string), got (${left.dataType}, ${right.dataType})")
-
+  override def inputTypes = Seq(BinaryType, StringType)
   override def dataType: DataType = BooleanType
   override def nullable: Boolean  = false
 

@@ -4,7 +4,7 @@ import graft.core.{Sketch, SketchCodec, SketchConfig, TokenCombiner}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, GenericInternalRow, Literal}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, ExpectsInputTypes, Expression, GenericInternalRow, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -104,29 +104,33 @@ object TopKResult {
   }
 }
 
-/** Shared machinery for the ARRAY<INT>-input (token) sketch aggregates: the
-  * rows-emitting and blob-emitting variants differ ONLY in eval/dataType, so
-  * type checking, the bound-ordinal reader, update, merge and the codec live
-  * here once — a fix to the update path cannot drift between the pair.
+/** Top-K over an `array<int>` token column — one aggregate call per sequence
+  * row, counted over the array in place (the north-star shape: no explode,
+  * no per-token row machinery).
   *
   * The buffer is a [[TokenCombiner]]: `update` only counts the row's tokens
   * (null arrays and null elements are skipped, weight 1 per occurrence);
   * `merge`, `serialize` and `eval` flush the counts into the sketch first,
-  * heaviest token first. Its table is bounded at
+  * heaviest token first, so the sketch sees one weighted add per distinct
+  * token of a flush window. Its table is bounded at
   * `TokenCombiner.capacity(cfg)` 8-byte slots, at most max(16 KB, 16/3 ×
   * the sketch's cell bytes), and a full table flushes mid-stream. The
   * partial state is a deterministic function of the partition's input, so
-  * a task retry reproduces the same blob.
+  * a task retry reproduces the same blob. The serialized buffer is a TKP2
+  * sketch blob (SQL `topk_tokens_sketch` emits it, [[BufferBytesAgg]]).
   */
-sealed abstract class TokensSketchAggBase
-    extends TypedImperativeAggregate[TokenCombiner] with UnaryLike[Expression] {
-  def cfg: SketchConfig
-  protected def fnName: String
+case class TokensTopKAgg(
+    child: Expression,
+    cfg: SketchConfig,
+    emitK: Int,
+    mutableAggBufferOffset: Int = 0,
+    inputAggBufferOffset: Int = 0
+) extends TypedImperativeAggregate[TokenCombiner] with UnaryLike[Expression] {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(IntegerType, _) => TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
-      s"$fnName requires ARRAY<INT> tokens, got ${other.catalogString}")
+      s"topk_tokens(_sketch) requires ARRAY<INT> tokens, got ${other.catalogString}")
   }
 
   override def createAggregationBuffer(): TokenCombiner = new TokenCombiner(new Sketch(cfg))
@@ -160,21 +164,7 @@ sealed abstract class TokensSketchAggBase
   override def deserialize(bytes: Array[Byte]): TokenCombiner =
     new TokenCombiner(SketchCodec.decode(bytes))
   override def nullable: Boolean = false
-}
 
-/** Top-K over an `array<int>` token column — one aggregate call per sequence
-  * row, counted over the array in place (the north-star shape: no explode,
-  * no per-token row machinery); the sketch sees one weighted add per
-  * distinct token of a flush window (see [[TokensSketchAggBase]]).
-  */
-case class TokensTopKAgg(
-    child: Expression,
-    cfg: SketchConfig,
-    emitK: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0
-) extends TokensSketchAggBase {
-  override protected def fnName: String         = "topk_tokens"
   override def eval(buffer: TokenCombiner): Any = TopKResult.toArrayData(buffer.flushed, emitK)
   override def dataType: DataType               = TopKResult.dataType
 
@@ -186,38 +176,12 @@ case class TokensTopKAgg(
     copy(child = newChild)
 }
 
-/** Array-native token aggregate emitting the serialized sketch BLOB instead
-  * of rows — the level-1 stage of the tree merge (TopK.tokensArray): at scale
-  * a single final task cannot union 10⁵⁺ partial sketches (an O(partitions)
-  * serial tail, ~400 KB decode each for wide geometries); grouping partials
-  * into `fanIn` intermediate unions keeps every merge task O(partitions /
-  * fanIn) and the final task O(fanIn).
-  */
-case class TokensSketchBytesAgg(
-    child: Expression,
-    cfg: SketchConfig,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0
-) extends TokensSketchAggBase {
-  override protected def fnName: String         = "topk_tokens_sketch"
-  override def eval(buffer: TokenCombiner): Any = SketchCodec.encode(buffer.flushed)
-  override def dataType: DataType               = BinaryType
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): TokensSketchBytesAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): TokensSketchBytesAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): TokensSketchBytesAgg =
-    copy(child = newChild)
-}
-
-/** Shared machinery for the (item string, weight long) aggregates — same
-  * single-definition rationale as [[TokensSketchAggBase]]. The buffer is an
-  * [[AdaptiveTopK]]: exact counts up to `AdaptiveTopK.cutoff(cfg)` distinct
-  * items per group, a sketch above, so every string-item aggregate is exact
-  * on small groups. The sketch hashes the UTF8String's bytes in place; the
-  * heap's String key materializes only on admitted updates (memoized per
-  * buffer).
+/** Shared machinery for the (item string, weight long) aggregates, which
+  * differ ONLY in eval/dataType. The buffer is an [[AdaptiveTopK]]: exact
+  * counts up to `AdaptiveTopK.cutoff(cfg)` distinct items per group, a
+  * sketch above, so every string-item aggregate is exact on small groups.
+  * The sketch hashes the UTF8String's bytes in place; the heap's String key
+  * materializes only on admitted updates (memoized per buffer).
   */
 sealed abstract class ItemsSketchAggBase
     extends TypedImperativeAggregate[AdaptiveTopK] with BinaryLike[Expression] {
@@ -291,6 +255,66 @@ case class SketchBytesAgg(
     copy(left = newLeft, right = newRight)
 }
 
+/** Level 1 of a two-level top-K plan: runs `agg` and emits its serialized
+  * buffer — the bytes Spark's own partial→final handoff ships for `agg`.
+  * [[MergeBuffersAgg]] over the same `agg` folds them back in, so a
+  * two-level plan merges exactly what its one-level twin merges.
+  */
+case class BufferBytesAgg[T](
+    agg: TypedImperativeAggregate[T],
+    mutableAggBufferOffset: Int = 0,
+    inputAggBufferOffset: Int = 0
+) extends TypedImperativeAggregate[T] {
+  override def children: Seq[Expression]                = agg.children
+  override def checkInputDataTypes(): TypeCheckResult   = agg.checkInputDataTypes()
+  override def createAggregationBuffer(): T             = agg.createAggregationBuffer()
+  override def update(buffer: T, input: InternalRow): T = agg.update(buffer, input)
+  override def merge(buffer: T, other: T): T            = agg.merge(buffer, other)
+  override def eval(buffer: T): Any                     = agg.serialize(buffer)
+  override def serialize(buffer: T): Array[Byte]        = agg.serialize(buffer)
+  override def deserialize(bytes: Array[Byte]): T       = agg.deserialize(bytes)
+  override def dataType: DataType                       = BinaryType
+  override def nullable: Boolean                        = false
+
+  override def withNewMutableAggBufferOffset(newOffset: Int): BufferBytesAgg[T] =
+    copy(mutableAggBufferOffset = newOffset)
+  override def withNewInputAggBufferOffset(newOffset: Int): BufferBytesAgg[T] =
+    copy(inputAggBufferOffset = newOffset)
+  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): BufferBytesAgg[T] =
+    copy(agg = agg.withNewChildren(newChildren).asInstanceOf[TypedImperativeAggregate[T]])
+}
+
+/** Level 2 of a two-level top-K plan: folds [[BufferBytesAgg]] bytes into
+  * one buffer with `agg`'s own deserialize and merge, and emits `agg`'s
+  * eval. Only `agg`'s buffer methods run; its own inputs are never read.
+  */
+case class MergeBuffersAgg[T](
+    child: Expression,
+    agg: TypedImperativeAggregate[T],
+    mutableAggBufferOffset: Int = 0,
+    inputAggBufferOffset: Int = 0
+) extends TypedImperativeAggregate[T] with UnaryLike[Expression] with ExpectsInputTypes {
+  override def inputTypes                    = Seq(BinaryType)
+  override def createAggregationBuffer(): T = agg.createAggregationBuffer()
+  override def update(buffer: T, input: InternalRow): T = {
+    val bytes = child.eval(input)
+    if (bytes == null) buffer else agg.merge(buffer, agg.deserialize(bytes.asInstanceOf[Array[Byte]]))
+  }
+  override def merge(buffer: T, other: T): T      = agg.merge(buffer, other)
+  override def eval(buffer: T): Any               = agg.eval(buffer)
+  override def serialize(buffer: T): Array[Byte]  = agg.serialize(buffer)
+  override def deserialize(bytes: Array[Byte]): T = agg.deserialize(bytes)
+  override def dataType: DataType                 = agg.dataType
+  override def nullable: Boolean                  = agg.nullable
+
+  override def withNewMutableAggBufferOffset(newOffset: Int): MergeBuffersAgg[T] =
+    copy(mutableAggBufferOffset = newOffset)
+  override def withNewInputAggBufferOffset(newOffset: Int): MergeBuffersAgg[T] =
+    copy(inputAggBufferOffset = newOffset)
+  override protected def withNewChildInternal(newChild: Expression): MergeBuffersAgg[T] =
+    copy(child = newChild)
+}
+
 object TopKAggregates {
   /** The one oversample rule: a row-emitting aggregate's buffer tracks
     * k×oversample candidates (oversample < 1 counts as 1) and emits cfg.k
@@ -309,30 +333,17 @@ object TopKAggregates {
     Bridge.column(
       TokensTopKAgg(Bridge.expression(tokens), cfg, emitK).toAggregateExpression())
 
-  /** `agg(itemsTopK($"item", $"weight", cfg, k))` — generic item top-K. */
-  def itemsTopK(item: Column, weight: Column, cfg: SketchConfig, emitK: Int): Column =
-    Bridge.column(
-      ItemsTopKAgg(Bridge.expression(item), Bridge.expression(weight),
-        cfg, emitK).toAggregateExpression())
-
-  /** `agg(tokensSketchBytes($"tokens", cfg))` — array-native token partial
-    * emitting the sketch blob (tree-merge level 1).
-    */
-  def tokensSketchBytes(tokens: Column, cfg: SketchConfig): Column =
-    Bridge.column(
-      TokensSketchBytesAgg(Bridge.expression(tokens), cfg).toAggregateExpression())
-
   /** `agg(sketchBytes($"item", $"weight", cfg))` — emit the sketch blob. */
   def sketchBytes(item: Column, weight: Column, cfg: SketchConfig): Column =
     Bridge.column(
       SketchBytesAgg(Bridge.expression(item), Bridge.expression(weight), cfg)
         .toAggregateExpression())
 
-  /** `agg(mergeBlobs($"blob"))` — union sketch blobs into one blob. */
-  def mergeBlobs(blob: Column): Column =
-    Bridge.column(MergeSketchBlobsAgg(Bridge.expression(blob)).toAggregateExpression())
+  /** `agg(bufferBytes(a))` — level 1 of a two-level plan over `a`. */
+  def bufferBytes[T](agg: TypedImperativeAggregate[T]): Column =
+    Bridge.column(BufferBytesAgg(agg).toAggregateExpression())
 
-  /** `select(sketchRows($"blob", k))` — decode a blob to its top-k rows. */
-  def sketchRows(blob: Column, k: Column): Column =
-    Bridge.column(SketchRowsExpr(Bridge.expression(blob), Bridge.expression(k)))
+  /** `agg(mergeBuffers($"buf", a))` — level 2: `a`'s rows from level-1 bytes. */
+  def mergeBuffers[T](buffers: Column, agg: TypedImperativeAggregate[T]): Column =
+    Bridge.column(MergeBuffersAgg(Bridge.expression(buffers), agg).toAggregateExpression())
 }

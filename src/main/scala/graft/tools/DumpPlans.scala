@@ -45,16 +45,23 @@ object DumpPlans {
     section("Token top-K (array-native, tree merge)",
       """The north-star job. One scan; `ReadSchema` prunes to the `tokens`
         |column only; ObjectHashAggregate runs the HeavyKeeper partial per
-        |partition (map-side, one blob per scan task), the exchange carries
-        |fixed-size sketch blobs hashed to `fanIn` intermediate UNION tasks,
-        |and only `fanIn` blobs reach the final single-task union — a flat
-        |merge would make the final task O(#partitions) serial decode+union
-        |work (fatal at 10^5+ tasks). No explode stage, no row-level shuffle —
-        |shuffle bytes are independent of token count. (fanIn pinned low here
-        |so the tree shape renders on the small doc table; the partition-count
-        |cutover would select the equally-correct flat plan for it.)""".stripMargin,
-      TopK.tokensArray(toks.repartition(32), col("tokens"),
-        SketchConfig.withDefaults(10, width = 1024, depth = 3), mergeFanIn = -8))
+        |partition. Both exchanges carry `TokensTopKAgg`'s own serialized
+        |buffer, a fixed-size TKP2 sketch (`BufferBytesAgg`): scan partials
+        |hash to `fanIn` intermediate merge tasks, and only `fanIn` reach the
+        |final single-task merge (`MergeBuffersAgg`) — a flat merge would make
+        |the final task O(#partitions) serial work (fatal at 10^5+ tasks). No
+        |explode stage, no row-level shuffle. (fanIn forced to 8 to render the
+        |tree on this small table; the stats cutover would pick the flat plan.)""".stripMargin,
+      TopK.globalTopK(toks.repartition(32), TopK.tokensAgg(col("tokens"),
+        SketchConfig.withDefaults(10, width = 1024, depth = 3), 4), Some(8)))
+
+    section("Salted per-group top-K (two-level skew path)",
+      """Level 1 groups by (group, salt = pmod(xxhash64(item), 16)) and ships
+        |`ItemsTopKAgg`'s serialized buffer per (group, salt) (`BufferBytesAgg`:
+        |an exact item -> count map up to the cutoff, a sketch past it); level 2
+        |merges a group's 16 buffers with the same aggregate (`MergeBuffersAgg`).""".stripMargin,
+      TopK.aggregateBySalted(ev, Seq(lit(0).as("g")), col("event_type"), lit(1L),
+        SketchConfig.withDefaults(5, width = 1024, depth = 3), saltFanout = 16))
 
     section("Per-group (tumbling-window) top-K",
       """groupBy(day) + the items aggregate: partial ObjectHashAggregate per
@@ -65,18 +72,19 @@ object DumpPlans {
         Seq(col("day")), col("event_type"), lit(1L),
         SketchConfig.withDefaults(3, width = 1024, depth = 3)))
 
-    section("Sliding window (per-tick sketch ring, batch)",
-      """Stage 1 aggregates one sketch per tick (same map-side combine);
-        |stage 2 EXPLODES each tick's contribution range (linear N-fold
-        |duplication of fixed-size blobs — NO range join, NO
+    section("Sliding window (per-tick buffer ring, batch)",
+      """Stage 1 aggregates one `ItemsTopKAgg` buffer per tick and ships it
+        |serialized (`BufferBytesAgg`: an exact map up to the cutoff, a sketch
+        |past it); stage 2 EXPLODES each tick's contribution range (linear
+        |N-fold duplication of bounded buffers — NO range join, NO
         |BroadcastNestedLoopJoin), left-semi joins the KNOWN tick universe
         |(a literal local table — ticks are time-derived, so no second scan
         |of the input; parquet footer min/max gives the range), and
-        |equality-groups on out_tick to union-merge, through an explicit
-        |out_tick repartition that pins the merge stage's width against
-        |AQE's byte-based coalescing (round 6; replaces the groupBy's own
-        |exchange). The raw data is scanned exactly once — the plan's only
-        |scan node.""".stripMargin,
+        |equality-groups on out_tick into the aggregate's own merge
+        |(`MergeBuffersAgg`), through an explicit out_tick repartition that
+        |pins the merge stage's width against AQE's byte-based coalescing
+        |(round 6; replaces the groupBy's own exchange). The raw data is
+        |scanned exactly once — the plan's only scan node.""".stripMargin,
       graft.operators.SlidingTopK.perTick(
         ev.withColumn("tick", datediff(to_date(col("ts")), lit("2024-01-01"))),
         col("tick"), col("event_type"), lit(1L), 7,

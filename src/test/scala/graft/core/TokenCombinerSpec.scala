@@ -2,7 +2,7 @@ package graft.core
 
 import scala.collection.mutable
 
-import graft.plans.{TokensSketchBytesAgg, TokensTopKAgg}
+import graft.plans.{BufferBytesAgg, TokensTopKAgg}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.BoundReference
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -133,7 +133,7 @@ class TokenCombinerSpec extends AnyFunSuite {
     } == want)
 
     // the blob variant, split over two partials and merged
-    val blobs = TokensSketchBytesAgg(child, cfg)
+    val blobs = BufferBytesAgg(rows)
     def partial(as: Seq[ArrayData]) =
       blobs.deserialize(blobs.serialize(
         as.foldLeft(blobs.createAggregationBuffer())((b, a) => blobs.update(b, InternalRow(a)))))

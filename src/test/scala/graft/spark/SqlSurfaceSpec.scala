@@ -263,5 +263,13 @@ class SqlSurfaceSpec extends AnyFunSuite {
       spark.sql("SELECT topk_tokens(toks64, 3) FROM bad_t").collect()
     }
     assert(e.getMessage.toLowerCase.contains("array<int>"))
+    // the blob functions and the token blob partial, one wrong argument each
+    Seq("topk_merge(s)", "topk_rows(s, 3)", "topk_rows(CAST(s AS BINARY), s)",
+        "topk_count(toks64, s)", "topk_query(toks64, s)", "topk_tokens_sketch(toks64, 3)").foreach { call =>
+      withClue(call) {
+        assertThrows[org.apache.spark.sql.AnalysisException](
+          spark.sql(s"SELECT $call FROM bad_t").queryExecution.assertAnalyzed())
+      }
+    }
   }
 }

@@ -115,7 +115,7 @@ class TopKAggregatorSpec extends AnyFunSuite {
     }
     val df  = docs.toDF("doc_id", "tokens").repartition(8)
     val cfg = SketchConfig.withDefaults(20, width = 1024, depth = 3)
-    val ours = TopK.tokensArray(df, col("tokens"), cfg, mergeFanIn = -4) // force tree
+    val ours = TopK.globalTopK(df, TopK.tokensAgg(col("tokens"), cfg, 4), fanIn = Some(4)) // force tree
       .select("item", "count").collect().map(r => (r.getString(0), r.getLong(1))).toMap
     val truth = docs.flatMap(_._2).groupBy(t => t.toString).view.mapValues(_.size.toLong).toMap
     val exactTop = truth.toSeq.sortBy { case (i, c) => (-c, i) }.take(20).map(_._1).toSet
@@ -138,13 +138,13 @@ class TopKAggregatorSpec extends AnyFunSuite {
     }
     val df  = rows.toDF("doc_id", "tokens").repartition(16)
     val cfg = SketchConfig.withDefaults(10, width = 2048, depth = 3)
-    def res(fanIn: Int) =
-      TopK.tokensArray(df, col("tokens"), cfg, mergeFanIn = fanIn)
+    def res(fanIn: Option[Int]) =
+      TopK.globalTopK(df, TopK.tokensAgg(col("tokens"), cfg, 4), fanIn)
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-    val flat = res(1)
-    // negative fanIn forces the tree (the auto cutover would pick flat for
-    // an input this small); 64 exercises the auto path (-> flat here)
-    assert(flat.nonEmpty && flat == res(-4) && flat == res(64))
+    val flat = res(Some(1))
+    // Some(4) forces the tree (the auto cutover would pick flat for an
+    // input this small); None exercises the auto path (-> flat here)
+    assert(flat.nonEmpty && flat == res(Some(4)) && flat == res(None))
     // counts are exact: compare against a plain explode + groupBy oracle
     val exact = df.select(explode(col("tokens")).as("t")).groupBy("t").count()
       .orderBy(col("count").desc, col("t").asc).limit(10)
@@ -161,11 +161,35 @@ class TopKAggregatorSpec extends AnyFunSuite {
     spark.sparkContext.parallelize(docs, 8).toDF("doc_id", "tokens")
   }
 
-  /** One TokensSketchBytesAgg blob per input partition, in partition order. */
+  /** One serialized TokensTopKAgg buffer (a TKP2 sketch blob) per input
+    * partition, in partition order.
+    */
   private def partitionBlobs(df: org.apache.spark.sql.DataFrame, cfg: SketchConfig) =
     df.groupBy(spark_partition_id().as("p"))
-      .agg(TopKAggregates.tokensSketchBytes(col("tokens"), cfg).as("b"))
+      .agg(TopKAggregates.bufferBytes(TopK.tokensAgg(col("tokens"), cfg, 1)).as("b"))
       .orderBy("p").collect().map(_.getAs[Array[Byte]]("b")).toSeq
+
+  test("topk_tokens_sketch blobs keep their bytes on the seeded power-law input") {
+    // SHA-256 of each partition's blob at 1024x3: users store these blobs
+    // and feed them to topk_merge/topk_count later, so the bytes are pinned
+    graft.functions.SqlFunctions.register(spark)
+    powerLawDocs(seed = 13).createOrReplaceTempView("plaw_docs")
+    val sha = java.security.MessageDigest.getInstance("SHA-256")
+    val got = spark.sql(
+      """SELECT p, topk_tokens_sketch(tokens, 80, 1024, 3) AS b
+        |FROM (SELECT spark_partition_id() AS p, tokens FROM plaw_docs)
+        |GROUP BY p ORDER BY p""".stripMargin)
+      .collect().map(r => sha.digest(r.getAs[Array[Byte]]("b")).map("%02x".format(_)).mkString)
+    assert(got.toSeq == Seq(
+      "45b065c28184d72174ede152185e96116207956696023efeab059b0d7079ad70",
+      "c567a7b7fda638e5bbba1f677fc47dcf3ff91292f1164a3b4f19bb7988e3a440",
+      "49bc1e78ce8dfad6207bd6c863453af3dfbf2fb49df8ee01165d621c2ccf79dd",
+      "2f9bdd635a100f0e379ed4bd5a3cfdc42c990748b5b516f08780072d155003eb",
+      "f24a96081f02e8dec2886d3c4204e1d10569766dd7edc207e0c10490607ef70f",
+      "f936e2259f9881d7f9afb0ff998921ecdcf0fda7dc4d1b139cea801bff6f5fd0",
+      "b28a7c5dbe21f2b596b80b0918d4da50a2d3aa4979b67764275dd8b46ade9a64",
+      "53251a4fd6e2ed3b9a35c71bb5270bb1558c6ca94b7c6885f2a52c10550af6ce"))
+  }
 
   test("token partials are byte-identical across runs over the same partitions") {
     // a task retry reads the same partition again; at a colliding geometry
@@ -214,10 +238,11 @@ class TopKAggregatorSpec extends AnyFunSuite {
 
   test("item aggregates count exactly up to the cutoff at a colliding geometry") {
     // width 4 x depth 1 collides almost every item, so only the exact
-    // buffer can return these counts: every row-emitting item aggregate
-    // (TopK.aggregate's flat plan, aggregateBy, SQL topk_items) must match
-    // the exact answer, ties ordered by item asc, for <= cutoff distinct
-    // items. (The tree plan unions sketch blobs, exact only collision-free.)
+    // buffer can return these counts: every row-emitting item plan must
+    // match the exact answer, ties ordered by item asc, for <= cutoff
+    // distinct items — the one-level plans (TopK.aggregate's flat plan,
+    // aggregateBy, SQL topk_items) and the two-level ones, which merge the
+    // same buffer (the tree, the salted plan, the per-tick window)
     val cfg = SketchConfig.withDefaults(5, width = 4, depth = 1)
     val n   = graft.plans.AdaptiveTopK.cutoff(TopKAggregates.candidates(cfg, 4))
     val df  = tiedItems(n, Seq("g0", "g1"))
@@ -228,18 +253,39 @@ class TopKAggregatorSpec extends AnyFunSuite {
     val want  = exactTop(local.map(r => (r._2, r._3)))
     val fp    = (i: String) => Hashing.fingerprint(i).toLong & 0xffffffffL
 
-    val global = TopK.aggregate(df, col("item"), col("weight"), cfg, mergeFanIn = 1).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-    assert(global == want.map { case (i, c) => (i, c, fp(i)) })
+    // no size statistics on a parallelize input: the default takes the tree
+    Seq(None, Some(1), Some(4)).foreach { fanIn =>
+      val global = TopK.globalTopK(df, TopK.itemsAgg(col("item"), col("weight"), cfg, 4), fanIn)
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
+      withClue(s"fanIn $fanIn") { assert(global == want.map { case (i, c) => (i, c, fp(i)) }) }
+    }
+    val byDefault = TopK.aggregate(df, col("item"), col("weight"), cfg).collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSeq
+    assert(byDefault == want)
 
-    val perGroup = TopK.aggregateBy(df, Seq(col("grp")), col("item"), col("weight"), cfg)
-      .orderBy("grp", "rank").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getString(2), r.getLong(3))).toSeq
+    def rows(out: org.apache.spark.sql.DataFrame) = out.orderBy(out.columns(0), "rank").collect()
+      .map(r => (r.get(0).toString, r.getLong(1), r.getString(2), r.getLong(3))).toSeq
     val wantPerGroup = Seq("g0", "g1").flatMap { g =>
       exactTop(local.filter(_._1 == g).map(r => (r._2, r._3))).zipWithIndex
         .map { case ((i, c), r) => (g, r + 1L, i, c) }
     }
-    assert(perGroup == wantPerGroup)
+    assert(rows(TopK.aggregateBy(df, Seq(col("grp")), col("item"), col("weight"), cfg)) == wantPerGroup)
+    assert(rows(TopK.aggregateBySalted(df, Seq(col("grp")), col("item"), col("weight"), cfg,
+      saltFanout = 4)) == wantPerGroup)
+
+    // g0 is tick 0 and g1 tick 1: a window of 2 adds g0's counts into tick 1
+    val tickOf = (g: String) => if (g == "g1") 1L else 0L
+    Seq(1, 2).foreach { window =>
+      val perTick = graft.operators.SlidingTopK.perTick(
+        df.withColumn("tick", (col("grp") === "g1").cast("long")), col("tick"), col("item"),
+        col("weight"), window, TopKAggregates.candidates(cfg, 4), k = 5)
+      val wantTicks = Seq(0L, 1L).flatMap { t =>
+        val inWindow = local.filter(r => tickOf(r._1) > t - window && tickOf(r._1) <= t)
+        exactTop(inWindow.map(r => (r._2, r._3))).zipWithIndex
+          .map { case ((i, c), r) => (t.toString, r + 1L, i, c) }
+      }
+      withClue(s"window $window") { assert(rows(perTick) == wantTicks) }
+    }
 
     graft.functions.SqlFunctions.register(spark)
     df.createOrReplaceTempView("tied_items")
@@ -250,6 +296,17 @@ class TopKAggregatorSpec extends AnyFunSuite {
         |ORDER BY grp, pos""".stripMargin)
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
     assert(sql == wantPerGroup.map(r => (r._1, r._3, r._4)))
+  }
+
+  test("aggregateBySalted rejects saltFanout < 1 up front") {
+    val rows = Seq(("g", "a", 1L)).toDF("grp", "item", "weight")
+    val cfg  = SketchConfig.withDefaults(2, width = 256, depth = 3)
+    Seq(0, -3).foreach { fanout =>
+      withClue(s"saltFanout $fanout") {
+        assertThrows[IllegalArgumentException](TopK.aggregateBySalted(rows, Seq(col("grp")),
+          col("item"), col("weight"), cfg, saltFanout = fanout).collect())
+      }
+    }
   }
 
   test("topk_sketch partials are byte-identical across runs over the same partitions") {
@@ -376,7 +433,7 @@ class TopKAggregatorSpec extends AnyFunSuite {
     val aggs = new AdaptiveSparkPlanHelper {}.collect(out.queryExecution.executedPlan) {
       case a: BaseAggregateExec => a.aggregateExpressions.map(_.aggregateFunction)
     }.flatten
-    assert(aggs.exists(_.isInstanceOf[graft.plans.MergeSketchBlobsAgg]), aggs)
+    assert(aggs.exists(_.isInstanceOf[graft.plans.MergeBuffersAgg[_]]), aggs)
     assert(!aggs.exists(_.isInstanceOf[ScalaAggregator[_, _, _]]), aggs)
   }
 
