@@ -812,13 +812,13 @@ object SparkEntry {
     },
 
     // Streaming SLIDING engine end-to-end: the reference's tick-ring state
-    // machine (flatMapGroupsWithState, watermark-driven Ticks) over the
-    // events stream, one global key, tick = day, window = 7 ticks. A tick
-    // emits exactly once, when the watermark proves it complete — so the
-    // final day stays pending (oracle excludes it, same as the tumbling
-    // stream query).
+    // machine (flatMapGroupsWithState, Ticks driven by tick completion) over
+    // the events stream, one global key, tick = day, window = 7 ticks. A
+    // tick emits exactly once, when the watermark or the key's own newest
+    // event proves it complete — so the final day stays pending (oracle
+    // excludes it, same as the tumbling stream query).
     Query("topk_stream_sliding",
-      // the sliding stream emits a tick only once the watermark completes it:
+      // the sliding stream emits a tick only once it is complete:
       // every tick from the first data tick up to (not incl.) the last — the
       // DENSE range, because the engine keeps emitting event-less ticks while
       // the trailing window still holds mass (and the inner join below drops

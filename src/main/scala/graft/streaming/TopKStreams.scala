@@ -6,6 +6,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import graft.core.{Rng, SketchCodec, SketchConfig, SlidingConfig, SlidingSketch}
 import graft.operators.TopK
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -26,13 +27,20 @@ final case class TickTopK(key: String, tick: Long, rank: Int, item: String,
   * Session: `session_window` over the same item aggregate (see [[session]]).
   *
   * Sliding: the reference's tick ring (reference: sliding/sketch.go:106-129)
-  * as a `flatMapGroupsWithState` operator. Event-time ticks; the watermark
+  * as a `flatMapGroupsWithState` operator. Event-time ticks; tick completion
   * drives `Ticks(n)` exactly like the reference's caller does manually
   * (reference: sliding/sketch_test.go:376-388). Emission is EXACTLY-ONCE per
-  * (key, tick): a tick's top-K is emitted only once the watermark proves the
-  * tick complete; later-arriving rows for emitted ticks are already excluded
-  * by the upstream watermark. Updates ahead of the watermark are buffered in
-  * the state value, so replays from checkpoint reproduce identical rows.
+  * (key, tick): a tick's top-K is emitted in the first micro-batch that
+  * proves the tick complete — by the watermark, or by the key's own newest
+  * positive-weight row in that batch less the watermark delay, which the
+  * next batch's watermark will reach. The key-time rule holds only while
+  * graft's watermark is the lineage's only one (an upstream `withWatermark`
+  * keeps the watermark rule alone). Rows for an emitted tick are late and
+  * are dropped: Spark drops them at the current watermark under
+  * `spark.sql.streaming.statefulOperator.allowMultiple=false`; its default
+  * filter runs one batch behind, and the state function drops the rest.
+  * Updates ahead of completion are buffered in the state value, so replays
+  * from checkpoint reproduce identical rows.
   *
   * State partitions: every engine here keeps its state in state stores, one
   * set per shuffle partition, and a query's partition count is fixed at its
@@ -239,11 +247,19 @@ object TopKStreams {
     // (Spark's event-time-timeout check requires it) — and the object
     // boundary of mapPartitions strips attribute metadata, so the watermark
     // is declared on the REDUCED rows (same per-batch max ts, see above)
-    reduced
-      .withWatermark("_2", watermarkDelay)
+    val watermarked = reduced.withWatermark("_2", watermarkDelay)
+    // A key's own rows may close its ticks only while graft's watermark is
+    // the lineage's only one: an upstream watermark with a longer delay
+    // holds the global watermark back, and rows inside that delay must count.
+    val keyDelayMs =
+      if (updates.queryExecution.analyzed.find(_.isInstanceOf[EventTimeWatermark]).isDefined) None
+      else watermarked.queryExecution.analyzed.collectFirst {
+        case w: EventTimeWatermark => EventTimeWatermark.getDelayMs(w.delay)
+      }
+    watermarked
       .groupByKey(_._1)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        processSlidingGroup(cfg, tickMillis, emitK))
+        processSlidingGroup(cfg, tickMillis, emitK, keyDelayMs))
   }
 
   /** Per-group sliding state machine. State layout (codec in SlidingStreamCodec):
@@ -251,11 +267,18 @@ object TopKStreams {
     *
     * Per-tick cadence matches the reference's caller protocol — adds for tick
     * t, read top-K, then Tick() (reference: sliding/sketch_test.go:176-296):
-    * each completed tick emits its own top-K rows, exactly once. Long empty
+    * each completed tick emits its own top-K rows, exactly once. A tick is
+    * complete once the watermark passes its end or, with `keyDelayMs` set,
+    * once this call's newest positive-weight row less `keyDelayMs` does.
+    * Heartbeat (weight 0) rows only move the watermark: were they to close
+    * ticks here, a key could drain and drop its state a batch before the
+    * watermark rule would, and a row in the next batch would then start a
+    * fresh sketch where the watermark rule continues the old one. Long empty
     * gaps fast-forward through `ticks(n)` once the heap has drained (those
     * ticks would emit zero rows anyway).
     */
-  private def processSlidingGroup(cfg: SlidingConfig, tickMillis: Long, emitK: Int)(
+  private def processSlidingGroup(cfg: SlidingConfig, tickMillis: Long, emitK: Int,
+      keyDelayMs: Option[Long])(
       key: String,
       rows: Iterator[(String, java.sql.Timestamp, String, Long)],
       state: GroupState[Array[Byte]]
@@ -272,8 +295,10 @@ object TopKStreams {
     // the checkpointed state. Collected first so a heartbeat-only batch
     // (weight-0 watermark advancers — every trigger, for idle keys with a
     // large held-back pending set) skips the O(pending) rebuild entirely.
+    var incomingMaxTs = Long.MinValue
     val incoming = rows.collect {
       case (_, ts, item, weight) if ts != null && item != null && weight > 0 =>
+        incomingMaxTs = math.max(incomingMaxTs, ts.getTime)
         (Math.floorDiv(ts.getTime, tickMillis), item, weight)
     }.toArray
     if (incoming.nonEmpty) {
@@ -286,10 +311,18 @@ object TopKStreams {
       agg.forEach((k, v) => st.pending += ((k._1, k._2, v)))
     }
 
-    // a tick t is complete iff watermark >= (t+1)*tickMillis
+    // a tick t is complete iff watermark >= (t+1)*tickMillis, or iff this
+    // call's newest update row, less the delay, reaches (t+1)*tickMillis: the
+    // next batch runs at a watermark at least that high, so a row of tick t
+    // that still arrives is late (the loop below skips ticks behind the clock)
     val wmMillis = state.getCurrentWatermarkMs()
-    val completeThrough =
+    val byWatermark =
       if (wmMillis <= 0) Long.MinValue else Math.floorDiv(wmMillis, tickMillis) - 1
+    val completeThrough = keyDelayMs match {
+      case Some(delay) if incoming.nonEmpty =>
+        math.max(byWatermark, Math.floorDiv(incomingMaxTs - delay, tickMillis) - 1)
+      case _ => byWatermark
+    }
 
     val out = Vector.newBuilder[TickTopK]
     if (completeThrough > Long.MinValue) {

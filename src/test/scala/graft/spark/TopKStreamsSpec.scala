@@ -210,4 +210,71 @@ class TopKStreamsSpec extends AnyFunSuite {
         ("u1", 60L, 70L, 1L, "z", 1L)))
     } finally q.stop()
   }
+
+  /** Runs `TopKStreams.sliding` (tick 1 s, window 3, top 3) over `batches`,
+    * one micro-batch each with no-data batches off, and returns the
+    * emitted (batch id, key, tick, item, count) rows sorted.
+    */
+  private def slidingBatches(delay: String, batches: Seq[Seq[(String, Long, String, Long)]],
+      conf: Map[String, String] = Map.empty,
+      prepare: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame = identity)
+      : Seq[(Long, String, Long, String, Long)] = {
+    implicit val sqlCtx = spark.sqlContext
+    val settings = conf + ("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String, Long, String, Long)]()
+    try {
+      val input = MemoryStream[(String, Timestamp, String, Long)]
+      val df    = prepare(input.toDF.toDF("key", "ts", "item", "weight"))
+      val cfg   = SlidingConfig.withDefaults(3, 3, width = 256, depth = 3)
+      val q = TopKStreams.sliding(df, 1000L, delay, cfg, emitK = 3).writeStream
+        .foreachBatch { (ds: org.apache.spark.sql.Dataset[graft.streaming.TickTopK], id: Long) =>
+          ds.collect().foreach(r => got.add((id, r.key, r.tick, r.item, r.count)))
+        }.start()
+      try batches.foreach { b =>
+        input.addData(b.map { case (k, t, i, w) => (k, ts(t), i, w) })
+        q.processAllAvailable()
+      } finally q.stop()
+    } finally settings.keys.foreach(spark.conf.unset)
+    import scala.jdk.CollectionConverters._
+    got.asScala.toSeq.sorted
+  }
+
+  test("sliding: a key's own rows close its tick in the batch that completes it") {
+    // 1100 ms proves tick 0 complete at a 0 s delay: the watermark the next
+    // batch runs at is >= 1100, so no tick-0 row can still count
+    val rows = slidingBatches("0 seconds", Seq(
+      Seq(("a", 100L, "x", 1L), ("a", 1100L, "y", 1L)),
+      Seq(("a", 5000L, "hb", 0L))))
+    assert(rows.filter(_._3 == 0L) == Seq((0L, "a", 0L, "x", 1L)))
+  }
+
+  test("sliding: a user watermark upstream keeps ticks open until the global watermark closes them") {
+    // with its own 10 s watermark the global watermark is the smaller of the
+    // two, so z (1800 ms) arrives on time; a key-time close at 5000 - 0 s
+    // would have emitted ticks 1-3 without it
+    val rows = slidingBatches("0 seconds", Seq(
+      Seq(("a", 1500L, "x", 2L), ("a", 5000L, "y", 1L)),
+      Seq(("a", 1800L, "z", 4L)),
+      Seq(("b", 60000L, "hb", 0L)),
+      Seq(("b", 61000L, "hb", 0L))),
+      conf = Map("spark.sql.streaming.statefulOperator.allowMultiple" -> "false"),
+      prepare = _.withWatermark("ts", "10 seconds"))
+    (1L to 3L).foreach(t => assert(rows.exists(r => r._2 == "a" && r._3 == t && r._4 == "z" && r._5 == 4L),
+      s"tick $t: $rows"))
+  }
+
+  test("sliding: a row past the delay behind its key's closed tick does not count") {
+    // 3500 - 2 s closes tick 0 in batch 0. Spark's default late-row filter
+    // runs one batch behind (at batch 0's watermark), so z (500 ms, below
+    // batch 1's watermark of 1500) still reaches the state function; its
+    // tick is already emitted, so it is dropped as late
+    val rows = slidingBatches("2 seconds", Seq(
+      Seq(("a", 100L, "x", 1L), ("a", 3500L, "y", 1L)),
+      Seq(("a", 500L, "z", 5L)),
+      Seq(("a", 9000L, "hb", 0L)),
+      Seq(("a", 9500L, "hb", 0L))))
+    assert(rows.filter(_._3 == 0L) == Seq((0L, "a", 0L, "x", 1L)))
+    assert(!rows.exists(_._4 == "z"), rows)
+  }
 }
