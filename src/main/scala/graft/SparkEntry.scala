@@ -292,7 +292,8 @@ object SparkEntry {
     },
 
     // sliding window: 7-day window per day tick (sliding/sketch.go semantics,
-    // realized as the distributed per-tick sketch ring)
+    // realized as SlidingTopK.perTick: one item-aggregate buffer per tick,
+    // merged over each window)
     Query("topk_sliding_event_types",
       """WITH per AS (
            SELECT datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS tick,

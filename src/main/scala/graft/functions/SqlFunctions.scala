@@ -32,11 +32,13 @@ import org.apache.spark.sql.types.{LongType, StringType}
   *   FROM events GROUP BY user, session_window(ts, '1 hour')
   *   -- DISTRIBUTED sliding plan in SQL (one scan of the fact table): the
   *   -- `topk_sliding` aggregate above funnels each group through one buffer
-  *   -- (fine for bounded tick ranges per group); the scale path is the same
-  *   -- composition as graft.operators.SlidingTopK.perTick — per-tick blobs,
-  *   -- exploded contribution ranges, and a LITERAL ticks table (ticks are
-  *   -- time-derived, so the output tick set is known a priori; deriving it
-  *   -- from the input would cost a second scan):
+  *   -- (fine for bounded tick ranges per group); the scale path composes
+  *   -- per-tick blobs, exploded contribution ranges, and a LITERAL ticks
+  *   -- table (ticks are time-derived, so the output tick set is known a
+  *   -- priori; deriving it from the input would cost a second scan). It has
+  *   -- graft.operators.SlidingTopK.perTick's plan shape, but unions TKP2
+  *   -- blobs, which are exact only when collision-free; perTick and
+  *   -- topk_sliding merge the exact-up-to-the-cutoff item buffers:
   *   WITH per_tick AS (SELECT tick, topk_sketch(item, w, 40) sk FROM t GROUP BY tick),
   *   ticks AS (SELECT explode(sequence(0L, 9L)) out_tick),          -- literal
   *   win AS (SELECT c.out_tick, c.sk

@@ -6,11 +6,12 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 
-/** Distributed batch sliding-window top-K: the "ring of per-tick sub-sketches"
-  * realization of the reference's sliding semantics (sliding/sketch.go) —
-  * semantically the tick-ring with bucketHistoryLength = windowSize, where
-  * each tick's sub-counters live in their own buffer and window ageing is the
-  * buffer dropping out of the merge range.
+/** Distributed batch sliding-window top-K: the per-tick ring realization of
+  * the reference's sliding semantics (sliding/sketch.go) — semantically the
+  * tick-ring with bucketHistoryLength = windowSize, where each tick's counts
+  * live in their own item-aggregate buffer ([[graft.plans.AdaptiveTopK]],
+  * exact up to its cutoff) and window ageing is the buffer dropping out of
+  * the merge range.
   *
   * Plan shape (all distributed, no driver loop):
   *   1. partial-aggregate one buffer per tick (map-side combine per

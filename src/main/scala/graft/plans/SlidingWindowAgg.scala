@@ -4,7 +4,7 @@ import java.nio.ByteBuffer
 
 import scala.jdk.CollectionConverters._
 
-import graft.core.{Sketch, SketchCodec, SketchConfig}
+import graft.core.{SketchCodec, SketchConfig}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
@@ -12,42 +12,25 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggreg
 import org.apache.spark.sql.catalyst.trees.TernaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
-
-/** Per-tick sketch ring buffer for the SQL-facing sliding-window aggregate. */
-final class TickRing(val cfg: SketchConfig) {
-  val ticks = new java.util.TreeMap[Long, Sketch]()
-
-  def sketchFor(tick: Long): Sketch = {
-    var sk = ticks.get(tick)
-    if (sk == null) { sk = new Sketch(cfg); ticks.put(tick, sk) }
-    sk
-  }
-
-  def mergeWith(other: TickRing): TickRing = {
-    other.ticks.forEach { (tick, sk) =>
-      val mine = ticks.get(tick)
-      if (mine == null) ticks.put(tick, sk) else mine.merge(sk)
-    }
-    this
-  }
-}
 
 /** `topk_sliding(tick, item, weight, window_ticks, k[, width, depth])` — SQL
   * aggregate realizing the reference's sliding-window semantics
   * (sliding/sketch.go: ring of per-tick sub-counters, window = trailing N
-  * ticks) over a batch table in ONE aggregation: the buffer keeps one
-  * sub-sketch per distinct tick, partials merge tick-wise (commutative sketch
-  * union), and eval emits, for every tick t present, the top-k of the merged
-  * window [t-N+1, t].
+  * ticks) over a batch table in ONE aggregation: the buffer keeps one item
+  * aggregate buffer ([[AdaptiveTopK]]) per distinct tick, partials merge
+  * tick-wise, and eval emits, for every tick t present, the top-k of the
+  * merged window [t-N+1, t]. Counts are exact up to `AdaptiveTopK.cutoff`
+  * distinct items per window, as in `graft.operators.SlidingTopK.perTick`,
+  * which merges the same buffers.
   *
   * Output: array<struct<tick, rank, item, count, fingerprint>> — explode it.
   *
-  * Scale contract: buffer size is O(#distinct ticks in the GROUP × sketch
-  * size). Group by coarse key ranges (day/source/tenant) so per-group tick
-  * counts stay bounded; for unbounded tick ranges use the dataflow variant
-  * (`graft.operators.SlidingTopK.perTick` — explode + equality groupBy) or
-  * the streaming engine (watermark-driven ring with expiry).
+  * Scale contract: buffer size is O(#distinct ticks in the GROUP ×
+  * min(#distinct items, cutoff)). Group by coarse key ranges
+  * (day/source/tenant) so per-group tick counts stay bounded; for unbounded
+  * tick ranges use the dataflow variant (`SlidingTopK.perTick` — explode +
+  * equality groupBy) or the streaming engine (watermark-driven ring with
+  * expiry).
   */
 case class SlidingTopKAgg(
     first: Expression,  // tick (integral)
@@ -58,7 +41,8 @@ case class SlidingTopKAgg(
     cfg: SketchConfig,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0
-) extends TypedImperativeAggregate[TickRing] with TernaryLike[Expression] {
+) extends TypedImperativeAggregate[SlidingTopKAgg.Ring] with TernaryLike[Expression] {
+  import SlidingTopKAgg.Ring
 
   require(windowTicks >= 1, s"windowTicks must be >= 1, got $windowTicks")
   require(emitK >= 1, s"emitK must be >= 1, got $emitK")
@@ -71,59 +55,61 @@ case class SlidingTopKAgg(
     else TopKResult.checkItemWeight(second, third, "topk_sliding")
   }
 
-  override def createAggregationBuffer(): TickRing = new TickRing(cfg)
+  override def createAggregationBuffer(): Ring = new Ring()
+
+  private def freshTick(): AdaptiveTopK = new AdaptiveTopK(cfg, AdaptiveTopK.cutoff(cfg))
 
   @transient private lazy val reader = new TopKResult.ItemWeightReader(second, third)
 
-  override def update(buffer: TickRing, input: InternalRow): TickRing = {
+  override def update(buffer: Ring, input: InternalRow): Ring = {
     val tick = first.eval(input)
     val u    = reader.item(input)
-    if (tick != null && u != null) {
-      buffer.sketchFor(TopKResult.weightAsLong(tick))
-        .addUnsafe(u.getBaseObject, u.getBaseOffset, u.numBytes, reader.weight(input))
-    }
+    if (tick != null && u != null)
+      buffer.computeIfAbsent(TopKResult.weightAsLong(tick), _ => freshTick())
+        .add(u, reader.weight(input))
     buffer
   }
 
-  override def merge(buffer: TickRing, other: TickRing): TickRing = buffer.mergeWith(other)
+  override def merge(buffer: Ring, other: Ring): Ring = {
+    other.forEach((tick, b) => buffer.merge(tick, b, _ mergeWith _))
+    buffer
+  }
 
-  override def eval(buffer: TickRing): Any = {
+  override def eval(buffer: Ring): Any = {
     val out = Vector.newBuilder[Any]
-    buffer.ticks.forEach { (tick, _) =>
-      // merge the trailing window into a fresh sketch (union monoid)
-      val acc = new Sketch(cfg)
+    buffer.forEach { (tick, _) =>
       // clamped subtraction: a sentinel-ish tick near Long.MinValue would
       // wrap the lower bound positive and subMap throws fromKey > toKey
       val lo  = if (tick < Long.MinValue + (windowTicks - 1)) Long.MinValue
                 else tick - (windowTicks - 1)
-      val win = buffer.ticks.subMap(lo, true, tick, true)
-      win.forEach((_, sk) => acc.merge(sk))
-      val top = acc.sortedSlice
-      var i   = 0
-      val n   = math.min(emitK, top.length)
-      while (i < n) {
-        val e = top(i)
+      val acc = freshTick()
+      buffer.subMap(lo, true, tick, true).forEach((_, b) => acc.mergeWith(b))
+      val top = acc.toArrayData(emitK)
+      (0 until top.numElements()).foreach { i =>
+        val r = top.getStruct(i, 3)
         out += new GenericInternalRow(Array[Any](
-          tick.longValue(), (i + 1).toLong, UTF8String.fromString(e.item),
-          e.count, e.fingerprint.toLong & 0xffffffffL))
-        i += 1
+          tick, i + 1L, r.getUTF8String(0), r.getLong(1), r.getLong(2)))
       }
     }
     new GenericArrayData(out.result().toArray)
   }
 
-  /** Tick count, then per tick (ascending): tick, length-prefixed sketch. */
-  override def serialize(buffer: TickRing): Array[Byte] = {
-    val blobs = buffer.ticks.asScala.toSeq.map { case (tick, sk) => (tick, SketchCodec.encode(sk)) }
+  /** Tick count, then per tick (ascending): tick, length-prefixed
+    * `AdaptiveTopK.encode` bytes. Blocks written while each tick kept a
+    * plain sketch hold a bare TKP2 blob, which `AdaptiveTopK.decode` reads
+    * as a spilled buffer.
+    */
+  override def serialize(buffer: Ring): Array[Byte] = {
+    val blobs = buffer.asScala.toSeq.map { case (tick, b) => (tick, AdaptiveTopK.encode(b)) }
     val out   = ByteBuffer.allocate(4 + blobs.iterator.map(12 + _._2.length).sum)
     out.putInt(blobs.size)
     blobs.foreach { case (tick, blob) => SketchCodec.putBlock(out.putLong(tick), blob) }
     out.array()
   }
 
-  override def deserialize(bytes: Array[Byte]): TickRing = SketchCodec.decoding {
+  override def deserialize(bytes: Array[Byte]): Ring = SketchCodec.decoding {
     val in   = ByteBuffer.wrap(bytes)
-    val ring = new TickRing(cfg)
+    val ring = new Ring()
     val n    = in.getInt()
     // every entry is >= 12 bytes (tick 8 + blob length 4): a count the
     // remaining payload cannot hold is corruption, not an empty ring
@@ -132,7 +118,7 @@ case class SlidingTopKAgg(
     var i = 0
     while (i < n) {
       val tick = in.getLong()
-      ring.ticks.put(tick, SketchCodec.decode(SketchCodec.readBlock(in)))
+      ring.put(tick, AdaptiveTopK.decode(SketchCodec.readBlock(in), cfg, AdaptiveTopK.cutoff(cfg)))
       i += 1
     }
     ring
@@ -151,6 +137,9 @@ case class SlidingTopKAgg(
 }
 
 object SlidingTopKAgg {
+  /** The buffer: one [[AdaptiveTopK]] per distinct tick, ascending. */
+  type Ring = java.util.TreeMap[Long, AdaptiveTopK]
+
   val dataType: DataType = ArrayType(StructType(Seq(
     StructField("tick", LongType, nullable = false),
     StructField("rank", LongType, nullable = false),

@@ -127,28 +127,35 @@ class RobustnessSpec extends AnyFunSuite {
 
   test("corrupt topk_sliding ring buffers fail with IllegalArgumentException") {
     import java.nio.ByteBuffer
-    import graft.plans.SlidingTopKAgg
+    import graft.plans.{AdaptiveTopK, SlidingTopKAgg}
     import org.apache.spark.sql.catalyst.expressions.Literal
     val cfg = SketchConfig.withDefaults(k = 2, width = 16, depth = 2)
     val agg = SlidingTopKAgg(Literal(0L), Literal("x"), Literal(1L), 2, 2, cfg)
+    def tick(cutoff: Int, items: (String, Long)*): AdaptiveTopK = {
+      val b = new AdaptiveTopK(cfg, cutoff)
+      items.foreach { case (i, w) => b.addString(i, w) }
+      b
+    }
     val ring = agg.createAggregationBuffer()
-    ring.sketchFor(1L).add("a", 3L)
-    ring.sketchFor(2L).add("b", 2L)
+    ring.put(1L, tick(8, "a" -> 3L))            // exact map
+    ring.put(2L, tick(1, "b" -> 2L, "c" -> 1L)) // spilled sketch
     val good = agg.serialize(ring)
     def patched(at: Int, v: Int): Array[Byte] = {
       val b = good.clone(); ByteBuffer.wrap(b).putInt(at, v); b
     }
-    // tick count, then per tick: tick (8), sketch block length (4), sketch
+    val unknownTag = good.clone(); unknownTag(16) = 7
+    // tick count, then per tick: tick (8), block length (4), AdaptiveTopK bytes
     val corrupt = Seq(
       "negative tick count"   -> patched(0, -1),
       "oversized tick count"  -> patched(0, Int.MaxValue),
       "negative sketch block" -> patched(12, -1),
-      "bad sketch magic"      -> patched(16, 0x12345678)
+      "bad sketch magic"      -> patched(16, 0x12345678),
+      "unknown AdaptiveTopK tag" -> unknownTag
     ) ++ (0 until good.length).map(n => s"truncated to $n bytes" -> good.take(n))
     corrupt.foreach { case (what, blob) =>
       withClue(what)(intercept[IllegalArgumentException](agg.deserialize(blob)))
     }
-    assert(agg.deserialize(good).ticks.size == 2)
+    assert(agg.deserialize(good).size == 2)
   }
 
   test("huge weighted collision add completes via geometric skip with correct takeover mass") {

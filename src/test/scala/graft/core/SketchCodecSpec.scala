@@ -1,6 +1,8 @@
 package graft.core
 
-import graft.plans.{AdaptiveTopK, SlidingTopKAgg, TickRing}
+import scala.jdk.CollectionConverters._
+
+import graft.plans.{AdaptiveTopK, SlidingTopKAgg}
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, Literal}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,8 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * stream-based codec that preceded the ByteBuffer one; they must keep
   * decoding to the same state. The aggregate-buffer blobs (AdaptiveTopK,
   * which `topk_stream_sessions` keeps in its state store, and the
-  * `topk_sliding` TickRing) were likewise written by the stream-based
-  * framing those buffers used before moving onto `putBlock`/`readBlock`.
+  * `topk_sliding` ring of per-tick plain sketches) were likewise written by
+  * the stream-based framing those buffers used before moving onto
+  * `putBlock`/`readBlock`. The ring now keeps one AdaptiveTopK per tick;
+  * its old bytes stay pinned as a decode-only fixture.
   */
 class SketchCodecSpec extends AnyFunSuite {
 
@@ -102,12 +106,22 @@ class SketchCodecSpec extends AnyFunSuite {
   private val ringAgg = SlidingTopKAgg(Literal(0L), Literal("x"), Literal(1L),
     windowTicks = 2, emitK = 3, cfg = aggCfg)
 
-  private def tickRingFixture(): TickRing = {
-    val ring = new TickRing(aggCfg)
-    Seq((3L, "apple", 5L), (3L, "pear", 3L), (-2L, "fig", 7L), (3L, "fig", 1L), (-2L, "kiwi", 2L))
-      .foreach { case (t, i, w) => ring.sketchFor(t).add(i, w) }
+  /** Tick -2 stays an exact map; tick 3's third distinct item spills it
+    * past a cutoff of 2.
+    */
+  private def tickRingFixture(): SlidingTopKAgg.Ring = {
+    val ring = new SlidingTopKAgg.Ring()
+    ring.put(-2L, adaptiveFixture(2, Seq("fig" -> 7L, "kiwi" -> 2L)))
+    ring.put(3L, adaptiveFixture(2, Seq("apple" -> 5L, "pear" -> 3L, "fig" -> 1L)))
     ring
   }
+
+  /** (tick, item, count) of a ring's rows: the same for both fixtures. */
+  private def ringRows(ring: SlidingTopKAgg.Ring): Seq[(Any, String, Any)] =
+    rows(ringAgg.eval(ring)).map(r => (r(0), r(2).toString, r(3)))
+
+  private val wantRingRows = Seq(
+    (-2L, "fig", 7L), (-2L, "kiwi", 2L), (3L, "apple", 5L), (3L, "pear", 3L), (3L, "fig", 1L))
 
   private def rows(a: Any): Seq[Seq[Any]] =
     a.asInstanceOf[GenericArrayData].array.toSeq.map(_.asInstanceOf[GenericInternalRow].values.toSeq)
@@ -128,6 +142,9 @@ class SketchCodecSpec extends AnyFunSuite {
       0000000003d46c39480000000470656172000000000000000337813106000000056170706c650000000000000007eab3
       07d9000000036669670000000000000007""")
 
+  /** The ring as written while each tick kept a plain sketch (one TKP2
+    * blob per tick): decode-only since the ring keeps AdaptiveTopK buffers.
+    */
   private val goldenTickRing = unhex("""
       00000002fffffffffffffffe00000117544b50320000000300000008000000023f66666600000100000000000000002a
       000000000000002a00000010000000000000000000000000000000000000000000000000000000000000000000000000
@@ -142,6 +159,20 @@ class SketchCodecSpec extends AnyFunSuite {
       000000d46c39480000000000000003000000000000000000000000000000000000000000000000000000000000000000
       00000000000000000000000000000000000003eab307d900000003666967000000000000000137813106000000056170
       706c650000000000000005d46c394800000004706561720000000000000003""")
+
+  /** The ring of [[tickRingFixture]]: tick count, then per tick the tick
+    * and a length-prefixed AdaptiveTopK block (tag 0 at tick -2, tag 1 at
+    * tick 3).
+    */
+  private val goldenAdaptiveRing = unhex("""
+      00000002fffffffffffffffe000000240000000002000000046b69776900000000000000020000000366696700000000
+      00000007000000000000000300000131010000012c544b50320000000300000008000000023f66666600000100000000
+      000000002a000000000000002a00000010d46c3948000000000000000337813106000000000000000500000000000000
+      000000000000000000000000000000000000000000000000000000000000000000000000000000000000000000000000
+      0000000000eab307d90000000000000001378131060000000000000005eab307d9000000000000000100000000000000
+      0000000000d46c3948000000000000000300000000000000000000000000000000000000000000000000000000000000
+      000000000000000000000000000000000000000003eab307d90000000366696700000000000000013781310600000005
+      6170706c650000000000000005d46c394800000004706561720000000000000003""")
 
   test("adaptive exact-map buffer layout is byte-identical to the golden blob") {
     val b = exactMapFixture()
@@ -167,13 +198,21 @@ class SketchCodecSpec extends AnyFunSuite {
 
   test("topk_sliding two-tick ring buffer layout is byte-identical to the golden blob") {
     val ring = tickRingFixture()
-    assert(hex(ringAgg.serialize(ring)) == hex(goldenTickRing))
-    val back = ringAgg.deserialize(goldenTickRing)
-    assert(back.ticks.keySet.toArray.toSeq == Seq(-2L, 3L))
+    assert(ring.get(-2L).sketch == null && ring.get(3L).sketch != null)
+    assert(hex(ringAgg.serialize(ring)) == hex(goldenAdaptiveRing))
+    val back = ringAgg.deserialize(goldenAdaptiveRing)
+    assert(back.keySet.asScala.toSeq == Seq(-2L, 3L))
+    assert(back.get(-2L).sketch == null && back.get(3L).sketch != null)
     assert(rows(ringAgg.eval(back)) == rows(ringAgg.eval(ring)))
-    assert(rows(ringAgg.eval(back)).map(r => (r(0), r(2).toString, r(3))) == Seq(
-      (-2L, "fig", 7L), (-2L, "kiwi", 2L), (3L, "apple", 5L), (3L, "pear", 3L), (3L, "fig", 1L)))
-    assert(ringAgg.serialize(back).sameElements(goldenTickRing))
+    assert(ringRows(back) == wantRingRows)
+    assert(ringAgg.serialize(back).sameElements(goldenAdaptiveRing))
+  }
+
+  test("a topk_sliding ring of per-tick plain sketches decodes to the same rows") {
+    val back = ringAgg.deserialize(goldenTickRing)
+    assert(back.keySet.asScala.toSeq == Seq(-2L, 3L))
+    assert(back.values.asScala.forall(_.sketch != null), "each TKP2 block reads as a spilled buffer")
+    assert(ringRows(back) == wantRingRows)
   }
 
   test("plain TKP2 layout is byte-identical to the golden blob") {

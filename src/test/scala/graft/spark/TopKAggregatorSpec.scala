@@ -3,6 +3,7 @@ package graft.spark
 import graft.core.{Hashing, Sketch, SketchCodec, SketchConfig}
 import graft.operators.TopK
 import graft.plans.TopKAggregates
+import graft.streaming.TopKStreams
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -241,7 +242,8 @@ class TopKAggregatorSpec extends AnyFunSuite {
     // buffer can return these counts: every row-emitting item plan must
     // match the exact answer, ties ordered by item asc, for <= cutoff
     // distinct items — the one-level plans (TopK.aggregate's flat plan,
-    // aggregateBy, SQL topk_items) and the two-level ones, which merge the
+    // aggregateBy, TopKStreams.tumbling/session over a batch input, SQL
+    // topk_items and topk_sliding) and the two-level ones, which merge the
     // same buffer (the tree, the salted plan, the per-tick window)
     val cfg = SketchConfig.withDefaults(5, width = 4, depth = 1)
     val n   = graft.plans.AdaptiveTopK.cutoff(TopKAggregates.candidates(cfg, 4))
@@ -273,22 +275,40 @@ class TopKAggregatorSpec extends AnyFunSuite {
     assert(rows(TopK.aggregateBySalted(df, Seq(col("grp")), col("item"), col("weight"), cfg,
       saltFanout = 4)) == wantPerGroup)
 
+    // g0 at 0 s and g1 at 100 s: separate tumbling windows and sessions
+    val timed = df.withColumn("ts", ((col("grp") === "g1").cast("long") * 100).cast("timestamp"))
+    val startOf = (g: String) => if (g == "g1") "100" else "0"
+    val wantPerStart = wantPerGroup.map { case (g, r, i, c) => (startOf(g), r, i, c) }
+    def byStart(out: org.apache.spark.sql.DataFrame, start: String) =
+      rows(out.select(col(start).cast("long").as("start"), col("rank"), col("item"), col("count")))
+    assert(byStart(TopKStreams.tumbling(timed, "10 seconds", "0 seconds", cfg),
+      "window.start") == wantPerStart)
+    assert(byStart(TopKStreams.session(timed.withColumn("key", lit("k")), "10 seconds",
+      "0 seconds", cfg), "session_start") == wantPerStart)
+
+    graft.functions.SqlFunctions.register(spark)
+    df.createOrReplaceTempView("tied_items")
     // g0 is tick 0 and g1 tick 1: a window of 2 adds g0's counts into tick 1
     val tickOf = (g: String) => if (g == "g1") 1L else 0L
     Seq(1, 2).foreach { window =>
       val perTick = graft.operators.SlidingTopK.perTick(
         df.withColumn("tick", (col("grp") === "g1").cast("long")), col("tick"), col("item"),
         col("weight"), window, TopKAggregates.candidates(cfg, 4), k = 5)
+      val sqlSliding = spark.sql(
+        s"""SELECT e.tick, e.rank, e.item, e.count FROM (
+           |  SELECT explode(topk_sliding(CAST(grp = 'g1' AS BIGINT), item, weight, $window, 5, 4, 1)) AS e
+           |  FROM tied_items)""".stripMargin)
       val wantTicks = Seq(0L, 1L).flatMap { t =>
         val inWindow = local.filter(r => tickOf(r._1) > t - window && tickOf(r._1) <= t)
         exactTop(inWindow.map(r => (r._2, r._3))).zipWithIndex
           .map { case ((i, c), r) => (t.toString, r + 1L, i, c) }
       }
-      withClue(s"window $window") { assert(rows(perTick) == wantTicks) }
+      withClue(s"window $window") {
+        assert(rows(perTick) == wantTicks)
+        assert(rows(sqlSliding) == wantTicks, "topk_sliding")
+      }
     }
 
-    graft.functions.SqlFunctions.register(spark)
-    df.createOrReplaceTempView("tied_items")
     val sql = spark.sql(
       """SELECT grp, e.item, e.count FROM (
         |  SELECT grp, posexplode(topk_items(item, weight, 5, 4, 1)) AS (pos, e)

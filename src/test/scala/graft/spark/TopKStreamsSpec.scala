@@ -217,7 +217,8 @@ class TopKStreamsSpec extends AnyFunSuite {
     */
   private def slidingBatches(delay: String, batches: Seq[Seq[(String, Long, String, Long)]],
       conf: Map[String, String] = Map.empty,
-      prepare: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame = identity)
+      prepare: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame = identity,
+      reduceCap: Int = TopKStreams.ReduceMaxEntries)
       : Seq[(Long, String, Long, String, Long)] = {
     implicit val sqlCtx = spark.sqlContext
     val settings = conf + ("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
@@ -227,7 +228,8 @@ class TopKStreamsSpec extends AnyFunSuite {
       val input = MemoryStream[(String, Timestamp, String, Long)]
       val df    = prepare(input.toDF.toDF("key", "ts", "item", "weight"))
       val cfg   = SlidingConfig.withDefaults(3, 3, width = 256, depth = 3)
-      val q = TopKStreams.sliding(df, 1000L, delay, cfg, emitK = 3).writeStream
+      val q = TopKStreams.slidingWithReduceCap(df, 1000L, delay, cfg, emitK = 3, None, reduceCap)
+        .writeStream
         .foreachBatch { (ds: org.apache.spark.sql.Dataset[graft.streaming.TickTopK], id: Long) =>
           ds.collect().foreach(r => got.add((id, r.key, r.tick, r.item, r.count)))
         }.start()
@@ -276,5 +278,67 @@ class TopKStreamsSpec extends AnyFunSuite {
       Seq(("a", 9500L, "hb", 0L))))
     assert(rows.filter(_._3 == 0L) == Seq((0L, "a", 0L, "x", 1L)))
     assert(!rows.exists(_._4 == "z"), rows)
+  }
+
+  test("sliding: every batch cut of a seeded stream emits the watermark-only rule's rows") {
+    // three keys from 3 s before 1970 on: rows just behind the newest row
+    // or just inside the 2 s delay (a tick closed one tick early would drop
+    // some of them), weight-0 heartbeats, and late rows more than 3 s behind
+    // the newest row, so their ticks closed before they arrive. Each late row
+    // opens a segment, which every cut keeps as a batch boundary: the rows
+    // that moved the watermark past it are always in an earlier batch.
+    // `want` is what the watermark-only rule (ticks close on the watermark
+    // alone) emitted for every cut of these rows. No tick below 0 emits:
+    // Spark's late-row filter drops rows at or below its initial watermark
+    // of 0 under either rule
+    val rng = new scala.util.Random(29)
+    var newest, maxSeen = -3000L
+    def row(ts: Long, item: String, w: Long) = {
+      maxSeen = math.max(maxSeen, ts)
+      (Seq("a", "b", "c")(rng.nextInt(3)), ts, item, w)
+    }
+    val segments = (0 until 10).map { s =>
+      val late = if (s == 0) Nil else List.fill(1 + rng.nextInt(2))(
+        row(maxSeen - 3001 - rng.nextInt(3000), s"i${rng.nextInt(4)}", 1L + rng.nextInt(4)))
+      late ++ List.fill(8) {
+        newest += rng.nextInt(300)
+        if (rng.nextInt(6) == 0) row(newest, "hb", 0L)
+        else row(newest - (if (rng.nextBoolean()) rng.nextInt(100) else 1900 + rng.nextInt(100)),
+          s"i${rng.nextInt(4)}", 1L + rng.nextInt(4))
+      }
+    }
+    // two heartbeat batches far ahead close every tick
+    val flush = Seq(Seq(("a", 60000L, "hb", 0L)), Seq(("a", 61000L, "hb", 0L)))
+    // a reduce cap of 2 flushes the map-side reduce every two groups
+    val cuts = Seq(
+      ("one batch per segment", segments, TopKStreams.ReduceMaxEntries),
+      ("one batch per segment, reduce cap 2", segments, 2),
+      ("one batch per row", segments.flatten.map(Seq(_)), TopKStreams.ReduceMaxEntries),
+      ("seeded splits", segments.flatMap { seg =>
+        val at = 1 + rng.nextInt(seg.size - 1)
+        Seq(seg.take(at), seg.drop(at))
+      }, TopKStreams.ReduceMaxEntries))
+    val want = Seq(
+      ("a", 0L, "i0", 1L), ("a", 0L, "i1", 6L), ("a", 1L, "i0", 1L), ("a", 1L, "i1", 6L),
+      ("a", 2L, "i0", 1L), ("a", 2L, "i1", 7L), ("a", 3L, "i0", 3L), ("a", 3L, "i2", 1L),
+      ("a", 3L, "i3", 2L), ("a", 4L, "i0", 6L), ("a", 4L, "i2", 8L), ("a", 4L, "i3", 2L),
+      ("a", 5L, "i0", 10L), ("a", 5L, "i2", 8L), ("a", 5L, "i3", 8L), ("a", 6L, "i0", 11L),
+      ("a", 6L, "i2", 7L), ("a", 6L, "i3", 14L), ("a", 7L, "i0", 8L), ("a", 7L, "i1", 4L),
+      ("a", 7L, "i3", 14L), ("a", 8L, "i0", 4L), ("a", 8L, "i1", 4L), ("a", 8L, "i3", 8L),
+      ("a", 9L, "i1", 4L), ("b", 1L, "i3", 5L), ("b", 2L, "i0", 7L), ("b", 2L, "i1", 5L),
+      ("b", 2L, "i3", 5L), ("b", 3L, "i0", 7L), ("b", 3L, "i1", 5L), ("b", 3L, "i3", 5L),
+      ("b", 4L, "i0", 7L), ("b", 4L, "i1", 7L), ("b", 4L, "i3", 2L), ("b", 5L, "i1", 7L),
+      ("b", 5L, "i3", 7L), ("b", 6L, "i1", 7L), ("b", 6L, "i3", 7L), ("b", 7L, "i1", 5L),
+      ("b", 7L, "i3", 5L), ("c", 1L, "i1", 3L), ("c", 2L, "i1", 3L), ("c", 2L, "i2", 3L),
+      ("c", 3L, "i1", 3L), ("c", 3L, "i2", 3L), ("c", 4L, "i2", 6L), ("c", 5L, "i2", 3L),
+      ("c", 6L, "i1", 1L), ("c", 6L, "i2", 4L), ("c", 6L, "i3", 1L), ("c", 7L, "i1", 2L),
+      ("c", 7L, "i2", 1L), ("c", 7L, "i3", 1L), ("c", 8L, "i1", 6L), ("c", 8L, "i2", 1L),
+      ("c", 8L, "i3", 1L), ("c", 9L, "i1", 5L), ("c", 10L, "i1", 4L))
+    val conf = Map("spark.sql.streaming.statefulOperator.allowMultiple" -> "false")
+    cuts.foreach { case (cut, batches, reduceCap) =>
+      val got = slidingBatches("2 seconds", batches ++ flush, conf, reduceCap = reduceCap)
+        .map(r => (r._2, r._3, r._4, r._5))
+      withClue(cut) { assert(got.sorted == want) }
+    }
   }
 }
