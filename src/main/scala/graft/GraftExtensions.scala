@@ -7,14 +7,17 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 /** SparkSessionExtensions entry point — the idiomatic cluster deployment
   * path: `spark-submit --conf spark.sql.extensions=graft.GraftExtensions`
   * injects the engine's FULL SQL surface into every session (no driver-side
-  * registration call needed). Local sessions can equally call
+  * registration call needed), and plans `TopK`'s batch global top-K
+  * (`graft.plans.GlobalTopKStrategy`). Local sessions can equally call
   * `graft.functions.SqlFunctions.register(spark)` — both paths consume
   * `SqlFunctions.builders`, so they cannot drift.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     SqlFunctions.builders.foreach { case (name, builder) =>
       ext.injectFunction((FunctionIdentifier(name), SqlFunctions.info(name), builder))
     }
+    ext.injectPlannerStrategy(_ => graft.plans.GlobalTopKStrategy)
+  }
 }

@@ -24,6 +24,12 @@ final class Rng(seed: Long) extends Serializable {
     out
   }
 
+  /** Advances the stream by `n` draws in O(1): each draw adds the same
+    * golden-ratio increment to the state, so `skip(n)` equals `n` calls of
+    * `nextLong()` with their outputs discarded.
+    */
+  def skip(n: Long): Unit = state += n * 0x9e3779b97f4a7c15L
+
   /** Uniform float in [0, 1) with 24 bits of mantissa (same range/precision
     * contract as Go's rand.Float32).
     */

@@ -68,14 +68,18 @@ private[core] object SketchOps {
     var c         = count
     var remaining = increment
     while (remaining > 0L) {
+      // decay^c changes only with c: once per decrement, not per trial
       val decay = decayAt(decayLUT, c)
       if (remaining <= Sketch.GeometricSkipThreshold) {
-        // reference-exact per-trial draws (one draw per increment unit)
-        if (rng.nextFloat() < decay) {
+        // reference-exact per-trial draws (one draw per increment unit);
+        // below float range no draw can succeed, so skip the draws in O(1)
+        if (decay == 0f) { rng.skip(remaining); return c }
+        while (remaining > 0L && rng.nextFloat() >= decay) remaining -= 1
+        if (remaining > 0L) {
           c -= 1
           if (c == 0L) return -remaining
+          remaining -= 1
         }
-        remaining -= 1
       } else {
         val k = rng.geometricTrials(decay)
         if (k > remaining) remaining = 0L // all remaining trials failed

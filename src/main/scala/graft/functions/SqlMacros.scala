@@ -2,8 +2,9 @@ package graft.functions
 
 /** SQL "macro" builders for plan SHAPES the expression registry alone cannot
   * express. A tree-merged global aggregation is a two-stage GROUP BY, not a
-  * scalar function: DataFrame callers get the stats-based tree/flat cutover
-  * for free in `TopK.aggregate`/`TopK.tokensArray`, while pure-SQL users had
+  * scalar function: DataFrame callers get a bounded merge for free in
+  * `TopK.aggregate`/`TopK.tokensArray` (a driver fold of at most 64 buffers,
+  * `graft.plans.GlobalTopK`), while pure-SQL users had
   * to hand-compose the `pmod(spark_partition_id(), N)` pipeline documented
   * at the `topk_tokens_sketch` builder. These helpers generate that text so
   * the composition lives in ONE place (and its spec).
@@ -13,10 +14,12 @@ object SqlMacros {
   /** SQL for a tree-merged token top-K over `table.tokensCol` (an array
     * column): partials grouped by `pmod(spark_partition_id(), fanIn)` →
     * `topk_merge` → `topk_rows`, emitting (item, count, fingerprint) in
-    * SortedSlice order. Equivalent to `TopK.tokensArray` with the tree merge
-    * forced on; use fanIn ≈ 64 so the final task decodes O(fanIn) blobs, not
-    * O(partitions) (the flat plan's Amdahl tail — BENCH.md, heavy 4→16
-    * efficiency 0.69 → 0.90).
+    * SortedSlice order. The same bounded merge as `TopK.tokensArray`, run
+    * as two SQL aggregation stages (that plan folds at most 64 buffers on
+    * the driver, merge tasks of 64 first past that, and unions the same
+    * TKP2 sketches); use fanIn ≈ 64 so the final task decodes O(fanIn)
+    * blobs, not O(partitions) (a flat merge's Amdahl tail — BENCH.md, heavy
+    * 4→16 efficiency 0.69 → 0.90).
     *
     * `width`/`depth` (and optionally `decay`) pass through to
     * `topk_tokens_sketch`; leave them unset (≤ 0) for the engine defaults.

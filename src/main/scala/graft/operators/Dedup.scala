@@ -406,8 +406,7 @@ object Dedup {
     // was ~3.2 GB shuffled twice; the filter took the full pipeline 61 s ->
     // 33 s). Below the cutover the filter LOSES: deriving `ids` re-executes
     // the candidate subplan, which dwarfs a small corpus's shingle shuffle
-    // (measured +1.6 s on the 500-doc driver table) — same stats-based
-    // cutover idea as TopK.globalTopK's tree-vs-flat choice. Cutover order:
+    // (measured +1.6 s on the 500-doc driver table). Cutover order:
     // the caller's explicit `narrowToCandidates` wins; else sizeInBytes when
     // the plan carries a real estimate (file scans do); else the row-count
     // stat (in-memory plans often report the 8 EiB unknown-size sentinel but

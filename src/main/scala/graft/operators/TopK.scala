@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.core.SketchConfig
-import graft.plans.{ItemsTopKAgg, TokensTopKAgg, TopKAggregates}
+import graft.plans.{GlobalTopK, GlobalTopKStrategy, ItemsTopKAgg, TokensTopKAgg, TopKAggregates, TopKRows}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.functions._
@@ -10,11 +10,12 @@ import org.apache.spark.sql.graftbridge.Bridge
 /** High-level top-K operators over DataFrames.
   *
   * The plan shape is deliberate for 100 TB scale: the HeavyKeeper aggregator
-  * runs as a partial aggregate on every input partition (map-side, no row
-  * leaves the executor), then ships one bounded buffer per (group ×
-  * partition) through the shuffle and merges: a fixed-size sketch, or the
-  * exact counts of a group with few distinct items. Token/item skew
-  * therefore cannot skew the shuffle — the reduction payload is
+  * runs on every input partition (map-side, no row leaves the executor),
+  * and only one bounded buffer per (group × partition) moves on: a
+  * fixed-size sketch, or the exact counts of a group with few distinct
+  * items. The global top-K folds those buffers on the driver (merge tasks
+  * first past 64 partitions); the per-group ones shuffle them to a merge.
+  * Token/item skew therefore cannot skew the reduction — its payload is
   * O(partitions · d · w), independent of row counts.
   */
 object TopK {
@@ -48,62 +49,32 @@ object TopK {
       :+ col("e.count") :+ col("e.fingerprint")): _*)
   }
 
-  /** Shared global-top-K plan with the two-level TREE merge and its cutover.
-    *
-    * The merge is two-level: scan tasks emit one partial buffer each
-    * (map-side combine), the buffers hash to 64 intermediate merge tasks,
-    * and the final task merges only 64. A single-level merge makes the
-    * final task O(#partitions) serial decode+merge work — ~2-4 ms per
-    * wide-geometry sketch, an Amdahl tail at local[32] with ~850 splits and
-    * fatal at 100 TB (10⁵-10⁶ splits would funnel hundreds of GB of sketches
-    * through one task). The tree itself pays one extra stage barrier
-    * (~0.1 s), so for small inputs — or streaming plans — the flat
-    * single-union plan is selected instead. The size signal is the
-    * optimizer's PLANNING-TIME statistics (file-source bytes / upstream
-    * estimates) against the session's split size — deliberately NOT
-    * `df.rdd.getNumPartitions`, which under AQE materializes (executes!)
-    * every upstream shuffle stage just to ask. A coarse estimate is fine:
-    * the cutover is a latency heuristic, both plans merge the same buffer
-    * (`agg`'s own, via [[graft.plans.BufferBytesAgg]]). Specs and plan dumps
-    * pin `fanIn`: `Some(1)` is the flat plan, `Some(n)` an n-way tree.
+  /** Shared global-top-K plan. A batch input is one [[GlobalTopK]] node: a
+    * single map stage builds `agg`'s buffer per input partition and the
+    * driver folds the serialized buffers (past `fanIn` partitions, merge
+    * tasks fold `fanIn` each first; see [[graft.plans.GlobalTopKExec]]).
+    * No stage barrier, no shuffle and no sort for up to `fanIn` partitions,
+    * and the fold is bounded by `fanIn`, not by the partition count, which
+    * is read at run time. A streaming input keeps the Catalyst aggregate
+    * (`df.agg`), whose partial→final handoff ships the same buffer.
+    * Specs force merge levels with a small `fanIn`.
     */
-  private[graft] def globalTopK(df: DataFrame, agg: TypedImperativeAggregate[_],
-                                fanIn: Option[Int] = None): DataFrame = {
-    // streaming plans reject multi-aggregation (groupBy agg -> agg), so the
-    // flat single-union plan is the only legal shape there
-    val effFanIn =
-      if (df.isStreaming) 1
-      else fanIn.getOrElse {
-        val treeFanIn = 64
-        val stats     = df.queryExecution.optimizedPlan.stats
-        val estBytes  = stats.sizeInBytes
-        val splitSize = BigInt(df.sparkSession.sessionState.conf.filesMaxPartitionBytes)
-        // non-file plans (LogicalRDD, createDataFrame) report the unknown
-        // sentinel for sizeInBytes, which would always read "huge": prefer
-        // a real rowCount there (tiny inputs take the flat plan, as the
-        // scaladoc promises); truly unknown stays tree — the scale-safe
-        // default, at worst two extra small shuffles on a small input
-        if (graft.operators.Similarity.statsKnown(estBytes))
-          if (estBytes > splitSize * treeFanIn * 2) treeFanIn else 1
-        else stats.rowCount match {
-          case Some(n) if n < BigInt(treeFanIn) * 65536 => 1
-          case _                                        => treeFanIn
-        }
-      }
-    val topk =
-      if (effFanIn <= 1) df.agg(Bridge.column(agg.toAggregateExpression()).as("topk"))
-      else df.groupBy(pmod(spark_partition_id(), lit(effFanIn)).as("_g"))
-        .agg(TopKAggregates.bufferBytes(agg).as("buf"))
-        .agg(TopKAggregates.mergeBuffers(col("buf"), agg).as("topk"))
-    topk.select(explode(col("topk")).as("e"))
-      .select(col("e.item"), col("e.count"), col("e.fingerprint"))
-      .orderBy(col("count").desc, col("item").asc)
-  }
+  private[graft] def globalTopK(df: DataFrame, agg: TypedImperativeAggregate[_] with TopKRows,
+                                fanIn: Int = GlobalTopK.FanIn): DataFrame =
+    if (df.isStreaming)
+      df.agg(Bridge.column(agg.toAggregateExpression()).as("topk"))
+        .select(explode(col("topk")).as("e"))
+        .select(col("e.item"), col("e.count"), col("e.fingerprint"))
+        .orderBy(col("count").desc, col("item").asc)
+    else {
+      GlobalTopKStrategy.register(df.sparkSession)
+      Bridge.dataFrame(df.sparkSession, GlobalTopK.plan(df, agg, fanIn))
+    }
 
   /** Global top-K of `item` by total `weight`.
     * Output: (item string, count long, fingerprint long), ordered by
     * (count desc, item asc) — the reference's SortedSlice order
-    * (reference: sketch.go:189-209). Tree-merged past the partition cutover
+    * (reference: sketch.go:189-209). One map stage and a driver-side fold
     * (see [[globalTopK]]).
     */
   def aggregate(df: DataFrame, item: Column, weight: Column, cfg: SketchConfig,
@@ -115,7 +86,8 @@ object TopK {
     * the aggregate counts each partition's tokens exactly and feeds its
     * sketch one weighted add per distinct token, heaviest first
     * ([[graft.plans.TokensTopKAgg]]); the 100 TB-shape plan: scan ->
-    * per-partition sketch -> TREE merge past the partition cutover, see
+    * per-partition sketch -> fold of the serialized sketches, on the driver
+    * for up to 64 partitions and in merge tasks of 64 past that, see
     * [[globalTopK]].
     */
   def tokensArray(df: DataFrame, tokens: Column, cfg: SketchConfig,

@@ -125,7 +125,7 @@ case class TokensTopKAgg(
     emitK: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0
-) extends TypedImperativeAggregate[TokenCombiner] with UnaryLike[Expression] {
+) extends TypedImperativeAggregate[TokenCombiner] with UnaryLike[Expression] with TopKRows {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(IntegerType, _) => TypeCheckResult.TypeCheckSuccess
@@ -218,7 +218,7 @@ case class ItemsTopKAgg(
     emitK: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0
-) extends ItemsSketchAggBase {
+) extends ItemsSketchAggBase with TopKRows {
   override protected def fnName: String        = "topk_items"
   override def eval(buffer: AdaptiveTopK): Any = buffer.toArrayData(emitK)
   override def dataType: DataType              = TopKResult.dataType

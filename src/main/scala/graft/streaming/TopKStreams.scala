@@ -42,6 +42,13 @@ final case class TickTopK(key: String, tick: Long, rank: Int, item: String,
   * Updates ahead of completion are buffered in the state value, so replays
   * from checkpoint reproduce identical rows.
   *
+  * Rows stamped at or before 1970: Spark's watermark starts at 0 and its
+  * late-row filter runs from the first batch, each engine on its own
+  * event-time column. Tumbling drops a row whose window ends at or before
+  * 0, session one whose own window [ts, ts + gap) does, and sliding every
+  * row stamped at or before 0, so no sliding tick below 0 emits. A session
+  * started before 1970 that reaches past 0 keeps its earlier rows.
+  *
   * State partitions: every engine here keeps its state in state stores, one
   * set per shuffle partition, and a query's partition count is fixed at its
   * FIRST start by `spark.sql.shuffle.partitions` (a checkpoint restart keeps

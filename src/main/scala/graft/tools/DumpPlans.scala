@@ -42,18 +42,20 @@ object DumpPlans {
       "Generated by `runMain graft.tools.DumpPlans` on the sf0.01 tables.\n" +
       "What to look for in each plan is called out per section.\n\n"
 
-    section("Token top-K (array-native, tree merge)",
+    section("Token top-K (array-native, one map stage + driver fold)",
       """The north-star job. One scan; `ReadSchema` prunes to the `tokens`
-        |column only; ObjectHashAggregate runs the HeavyKeeper partial per
-        |partition. Both exchanges carry `TokensTopKAgg`'s own serialized
-        |buffer, a fixed-size TKP2 sketch (`BufferBytesAgg`): scan partials
-        |hash to `fanIn` intermediate merge tasks, and only `fanIn` reach the
-        |final single-task merge (`MergeBuffersAgg`) — a flat merge would make
-        |the final task O(#partitions) serial work (fatal at 10^5+ tasks). No
-        |explode stage, no row-level shuffle. (fanIn forced to 8 to render the
-        |tree on this small table; the stats cutover would pick the flat plan.)""".stripMargin,
+        |column only; `GlobalTopKExec` runs `TokensTopKAgg`'s buffer per
+        |partition in the scan's own stage and serializes it (a fixed-size
+        |TKP2 sketch), and the driver folds the buffers with the aggregate's
+        |deserialize/merge and emits its rows in (count desc, item asc)
+        |order: no exchange, no sort, no explode. Past `fanIn` partitions
+        |(64 by default) merge tasks fold `fanIn` buffers each before the
+        |driver does, so the driver never holds more than `fanIn` (the merge
+        |levels are the node's own shuffles and do not show in the SQL plan;
+        |the one exchange below is the `repartition(32)` of the input, and
+        |`fanIn` is forced to 8, so 4 merge tasks run).""".stripMargin,
       TopK.globalTopK(toks.repartition(32), TopK.tokensAgg(col("tokens"),
-        SketchConfig.withDefaults(10, width = 1024, depth = 3), 4), Some(8)))
+        SketchConfig.withDefaults(10, width = 1024, depth = 3), 4), fanIn = 8))
 
     section("Salted per-group top-K (two-level skew path)",
       """Level 1 groups by (group, salt = pmod(xxhash64(item), 16)) and ships

@@ -11,8 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * renamed main otherwise leaves a README command or a source comment that
   * points at nothing. Likewise every session-wide Spark default graft sets
   * must be documented, and README's Architecture block must name only the
-  * SQL functions and `graft.plans` classes that exist. No Spark session is
-  * started.
+  * SQL functions and `graft.plans` classes that exist, and every plan node
+  * and strategy there. No Spark session is started.
   */
 class DocEntryPointsSpec extends AnyFunSuite {
 
@@ -93,5 +93,16 @@ class DocEntryPointsSpec extends AnyFunSuite {
       catch { case _: ClassNotFoundException => false }
     }
     assert(missing.isEmpty, missing.mkString("not in graft.plans: ", ", ", ""))
+  }
+
+  test("README's Architecture block names every plan node and strategy in graft.plans") {
+    val named = architectureSection("graft.plans")
+      .flatMap("""^  ([A-Z]\w*)\b""".r.findFirstMatchIn(_).map(_.group(1))).toSet
+    val defined = Files.list(Paths.get("src/main/scala/graft/plans")).iterator().asScala.toList
+      .flatMap(p => """(?m)^(?:final\s+|case\s+)*(?:class|object)\s+(\w+)[^{]*?\bextends\s+(?:UnaryNode|LeafNode|BinaryNode|UnaryExecNode|LeafExecNode|BinaryExecNode|SparkStrategy)\b"""
+        .r.findAllMatchIn(Files.readString(p)).map(_.group(1)))
+    assert(defined.size >= 3, s"found only $defined")
+    val unnamed = defined.filterNot(named)
+    assert(unnamed.isEmpty, unnamed.mkString("not in README's graft.plans section: ", ", ", ""))
   }
 }

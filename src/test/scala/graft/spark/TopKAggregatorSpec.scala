@@ -116,7 +116,8 @@ class TopKAggregatorSpec extends AnyFunSuite {
     }
     val df  = docs.toDF("doc_id", "tokens").repartition(8)
     val cfg = SketchConfig.withDefaults(20, width = 1024, depth = 3)
-    val ours = TopK.globalTopK(df, TopK.tokensAgg(col("tokens"), cfg, 4), fanIn = Some(4)) // force tree
+    // fanIn 2 forces merge levels: 8 buffers -> 4 merge tasks -> 2 -> driver
+    val ours = TopK.globalTopK(df, TopK.tokensAgg(col("tokens"), cfg, 4), fanIn = 2)
       .select("item", "count").collect().map(r => (r.getString(0), r.getLong(1))).toMap
     val truth = docs.flatMap(_._2).groupBy(t => t.toString).view.mapValues(_.size.toLong).toMap
     val exactTop = truth.toSeq.sortBy { case (i, c) => (-c, i) }.take(20).map(_._1).toSet
@@ -129,8 +130,9 @@ class TopKAggregatorSpec extends AnyFunSuite {
 
   test("tokensArray tree merge equals single-level merge (collision-free)") {
     // token sequences over 80 distinct tokens, width 2048 -> collision-free:
-    // the union is an exact sum regardless of merge topology, so the tree
-    // (fanIn intermediate unions) must reproduce the flat plan bit-for-bit.
+    // the union is an exact sum regardless of merge topology, so forced merge
+    // levels (fanIn buffers per merge task) must reproduce the driver's fold
+    // of all 16 buffers bit-for-bit.
     // Token t appears in docs divisible by t+1 -> count(t) ~ 500/(t+1):
     // DISTINCT counts in the top region (equal-count ties at the bounded
     // heap's boundary may legitimately survive differently per topology)
@@ -139,13 +141,12 @@ class TopKAggregatorSpec extends AnyFunSuite {
     }
     val df  = rows.toDF("doc_id", "tokens").repartition(16)
     val cfg = SketchConfig.withDefaults(10, width = 2048, depth = 3)
-    def res(fanIn: Option[Int]) =
+    def res(fanIn: Int) =
       TopK.globalTopK(df, TopK.tokensAgg(col("tokens"), cfg, 4), fanIn)
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-    val flat = res(Some(1))
-    // Some(4) forces the tree (the auto cutover would pick flat for an
-    // input this small); None exercises the auto path (-> flat here)
-    assert(flat.nonEmpty && flat == res(Some(4)) && flat == res(None))
+    val flat = res(graft.plans.GlobalTopK.FanIn)
+    // fanIn 4: one level of 4 merge tasks; fanIn 2: levels of 8, 4 and 2
+    assert(flat.nonEmpty && flat == res(4) && flat == res(2))
     // counts are exact: compare against a plain explode + groupBy oracle
     val exact = df.select(explode(col("tokens")).as("t")).groupBy("t").count()
       .orderBy(col("count").desc, col("t").asc).limit(10)
@@ -241,10 +242,10 @@ class TopKAggregatorSpec extends AnyFunSuite {
     // width 4 x depth 1 collides almost every item, so only the exact
     // buffer can return these counts: every row-emitting item plan must
     // match the exact answer, ties ordered by item asc, for <= cutoff
-    // distinct items — the one-level plans (TopK.aggregate's flat plan,
+    // distinct items — the one-level plans (TopK.aggregate's driver fold,
     // aggregateBy, TopKStreams.tumbling/session over a batch input, SQL
     // topk_items and topk_sliding) and the two-level ones, which merge the
-    // same buffer (the tree, the salted plan, the per-tick window)
+    // same buffer (forced merge tasks, the salted plan, the per-tick window)
     val cfg = SketchConfig.withDefaults(5, width = 4, depth = 1)
     val n   = graft.plans.AdaptiveTopK.cutoff(TopKAggregates.candidates(cfg, 4))
     val df  = tiedItems(n, Seq("g0", "g1"))
@@ -255,8 +256,9 @@ class TopKAggregatorSpec extends AnyFunSuite {
     val want  = exactTop(local.map(r => (r._2, r._3)))
     val fp    = (i: String) => Hashing.fingerprint(i).toLong & 0xffffffffL
 
-    // no size statistics on a parallelize input: the default takes the tree
-    Seq(None, Some(1), Some(4)).foreach { fanIn =>
+    // 8 partitions: the default folds them all on the driver; fanIn 4 and 2
+    // force one and two levels of merge tasks first
+    Seq(graft.plans.GlobalTopK.FanIn, 4, 2).foreach { fanIn =>
       val global = TopK.globalTopK(df, TopK.itemsAgg(col("item"), col("weight"), cfg, 4), fanIn)
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
       withClue(s"fanIn $fanIn") { assert(global == want.map { case (i, c) => (i, c, fp(i)) }) }

@@ -211,6 +211,55 @@ class TopKStreamsSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("pre-1970 rows: each stream drops the rows its initial watermark of 0 makes late") {
+    // Spark's late-row filter runs from the first batch at watermark 0, and
+    // each stream applies it to its own event-time column: tumbling to the
+    // window (late once its end <= watermark), session to the row's own
+    // session window [ts, ts + gap), sliding to the raw timestamp
+    implicit val sqlCtx = spark.sqlContext
+    val cfg = SketchConfig.withDefaults(3, width = 256, depth = 3)
+    val tin = MemoryStream[(Timestamp, String, Long)]
+    val tq = TopKStreams.tumbling(tin.toDF.toDF("ts", "item", "weight"), "10 seconds", "0 seconds", cfg)
+      .writeStream.format("memory").queryName("tumb_pre1970").outputMode("append").start()
+    try {
+      // o in [-20 s, -10 s) and p in [-10 s, 0): both windows end by 0
+      tin.addData((ts(-13000), "o", 4L), (ts(-3500), "p", 2L), (ts(-1200), "p", 1L), (ts(1200), "q", 1L))
+      tq.processAllAvailable()
+      tin.addData((ts(25000), "r", 1L))
+      tq.processAllAvailable()
+      tin.addData((ts(40000), "s", 1L))
+      tq.processAllAvailable()
+    } finally tq.stop()
+    val tumbling = spark.table("tumb_pre1970")
+      .select(col("window.start").cast("long"), col("item"), col("count"))
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).sorted.toSeq
+    assert(tumbling == Seq((0L, "q", 1L), (20L, "r", 1L)))
+
+    val sin = MemoryStream[(String, Timestamp, String, Long)]
+    val sq = TopKStreams.session(sin.toDF.toDF("key", "ts", "item", "weight"), "10 seconds", "0 seconds", cfg)
+      .writeStream.format("memory").queryName("sess_pre1970").outputMode("append").start()
+    try {
+      // a's session [-30 s, -20 s) ends by 0; b's [-3 s, 7 s) does not, and
+      // its 1200 ms row extends it
+      sin.addData(("a", ts(-30000), "o", 4L), ("b", ts(-3000), "p", 2L), ("b", ts(1200), "q", 1L))
+      sq.processAllAvailable()
+      sin.addData(("a", ts(60000), "z", 1L))
+      sq.processAllAvailable()
+      sin.addData(("a", ts(120000), "w", 1L))
+      sq.processAllAvailable()
+    } finally sq.stop()
+    val session = spark.table("sess_pre1970")
+      .select(col("key"), col("session_start").cast("long"), col("item"), col("count"))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2), r.getLong(3))).sorted.toSeq
+    assert(session == Seq(("a", 60L, "z", 1L), ("b", -3L, "p", 2L), ("b", -3L, "q", 1L)))
+
+    // p's ticks -4 and -2 never emit; q's tick 1 and the two after it do
+    val sliding = slidingBatches("0 seconds", Seq(
+      Seq(("a", -3500L, "p", 2L), ("a", -1200L, "p", 1L), ("a", 1200L, "q", 1L)),
+      Seq(("a", 9000L, "hb", 0L)), Seq(("a", 9500L, "hb", 0L))))
+    assert(sliding.map(r => (r._3, r._4, r._5)) == Seq((1L, "q", 1L), (2L, "q", 1L), (3L, "q", 1L)))
+  }
+
   /** Runs `TopKStreams.sliding` (tick 1 s, window 3, top 3) over `batches`,
     * one micro-batch each with no-data batches off, and returns the
     * emitted (batch id, key, tick, item, count) rows sorted.
