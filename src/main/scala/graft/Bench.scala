@@ -90,37 +90,44 @@ object Bench {
     }.toMap
   }
 
-  /** The measured token job: scan -> array-native HK partial agg -> merge ->
-    * top-K (no explode stage; each row's token array is counted in place).
-    */
-  def tokenTopK(spark: SparkSession, dir: String, cfg: SketchConfig): Array[(String, Long)] = {
-    TopK.tokensArray(spark.read.parquet(dir), col("tokens"), cfg)
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-  }
-
-  /** The explode-pipeline variant (generic item path), kept as a secondary
-    * metric for the per-row aggregate surface.
-    */
-  def tokenTopKExplode(spark: SparkSession, dir: String, cfg: SketchConfig): Array[(String, Long)] = {
-    val updates = TokenTables.tokenUpdates(spark.read.parquet(dir))
-    TopK.aggregate(updates, col("item"), col("weight"), cfg)
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-  }
-
-  def tokenExact(spark: SparkSession, dir: String, k: Int): Array[(String, Long)] = {
-    val updates = TokenTables.tokenUpdates(spark.read.parquet(dir))
-    TopK.exact(updates, col("item"), col("weight"), k)
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-  }
-
   val cfgLight: SketchConfig = SketchConfig.withDefaults(10, width = 1024, depth = 3)
   val cfgHeavy: SketchConfig = SketchConfig.withDefaults(100, width = 8192, depth = 4)
 
-  def main(args: Array[String]): Unit = {
-    // the artifacts below are machine-parsed (JSON line / regexed tables):
-    // pin the locale so f"..%.3f" can never emit comma decimals
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+  final val LightJob   = "tokens_topk_k10_w1024_d3"
+  final val HeavyJob   = "tokens_topk_k100_w8192_d4"
+  final val ExplodeJob = "tokens_topk_explode_path"
+  final val ExactJob   = "tokens_exact_top100"
+
+  /** The token jobs by published name, each the DataFrame it collects over
+    * the token table in `dir`: the measured array-native top-K at both
+    * geometries (scan -> per-partition sketch -> driver fold, no explode
+    * stage), the explode-pipeline variant on the generic item path, and the
+    * exact oracle. `main`, tools/TimeQuery and tools/DumpQueryPlans run
+    * these.
+    */
+  val tokenJobs: Map[String, (SparkSession, String) => DataFrame] = Map(
+    LightJob   -> ((s, dir) => TopK.tokensArray(s.read.parquet(dir), col("tokens"), cfgLight)),
+    HeavyJob   -> ((s, dir) => TopK.tokensArray(s.read.parquet(dir), col("tokens"), cfgHeavy)),
+    ExplodeJob -> ((s, dir) => TopK.aggregate(TokenTables.tokenUpdates(s.read.parquet(dir)),
+      col("item"), col("weight"), cfgLight)),
+    ExactJob   -> ((s, dir) => TopK.exact(TokenTables.tokenUpdates(s.read.parquet(dir)),
+      col("item"), col("weight"), 100)))
+
+  /** The jobs tools/TimeQuery and tools/DumpQueryPlans accept by name: each
+    * SparkEntry query over the tables in the `sfDir` it is given, and each
+    * token job over the bench table (built on first use).
+    */
+  def namedJobs(spark: SparkSession): Map[String, String => DataFrame] = {
+    lazy val benchDir = ensureBenchTable(spark)._1
+    tokenJobs.map { case (name, job) => name -> ((_: String) => job(spark, benchDir)) } ++
+      SparkEntry.queries.map { case (name, query) => name -> ((sfDir: String) => query(spark, sfDir)) }
+  }
+
+  /** The bench session: `local[SPARK_GRAFT_CPUS]` (default 32) with the
+    * confs every measured run uses; `main`, tools/TimeQuery and
+    * tools/DumpQueryPlans build it.
+    */
+  def session(): SparkSession = {
     val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -137,7 +144,16 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 
+  def main(args: Array[String]): Unit = {
+    // the artifacts below are machine-parsed (JSON line / regexed tables):
+    // pin the locale so f"..%.3f" can never emit comma decimals
+    java.util.Locale.setDefault(java.util.Locale.ROOT)
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = session()
     // JVM/codegen/scan warmup so per-query timings measure OPERATORS, not
     // first-call costs (JIT of UDF/kernel code paths, codegen compilation,
     // parquet footers, broadcast init): run the full query surface once on
@@ -215,27 +231,27 @@ object Bench {
     val (hdir, hTokens) = try ensureHeadlineTable(spark) catch {
       case e: Throwable => errors += s"headline_table: ${e.getClass.getSimpleName}"; ("", 0L)
     }
+    def job(name: String, table: String): () => Unit =
+      () => { tokenJobs(name)(spark, table).collect(); () }
     if (dir.nonEmpty)
-      try { tokenTopK(spark, dir, cfgLight); () } // warmup (JIT + page cache)
+      try job(LightJob, dir)() // warmup (JIT + page cache)
       catch { case _: Throwable => }
     // same interleave discipline as the query surface: one pass of all the
     // jobs, three times, min per job. Each job gates on ITS OWN table, so a
     // broken light table doesn't silently skip the headline job (or vice
     // versa) — the surviving jobs still publish.
-    val tokenJobs: Seq[(String, () => Unit)] =
+    val tokenRuns: Seq[(String, () => Unit)] =
       (if (dir.nonEmpty) Seq(
-        "light"   -> (() => { tokenTopK(spark, dir, cfgLight); () }),
-        "heavy"   -> (() => { tokenTopK(spark, dir, cfgHeavy); () }),
-        "explode" -> (() => { tokenTopKExplode(spark, dir, cfgLight); () }),
-        "exact"   -> (() => { tokenExact(spark, dir, 100); () }))
+        "light"   -> job(LightJob, dir),
+        "heavy"   -> job(HeavyJob, dir),
+        "explode" -> job(ExplodeJob, dir),
+        "exact"   -> job(ExactJob, dir))
       else Nil) ++
-      (if (hdir.nonEmpty)
-        Seq("headline" -> (() => { tokenTopK(spark, hdir, cfgHeavy); () }))
-      else Nil)
+      (if (hdir.nonEmpty) Seq("headline" -> job(HeavyJob, hdir)) else Nil)
     val tokenBest = scala.collection.mutable.Map.empty[String, Double]
       .withDefaultValue(Double.MaxValue)
-    if (tokenJobs.nonEmpty)
-      for (_ <- 1 to 3; (n, f) <- tokenJobs) {
+    if (tokenRuns.nonEmpty)
+      for (_ <- 1 to 3; (n, f) <- tokenRuns) {
         val (ok, sec) = time {
           try { f(); true }
           catch { case e: Throwable => errors += s"tokens_$n: ${e.getClass.getSimpleName}"; false }
@@ -251,11 +267,11 @@ object Bench {
     val headlineSec = tokenSec("headline")
 
     val all = queryTimes ++ Seq(
-      "tokens_topk_k10_w1024_d3"  -> lightSec,
-      "tokens_topk_k100_w8192_d4" -> heavySec,
-      "tokens_topk_explode_path"  -> explodeSec,
-      "tokens_exact_top100"       -> exactSec,
-      "tokens_topk_headline_82m"  -> headlineSec
+      LightJob                   -> lightSec,
+      HeavyJob                   -> heavySec,
+      ExplodeJob                 -> explodeSec,
+      ExactJob                   -> exactSec,
+      "tokens_topk_headline_82m" -> headlineSec
     )
     val qs    = all.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
     val total = all.map(_._2).filter(_ >= 0).sum

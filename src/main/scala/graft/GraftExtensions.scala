@@ -7,8 +7,8 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 /** SparkSessionExtensions entry point — the idiomatic cluster deployment
   * path: `spark-submit --conf spark.sql.extensions=graft.GraftExtensions`
   * injects the engine's FULL SQL surface into every session (no driver-side
-  * registration call needed), and plans `TopK`'s batch global top-K
-  * (`graft.plans.GlobalTopKStrategy`). Local sessions can equally call
+  * registration call needed), and plans every batch global top-K — `TopK`'s
+  * and SQL's — as `graft.plans.GlobalTopKExec` (`GlobalTopKStrategy`). Local sessions can equally call
   * `graft.functions.SqlFunctions.register(spark)` — both paths consume
   * `SqlFunctions.builders`, so they cannot drift.
   */

@@ -68,9 +68,10 @@ object ScalingBench {
     (1 to reps).foreach { rep =>
       coreLevels.foreach { cores =>
         val s = session(cores)
-        if (rep == 1) Bench.tokenTopK(s, dir, Bench.cfgLight) // warmup (JIT/page cache)
-        val light = Bench.time(Bench.tokenTopK(s, dir, Bench.cfgLight))._2
-        val heavy = Bench.time(Bench.tokenTopK(s, dir, Bench.cfgHeavy))._2
+        def run(job: String) = Bench.tokenJobs(job)(s, dir).collect()
+        if (rep == 1) run(Bench.LightJob) // warmup (JIT/page cache)
+        val light = Bench.time(run(Bench.LightJob))._2
+        val heavy = Bench.time(run(Bench.HeavyJob))._2
         samples(cores) = (light, heavy) :: samples(cores)
         println(f"[scaling] rep$rep local[$cores%d] light=$light%.2f heavy=$heavy%.2f")
         s.stop(); fresh()

@@ -120,10 +120,22 @@ final class SlidingSketch(val cfg: SlidingConfig) extends HeavyKeeper(cfg) {
   def tick(): Unit = ticks(1)
 
   /** Advance time by n ticks (reference: sliding/sketch.go:110-129). */
-  def ticks(n: Int): Unit = {
-    if (n == 0) return
-    var cursor       = nextBucketToExpire
-    val bucketsToAge = math.max(1L, n.toLong * hist * m / cfg.windowSize)
+  def ticks(n: Int): Unit =
+    if (n != 0) age(math.max(1L, n.toLong * hist * m / cfg.windowSize))
+
+  /** Advance time by n ticks as n `tick()` calls do: n·max(1, hist·m/N)
+    * buckets, which `ticks(n)` rounds differently unless hist·m is a multiple
+    * of N. One pass and one recount; on an empty heap, where the per-tick
+    * recounts are no-ops, the state equals n `tick()` calls'.
+    */
+  def fastForward(n: Int): Unit =
+    if (n != 0) age(n.toLong * math.max(1L, hist.toLong * m / cfg.windowSize))
+
+  /** Ages `bucketsToAge` buckets round-robin from the cursor, then recounts
+    * the heap.
+    */
+  private def age(bucketsToAge: Long): Unit = {
+    var cursor = nextBucketToExpire
     if (bucketsToAge >= m.toLong * hist) {
       // Fast path for large watermark jumps: every bucket ages >= hist times,
       // which fully clears every ring (further ages are no-ops on empty

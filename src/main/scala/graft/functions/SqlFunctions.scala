@@ -14,6 +14,7 @@ import org.apache.spark.sql.types.{LongType, StringType}
   * builders, so the SQL surface cannot drift between the two paths.
   *
   * {{{
+  *   -- with no GROUP BY, one scan stage and a driver fold (GlobalTopKExec)
   *   SELECT topk_tokens(tokens, 10, 1024, 3) FROM seqs                 -- array<int>
   *   SELECT topk_items(item, weight, 10, 1024, 3) FROM updates         -- generic
   *   -- exact counts for groups of at most max(64, 16·k) distinct items;
@@ -104,17 +105,18 @@ object SqlFunctions {
     // itself validates strictly via checkInputDataTypes
     ItemsTopKAgg(Cast(args.head, StringType), Cast(args(1), LongType),
       candidates(cfg, Oversample), cfg.k)
-      .toAggregateExpression()
   }
 
-  /** name -> (arity doc, expression builder) — the single SQL surface. */
+  /** name -> (arity doc, expression builder) — the single SQL surface. The
+    * aggregates come back bare, so the analyzer wraps them, with SQL's
+    * `DISTINCT` and `FILTER (WHERE ...)` if given.
+    */
   val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "topk_tokens" -> { args =>
       require(args.length >= 2 && args.length <= 5,
         "usage: topk_tokens(tokens_array, k[, width, depth[, decay]])")
       val cfg = cfgFrom(args, 1)
       TokensTopKAgg(args.head, candidates(cfg, Oversample), cfg.k)
-        .toAggregateExpression()
     },
 
     "topk_items"          -> topkItems,
@@ -131,7 +133,6 @@ object SqlFunctions {
       graft.plans.SlidingTopKAgg(
         Cast(args.head, LongType), Cast(args(1), StringType), Cast(args(2), LongType),
         windowTicks, cfg.k, candidates(cfg, Oversample))
-        .toAggregateExpression()
     },
 
     "xxh32" -> { args =>
@@ -154,23 +155,22 @@ object SqlFunctions {
         "usage: topk_sketch(item, weight, k[, width, depth[, decay]])")
       graft.plans.SketchBytesAgg(Cast(args.head, StringType), Cast(args(1), LongType),
         cfgFrom(args, 2))
-        .toAggregateExpression()
     },
 
-    // array-native token partial emitting the blob (its serialized buffer) —
-    // the SQL handle for tree-merged token pipelines: GROUP BY
-    // pmod(spark_partition_id(), N) -> topk_tokens_sketch -> topk_merge -> topk_rows
+    // array-native token sketch as a blob (its serialized buffer), for the
+    // blob surface: store one per slice, then topk_merge/topk_count/topk_rows
+    // later. A whole-table top-K needs no blobs: topk_tokens with no GROUP BY
+    // already runs one scan stage and a driver fold (GlobalTopKExec)
     "topk_tokens_sketch" -> { args =>
       require(args.length >= 2 && args.length <= 5,
         "usage: topk_tokens_sketch(tokens_array, k[, width, depth[, decay]])")
       val cfg = cfgFrom(args, 1)
       graft.plans.BufferBytesAgg(TokensTopKAgg(args.head, cfg, cfg.k))
-        .toAggregateExpression()
     },
 
     "topk_merge" -> { args =>
       require(args.length == 1, "usage: topk_merge(sketch_blob)")
-      graft.plans.MergeSketchBlobsAgg(args.head).toAggregateExpression()
+      graft.plans.MergeSketchBlobsAgg(args.head)
     },
 
     "topk_rows" -> { args =>
@@ -194,10 +194,14 @@ object SqlFunctions {
   def info(name: String): ExpressionInfo =
     new ExpressionInfo(SqlFunctions.getClass.getName, name)
 
+  /** Registers the builders and the global top-K strategy
+    * (`graft.plans.GlobalTopKStrategy`) on `spark`.
+    */
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
     builders.foreach { case (name, builder) =>
       registry.createOrReplaceTempFunction(name, builder, "built-in")
     }
+    graft.plans.GlobalTopKStrategy.register(spark)
   }
 }

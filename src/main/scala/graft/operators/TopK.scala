@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.core.SketchConfig
-import graft.plans.{GlobalTopK, GlobalTopKStrategy, ItemsTopKAgg, TokensTopKAgg, TopKAggregates, TopKRows}
+import graft.plans.{GlobalTopKStrategy, ItemsTopKAgg, TokensTopKAgg, TopKAggregates, TopKRows}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.functions._
@@ -49,27 +49,21 @@ object TopK {
       :+ col("e.count") :+ col("e.fingerprint")): _*)
   }
 
-  /** Shared global-top-K plan. A batch input is one [[GlobalTopK]] node: a
-    * single map stage builds `agg`'s buffer per input partition and the
-    * driver folds the serialized buffers (past `fanIn` partitions, merge
-    * tasks fold `fanIn` each first; see [[graft.plans.GlobalTopKExec]]).
-    * No stage barrier, no shuffle and no sort for up to `fanIn` partitions,
-    * and the fold is bounded by `fanIn`, not by the partition count, which
-    * is read at run time. A streaming input keeps the Catalyst aggregate
-    * (`df.agg`), whose partial→final handoff ships the same buffer.
-    * Specs force merge levels with a small `fanIn`.
+  /** Shared global-top-K plan: Spark's ungrouped aggregate of `agg`, its
+    * array inlined into (item, count, fingerprint) rows in (count desc,
+    * item asc) order — one logical plan for batch and stream. On a batch
+    * input [[graft.plans.GlobalTopKStrategy]] plans it as one map stage
+    * that builds `agg`'s buffer per input partition and a driver fold of
+    * the serialized buffers, past 64 partitions merge tasks of 64 first (see
+    * [[graft.plans.GlobalTopKExec]]): no stage barrier, no shuffle and no
+    * sort for up to 64 partitions, and the fold is bounded by 64, not by the
+    * partition count, which is read at run time. A streaming input runs
+    * Catalyst's aggregate, whose partial→final handoff ships the same buffer.
     */
-  private[graft] def globalTopK(df: DataFrame, agg: TypedImperativeAggregate[_] with TopKRows,
-                                fanIn: Int = GlobalTopK.FanIn): DataFrame =
-    if (df.isStreaming)
-      df.agg(Bridge.column(agg.toAggregateExpression()).as("topk"))
-        .select(explode(col("topk")).as("e"))
-        .select(col("e.item"), col("e.count"), col("e.fingerprint"))
-        .orderBy(col("count").desc, col("item").asc)
-    else {
-      GlobalTopKStrategy.register(df.sparkSession)
-      Bridge.dataFrame(df.sparkSession, GlobalTopK.plan(df, agg, fanIn))
-    }
+  private[graft] def globalTopK(df: DataFrame, agg: TypedImperativeAggregate[_] with TopKRows): DataFrame = {
+    GlobalTopKStrategy.register(df.sparkSession)
+    df.agg(Bridge.column(agg.toAggregateExpression()).as("topk")).select(inline(col("topk")))
+  }
 
   /** Global top-K of `item` by total `weight`.
     * Output: (item string, count long, fingerprint long), ordered by

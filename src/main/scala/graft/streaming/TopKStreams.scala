@@ -281,8 +281,9 @@ object TopKStreams {
     * ticks here, a key could drain and drop its state a batch before the
     * watermark rule would, and a row in the next batch would then start a
     * fresh sketch where the watermark rule continues the old one. Long empty
-    * gaps fast-forward through `ticks(n)` once the heap has drained (those
-    * ticks would emit zero rows anyway).
+    * gaps fast-forward through `fastForward(n)` once the heap has drained
+    * (those ticks would emit zero rows anyway); it ages exactly what n
+    * `tick()` calls would, so rows do not depend on where batches are cut.
     */
   private def processSlidingGroup(cfg: SlidingConfig, tickMillis: Long, emitK: Int,
       keyDelayMs: Option[Long])(
@@ -353,7 +354,7 @@ object TopKStreams {
             val nextData =
               if (di < dataTicks.length) dataTicks(di) else completeThrough + 1
             val jump = math.min(nextData, completeThrough + 1) - t
-            st.sketch.ticks(jump.min(Int.MaxValue).toInt)
+            st.sketch.fastForward(jump.min(Int.MaxValue).toInt)
             st.clockTick += jump
           } else {
             // adds for tick t in stable order (deterministic across replays)

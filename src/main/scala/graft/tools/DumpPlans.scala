@@ -48,14 +48,16 @@ object DumpPlans {
         |partition in the scan's own stage and serializes it (a fixed-size
         |TKP2 sketch), and the driver folds the buffers with the aggregate's
         |deserialize/merge and emits its rows in (count desc, item asc)
-        |order: no exchange, no sort, no explode. Past `fanIn` partitions
-        |(64 by default) merge tasks fold `fanIn` buffers each before the
-        |driver does, so the driver never holds more than `fanIn` (the merge
-        |levels are the node's own shuffles and do not show in the SQL plan;
-        |the one exchange below is the `repartition(32)` of the input, and
-        |`fanIn` is forced to 8, so 4 merge tasks run).""".stripMargin,
-      TopK.globalTopK(toks.repartition(32), TopK.tokensAgg(col("tokens"),
-        SketchConfig.withDefaults(10, width = 1024, depth = 3), 4), fanIn = 8))
+        |order: no exchange, no sort, no explode. The plan is Spark's own
+        |ungrouped aggregate inlined into rows, which `GlobalTopKStrategy`
+        |plans as this one exec; SQL `SELECT topk_tokens(...)` with no
+        |`GROUP BY` plans the same exec. Past 64 partitions merge tasks fold
+        |64 buffers each before the driver does, so the driver never holds
+        |more than 64 (the merge levels are the exec's own shuffles and do
+        |not show in the SQL plan; the one exchange below is the
+        |`repartition(32)` of the input).""".stripMargin,
+      TopK.tokensArray(toks.repartition(32), col("tokens"),
+        SketchConfig.withDefaults(10, width = 1024, depth = 3)))
 
     section("Salted per-group top-K (two-level skew path)",
       """Level 1 groups by (group, salt = pmod(xxhash64(item), 16)) and ships

@@ -3,12 +3,10 @@ package graft.tools
 import java.io.{ByteArrayOutputStream, PrintStream}
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Writes `.explain("formatted")` output for named SparkEntry queries (plus
   * the bench token jobs) to `<outDir>/<name>_<suffix>.txt` — the
-  * before/after plan evidence for optimization rounds. Uses Bench's exact
-  * session confs; executes each query first so the FINAL adaptive plan
+  * before/after plan evidence for optimization rounds. Runs in Bench's
+  * session; executes each query first so the FINAL adaptive plan
   * (AQE join choices, ReusedExchange) is what gets dumped.
   *
   * Usage: runMain graft.tools.DumpQueryPlans <sfDir> <outDir> <suffix> <name...>
@@ -20,41 +18,12 @@ object DumpQueryPlans {
     val outDir = args(1)
     val suffix = args(2)
     val names  = args.drop(3).toSeq
-    val cpus   = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "2m")
-      .config("spark.sql.files.openCostInBytes", "262144")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark  = graft.Bench.session()
     Files.createDirectories(Paths.get(outDir))
-
-    import org.apache.spark.sql.DataFrame
-    lazy val benchDir = graft.Bench.ensureBenchTable(spark)._1
-    def tokenDf(name: String): Option[DataFrame] = name match {
-      case "tokens_exact_top100" => Some(graft.operators.TopK.exact(
-        graft.sources.TokenTables.tokenUpdates(spark.read.parquet(benchDir)),
-        org.apache.spark.sql.functions.col("item"),
-        org.apache.spark.sql.functions.col("weight"), 100))
-      case "tokens_topk_k10_w1024_d3" => Some(graft.operators.TopK.tokensArray(
-        spark.read.parquet(benchDir), org.apache.spark.sql.functions.col("tokens"),
-        graft.Bench.cfgLight))
-      case "tokens_topk_k100_w8192_d4" => Some(graft.operators.TopK.tokensArray(
-        spark.read.parquet(benchDir), org.apache.spark.sql.functions.col("tokens"),
-        graft.Bench.cfgHeavy))
-      case _ => None
-    }
+    val jobs = graft.Bench.namedJobs(spark)
 
     names.foreach { name =>
-      val df = tokenDf(name).getOrElse {
-        graft.SparkEntry.queries.getOrElse(name,
-          sys.error(s"unknown query '$name'"))(spark, sfDir)
-      }
+      val df = jobs.getOrElse(name, sys.error(s"unknown query '$name'"))(sfDir)
       df.collect() // final adaptive plan
       val bos = new ByteArrayOutputStream()
       Console.withOut(new PrintStream(bos)) { df.explain("formatted") }

@@ -101,7 +101,7 @@ class DocEntryPointsSpec extends AnyFunSuite {
     val defined = Files.list(Paths.get("src/main/scala/graft/plans")).iterator().asScala.toList
       .flatMap(p => """(?m)^(?:final\s+|case\s+)*(?:class|object)\s+(\w+)[^{]*?\bextends\s+(?:UnaryNode|LeafNode|BinaryNode|UnaryExecNode|LeafExecNode|BinaryExecNode|SparkStrategy)\b"""
         .r.findAllMatchIn(Files.readString(p)).map(_.group(1)))
-    assert(defined.size >= 3, s"found only $defined")
+    assert(defined.size >= 2, s"found only $defined")
     val unnamed = defined.filterNot(named)
     assert(unnamed.isEmpty, unnamed.mkString("not in README's graft.plans section: ", ", ", ""))
   }

@@ -186,4 +186,47 @@ class SlidingSketchSpec extends AnyFunSuite {
     for (item <- Seq("X", "Y", "Z"))
       assert(a.count(item) == seq.count(item), s"after tick: count($item)")
   }
+
+  /** Drained states — empty heap, mass left in buckets — of seeded runs at
+    * `cfg`: the states the streams fast-forward from.
+    */
+  private def drainedStates(cfg: SlidingConfig): Seq[Array[Byte]] = {
+    val states = for (seed <- 0 until 40) yield {
+      val rng = new scala.util.Random(seed)
+      val s   = new SlidingSketch(cfg)
+      (0 until 3).foreach { _ =>
+        (0 until 6).foreach(_ => s.add(s"i${rng.nextInt(12)}", 1L + rng.nextInt(5)))
+        s.tick()
+      }
+      Iterator.continually { s.tick(); s }.take(12)
+        .filter(x => x.heap.size == 0 && x.hasResidualMass).map(SketchCodec.encodeSliding).toList
+    }
+    states.flatten
+  }
+
+  test("fastForward(n) ages exactly what n tick() calls do") {
+    // 5x3, hist 3, window 4: a tick ages max(1, 45/4) = 11 buckets, n ticks
+    // 11n, while ticks(n) ages n·45/4, so a jump split at a batch boundary
+    // would change the state
+    val cfg    = SlidingConfig.withDefaults(1, 4, width = 5, depth = 3, bucketHistoryLength = 3)
+    val states = drainedStates(cfg)
+    assert(states.size >= 10, s"only ${states.size} drained states")
+    def after(state: Array[Byte])(f: SlidingSketch => Unit) = {
+      val s = SketchCodec.decodeSliding(state); f(s); SketchCodec.encodeSliding(s).toSeq
+    }
+    var ticksDiffer = false
+    for (state <- states; n <- 1 to 12) {
+      val stepped = after(state)(s => (0 until n).foreach(_ => s.tick()))
+      assert(after(state)(_.fastForward(n)) == stepped, s"n = $n")
+      ticksDiffer ||= after(state)(_.ticks(n)) != stepped
+    }
+    assert(ticksDiffer, "ticks(n) matched n tick() calls everywhere: the geometry tests nothing")
+
+    // hist = window, as the sliding stream runs: ticks(n) ages n·m buckets too
+    val full       = SlidingConfig.withDefaults(1, 4, width = 5, depth = 3)
+    val fullStates = drainedStates(full)
+    assert(fullStates.nonEmpty)
+    for (state <- fullStates; n <- 1 to 12)
+      assert(after(state)(_.fastForward(n)) == after(state)(_.ticks(n)), s"n = $n")
+  }
 }

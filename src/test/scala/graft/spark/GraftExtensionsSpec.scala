@@ -43,8 +43,8 @@ class GraftExtensionsSpec extends AnyFunSuite {
   }
 
   test("an extensions-built session plans the batch global top-K node") {
-    // the node is built without TopK.globalTopK, which would register the
-    // strategy on the session: only the injected strategy can plan it here
+    // plain SQL, with no TopK call or SqlFunctions.register to register the
+    // strategy on the session: only the injected strategy can plan the exec
     val shared = SparkTestSession.spark
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
@@ -56,10 +56,8 @@ class GraftExtensionsSpec extends AnyFunSuite {
         .getOrCreate()
       import withExt.implicits._
       assert(withExt.experimental.extraStrategies.isEmpty)
-      val cfg  = graft.core.SketchConfig.withDefaults(2, width = 256, depth = 3)
-      val seqs = Seq(Array(7, 7, 8), Array(8, 7, 9)).toDF("tokens")
-      val top = org.apache.spark.sql.graftbridge.Bridge.dataFrame(withExt, graft.plans.GlobalTopK.plan(
-        seqs, graft.operators.TopK.tokensAgg(org.apache.spark.sql.functions.col("tokens"), cfg, 4)))
+      Seq(Array(7, 7, 8), Array(8, 7, 9)).toDF("tokens").createOrReplaceTempView("ext_global")
+      val top = withExt.sql("SELECT inline(topk_tokens(tokens, 2, 256, 3)) FROM ext_global")
       assert(top.collect().map(r => (r.getString(0), r.getLong(1))).toSeq == Seq(("7", 3L), ("8", 2L)))
       assert(top.queryExecution.executedPlan.collectFirst { case e: graft.plans.GlobalTopKExec => e }.nonEmpty)
     } finally {

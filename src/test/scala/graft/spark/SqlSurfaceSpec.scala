@@ -184,57 +184,6 @@ class SqlSurfaceSpec extends AnyFunSuite {
     assert(tree == flat && tree.head == ("0", 200L))
   }
 
-  test("SqlMacros.topkTokensTreeSql generates the documented tree composition") {
-    val rows = (0 until 200).map(i => (i, (0 until 40).filter(t => i % (t + 1) == 0).toArray))
-    rows.toDF("i", "tokens").repartition(8).createOrReplaceTempView("macro_t")
-    val sql = graft.functions.SqlMacros.topkTokensTreeSql(
-      "macro_t", "tokens", k = 5, fanIn = 4, width = 1024, depth = 3)
-    val tree = spark.sql(sql)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    val flat = spark.sql(
-      """SELECT e.item, e.count FROM
-        |(SELECT topk_tokens(tokens, 5, 1024, 3) a FROM macro_t) t0
-        |LATERAL VIEW explode(a) t AS e
-        |ORDER BY e.count DESC, e.item""".stripMargin)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    assert(tree == flat && tree.head == ("0", 200L))
-    // defaulted geometry resolves to the engine defaults for the USER's k
-    // (k=5 -> width 256, depth 3) with the heap oversampled to k*4 — NOT
-    // topk_tokens_sketch(tokens, 20) bare, which would widen the sketch
-    val defaulted = graft.functions.SqlMacros.topkTokensTreeSql("macro_t", "tokens", 5)
-    assert(defaulted.contains("topk_tokens_sketch(tokens, 20, 256, 3)"))
-    assert(spark.sql(defaulted).count() == 5)
-    // half-set geometry is rejected before it can build malformed SQL
-    intercept[IllegalArgumentException](
-      graft.functions.SqlMacros.topkTokensTreeSql("macro_t", "tokens", 5, width = 1024))
-  }
-
-  test("SqlMacros tree partials oversample: globally-hot-but-locally-cold item survives") {
-    // 4 range partitions, one group each. Group g holds 5 LOCAL tokens
-    // (100+10g+j) with counts 50..68 — all hotter locally than the GLOBAL
-    // token 7 (30 per group, 120 globally = the true #1). An un-oversampled
-    // k=5 partial heap evicts token 7 in every slice; the k*4 buffer the
-    // macro emits keeps it (the exact failure mode SqlFunctions' blob note
-    // documents).
-    val rows = for (g <- 0 until 4; r <- 0 until 10) yield {
-      val locals = (0 until 5).flatMap(j => Seq.fill((50 + g * 5 + j + 9) / 10)(100 + 10 * g + j))
-      (g, (locals ++ Seq.fill(3)(7)).toArray)
-    }
-    val df = rows.toDF("g", "tokens").repartitionByRange(4, $"g")
-    // premise check: range partitioning put each g in its own partition
-    import org.apache.spark.sql.functions.{spark_partition_id, countDistinct}
-    assert(df.groupBy(spark_partition_id()).agg(countDistinct($"g")).collect()
-      .forall(_.getLong(1) == 1L))
-    df.createOrReplaceTempView("macro_hot")
-    def top(oversample: Int) = spark.sql(graft.functions.SqlMacros.topkTokensTreeSql(
-        "macro_hot", "tokens", k = 5, fanIn = 4, oversample = oversample))
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    val sampled = top(4)
-    assert(sampled.head == ("7", 120L), s"global top item lost: $sampled")
-    // the un-oversampled composition demonstrably drops it
-    assert(!top(1).exists(_._1 == "7"))
-  }
-
   test("blob decode memo: interleaved distinct blobs never return stale counts") {
     // topk_count/topk_query memoize the last decoded blob per expression
     // instance; rows alternating between two different blobs must each

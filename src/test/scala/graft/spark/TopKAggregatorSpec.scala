@@ -117,8 +117,8 @@ class TopKAggregatorSpec extends AnyFunSuite {
     val df  = docs.toDF("doc_id", "tokens").repartition(8)
     val cfg = SketchConfig.withDefaults(20, width = 1024, depth = 3)
     // fanIn 2 forces merge levels: 8 buffers -> 4 merge tasks -> 2 -> driver
-    val ours = TopK.globalTopK(df, TopK.tokensAgg(col("tokens"), cfg, 4), fanIn = 2)
-      .select("item", "count").collect().map(r => (r.getString(0), r.getLong(1))).toMap
+    val ours = GlobalTopKSpec.rowsAtFanIn(TopK.tokensArray(df, col("tokens"), cfg), 2)
+      .map(r => (r._1, r._2)).toMap
     val truth = docs.flatMap(_._2).groupBy(t => t.toString).view.mapValues(_.size.toLong).toMap
     val exactTop = truth.toSeq.sortBy { case (i, c) => (-c, i) }.take(20).map(_._1).toSet
     ours.foreach { case (item, est) =>
@@ -141,10 +141,8 @@ class TopKAggregatorSpec extends AnyFunSuite {
     }
     val df  = rows.toDF("doc_id", "tokens").repartition(16)
     val cfg = SketchConfig.withDefaults(10, width = 2048, depth = 3)
-    def res(fanIn: Int) =
-      TopK.globalTopK(df, TopK.tokensAgg(col("tokens"), cfg, 4), fanIn)
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-    val flat = res(graft.plans.GlobalTopK.FanIn)
+    def res(fanIn: Int) = GlobalTopKSpec.rowsAtFanIn(TopK.tokensArray(df, col("tokens"), cfg), fanIn)
+    val flat = res(64)
     // fanIn 4: one level of 4 merge tasks; fanIn 2: levels of 8, 4 and 2
     assert(flat.nonEmpty && flat == res(4) && flat == res(2))
     // counts are exact: compare against a plain explode + groupBy oracle
@@ -258,9 +256,8 @@ class TopKAggregatorSpec extends AnyFunSuite {
 
     // 8 partitions: the default folds them all on the driver; fanIn 4 and 2
     // force one and two levels of merge tasks first
-    Seq(graft.plans.GlobalTopK.FanIn, 4, 2).foreach { fanIn =>
-      val global = TopK.globalTopK(df, TopK.itemsAgg(col("item"), col("weight"), cfg, 4), fanIn)
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
+    Seq(64, 4, 2).foreach { fanIn =>
+      val global = GlobalTopKSpec.rowsAtFanIn(TopK.aggregate(df, col("item"), col("weight"), cfg), fanIn)
       withClue(s"fanIn $fanIn") { assert(global == want.map { case (i, c) => (i, c, fp(i)) }) }
     }
     val byDefault = TopK.aggregate(df, col("item"), col("weight"), cfg).collect()
